@@ -134,7 +134,7 @@ object SparkEntry {
     val cfg = entryConfig
     // the synthesized turns regenerate per scan (unlike a parquet table,
     // where repeated section scans ride the page cache) — under an active
-    // CacheScope (Verify/Bench wrap every query in one) the input is
+    // CacheScope (Verify wraps every query in one) the input is
     // materialized once for the suite's ~6 passes and released after;
     // bare calls stay persist-free
     val turns = graft.operators.CacheScope.ambient.cache(Transcripts.turns(spark, cfg))
@@ -169,7 +169,7 @@ object SparkEntry {
       Seq((-1L, -1L, recall, -1)).toDF("query_id", "id", "cosine", "rank"))
   }
 
-  /** Pool for [[forceConcurrently]] — daemon threads, unbounded (a query
+  /** Pool for [[overlapped]] — daemon threads, unbounded (a query
     * forces at most a couple of frames at once). */
   private lazy val overlapPool: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(
@@ -178,16 +178,21 @@ object SparkEntry {
       }))
 
   /** Materialize a CACHED frame on a background thread (guide §2.6 —
-    * overlap independent jobs) so the calling thread can meanwhile run an
-    * independent pipeline's driver-blocking actions (a mid-plan collect, an
-    * index write, a k-means build). Returns an await closure the caller
-    * MUST invoke before consuming `df`; it rethrows any failure there, so
-    * error behavior matches the sequential formulation. The frame must
-    * already be under a CacheScope: the forced blocks are what every later
-    * consumer reads. */
-  private def forceConcurrently(df: DataFrame): () => Unit = {
-    val f = scala.concurrent.Future { df.count(); () }(overlapPool)
-    () => scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
+    * overlap independent jobs) while `body` runs an independent pipeline's
+    * driver-blocking actions (a mid-plan collect, an index write, a k-means
+    * build) on the calling thread. The background count is always awaited
+    * before this returns or throws, so it never outlives the call and runs
+    * into the next query; when `body` succeeds, a background failure is
+    * rethrown, so error behavior matches the sequential formulation. The
+    * frame must already be under a CacheScope: the forced blocks are what
+    * every later consumer reads. */
+  private[graft] def overlapped[A](df: DataFrame)(body: => A): A = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    val f = Future { df.count(); () }(overlapPool)
+    val out = try body finally Await.ready(f, Duration.Inf)
+    Await.result(f, Duration.Inf)
+    out
   }
 
   /** Certification stats for two DISTINCT row sets sharing `keys`:
@@ -1985,11 +1990,11 @@ object SparkEntry {
         val shingled = scope.cache(Dedup.shingleDocs(docs, "doc_id", "text", 3))
         val lsh = scope.cache(Dedup.minHashLshPairsFromShingles(shingled,
           numHashes = 64, bands = 16, minJaccard = 0.5, small = small, scope = scope))
-        val awaitLsh = forceConcurrently(lsh)
-        val exact = Dedup.ngramJaccardPairsFromShingles(shingled,
-          minJaccard = 0.5, maxShingleDf = 0L, hotDfThreshold = 64L,
-          small = small, scope = scope)
-        awaitLsh()
+        val exact = overlapped(lsh) {
+          Dedup.ngramJaccardPairsFromShingles(shingled,
+            minJaccard = 0.5, maxShingleDf = 0L, hotDfThreshold = 64L,
+            small = small, scope = scope)
+        }
         val (unsound, hits, total) = setStats(lsh, exact, Seq("id_a", "id_b"))
         val recall = if (total == 0) 1.0 else hits.toDouble / total
         lsh.unionByName(Seq((-1L, unsound, recall)).toDF("id_a", "id_b", "jaccard"))
@@ -2083,12 +2088,12 @@ object SparkEntry {
         val brute = graft.operators.CacheScope.ambient.cache(
           Similarity.bruteForceTopK(emb, "vec_id", "embedding",
             queries, "vec_id", "embedding", k = 10))
-        val awaitBrute = forceConcurrently(brute)
-        val centroids = Similarity.sampleCentroids(emb, "vec_id", "embedding", 16)
-        val indexed = Similarity.ivfAssign(emb, "vec_id", "embedding", centroids)
-        val ann = Similarity.ivfTopK(indexed, "vec_id", "embedding",
-          queries, "vec_id", "embedding", centroids, k = 10, nprobe = 6)
-        awaitBrute()
+        val ann = overlapped(brute) {
+          val centroids = Similarity.sampleCentroids(emb, "vec_id", "embedding", 16)
+          val indexed = Similarity.ivfAssign(emb, "vec_id", "embedding", centroids)
+          Similarity.ivfTopK(indexed, "vec_id", "embedding",
+            queries, "vec_id", "embedding", centroids, k = 10, nprobe = 6)
+        }
         withRecallRow(s, ann, brute)
           .orderBy("query_id", "rank")
       },
@@ -2145,10 +2150,10 @@ object SparkEntry {
         // collects) runs here (guide §2.6)
         val brute = graft.operators.CacheScope.ambient.cache(
           stratumBrutePairs(emb, 0.4))
-        val awaitBrute = forceConcurrently(brute)
-        val found = Dedup.semanticNearDups(emb, "vec_id", "embedding",
-          cells = 16, threshold = 0.4)
-        awaitBrute()
+        val found = overlapped(brute) {
+          Dedup.semanticNearDups(emb, "vec_id", "embedding",
+            cells = 16, threshold = 0.4)
+        }
         withPairRecallRowPrebuilt(s, found, brute)
           .orderBy("id_a", "id_b")
       },
@@ -2384,9 +2389,9 @@ object SparkEntry {
         val freshIdx = graft.operators.CacheScope.ambient.cache(
           Dedup.buildSignatureIndex(fresh, "doc_id", "text",
             shingleSize = 3, numHashes = 64, bands = 16))
-        val awaitFresh = forceConcurrently(freshIdx)
-        Dedup.writeSignatureIndex(index, dir, buckets = 16)
-        awaitFresh()
+        overlapped(freshIdx) {
+          Dedup.writeSignatureIndex(index, dir, buckets = 16)
+        }
         val pairs = graft.operators.CacheScope.ambient.cache(
           Dedup.storedIndexPairs(freshIdx, dir, minJaccard = 0.99))
         // embedded CERTIFICATION row (id_new = −1, id_index = missing-self

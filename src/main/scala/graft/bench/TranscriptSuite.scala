@@ -1,13 +1,12 @@
 package graft.bench
 
 import graft._
-import graft.engine.Validator
 import graft.io.{TranscriptConfig, Transcripts}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The full north-rule constraint suite over a materialized transcripts
-  * table, used by both Bench (turns/sec + scaling efficiency) and tests.
+  * table, used by the perfbench bulk_suite workload and by tests.
   *
   * The suite is exactly what BASELINE.md defines as "full constraint-suite
   * pass": single-pass fused column stats (completeness / pattern / range /
@@ -146,33 +145,5 @@ object TranscriptSuite {
            |LOCATION '$dir/turns_bucketed'""".stripMargin)
     }
     spark.table("graft_bench_turns")
-  }
-
-  final case class SuiteRun(
-      turns: Long,
-      elapsedSec: Double,
-      turnsPerSec: Double,
-      results: Seq[ValidationResult],
-      partitionVerdicts: Long)
-
-  /** Timed: read the materialized table and run the complete suite. */
-  def run(spark: SparkSession, dir: String): SuiteRun = {
-    val turns = openTurns(spark, dir)
-    val baseline = spark.read.parquet(s"$dir/baseline")
-    val convIndex = spark.read.parquet(s"$dir/conv_index")
-    val config = ValidationConfig(tables = Seq(TableConfig("transcripts", rules)))
-    val validator = new Validator(spark, config, {
-      case "baseline"   => Some(baseline)
-      case "conv_index" => Some(convIndex)
-      case _            => None
-    })
-    val t0 = System.nanoTime()
-    // per-partition verdicts + global verdicts from the SAME fused pass
-    val (summary, partVerdicts) = validator.executeRulesPartitioned(
-      turns, rules, "transcripts", Some(pmod(xxhash64(col("conv_id")), lit(32))))
-    val verdicts = partVerdicts.size.toLong
-    val elapsed = (System.nanoTime() - t0) / 1e9
-    val total = summary.results.map(_.total_count).max
-    SuiteRun(total, elapsed, total / elapsed, summary.results, verdicts)
   }
 }

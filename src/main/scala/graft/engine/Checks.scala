@@ -827,13 +827,6 @@ object Checks {
     least(greatest(floor((valueCol - lit(lo)) / lit(width)), lit(0)), lit(bins - 1)).cast("int")
   }
 
-  /** Collect a (bucket → count) histogram to the driver. Histograms are
-    * O(distinct buckets) — tiny by construction — so stat math on collected
-    * maps costs ONE Spark job per histogram instead of a job per
-    * join/total/aggregate step (3-4 jobs saved per drift rule). */
-  def collectHistogram(hist: DataFrame): Map[String, Long] =
-    hist.collect().map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
-
   /** Driver-side two-sample chi-square over collected histograms; same
     * contingency formula as [[chiSquareContributions]]. */
   def chiSquareStat(a: Map[String, Long], b: Map[String, Long]): (Double, Int) = {

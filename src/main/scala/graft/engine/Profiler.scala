@@ -176,10 +176,10 @@ object Profiler {
   }
 
   // ONE definition of the typed path's accumulate/merge/finish semantics,
-  // shared by the finishing aggregator ([[ProfileAggregator]]), the
-  // state-returning aggregator ([[ProfileStateAggregator]]) and the
-  // driver-side incremental union ([[mergeStates]]) — so the one-shot and
-  // incremental answers cannot diverge.
+  // shared by the state-returning aggregator ([[ProfileStateAggregator]]),
+  // the driver-side incremental union ([[mergeStates]]) and
+  // [[finishState]] — so the one-shot and incremental answers cannot
+  // diverge.
   private def ltVal(a: String, b: String, numeric: Boolean): Boolean =
     if (numeric) a.toDouble < b.toDouble else a < b
 
@@ -312,38 +312,9 @@ object Profiler {
         top)
     }
 
-  /** Typed single-pass profiler. Input rows must be pre-projected to exactly
-    * `columns` (ordinal access — no per-row name lookups). */
-  class ProfileAggregator(
-      columns: Seq[String],
-      types: Seq[DataType],
-      lgK: Int = DefaultLgK
-  ) extends Aggregator[Row, ProfileBuf, Seq[ColumnProfile]] {
-
-    private val n = columns.length
-    private val numeric: Array[Boolean] = types.map(orderedNumeric).toArray
-    private val floating: Array[Boolean] = types.map(isFloating).toArray
-
-    override def zero: ProfileBuf = new ProfileBuf(n, lgK, numeric)
-    override def reduce(b: ProfileBuf, row: Row): ProfileBuf =
-      reduceInto(b, row, types, numeric, floating)
-    override def merge(a: ProfileBuf, c: ProfileBuf): ProfileBuf =
-      mergeInto(a, c, lgK, numeric)
-    override def finish(b: ProfileBuf): Seq[ColumnProfile] =
-      finishBuf(b, columns, types, numeric)
-
-    override def bufferEncoder: Encoder[ProfileBuf] = Encoders.javaSerialization[ProfileBuf]
-    override def outputEncoder: Encoder[Seq[ColumnProfile]] =
-      Encoders.kryo[Seq[ColumnProfile]]
-  }
-
-  def profileTyped(df: DataFrame, columns: Seq[String] = Nil): Seq[ColumnProfile] = {
-    val cols = if (columns.nonEmpty) columns else df.schema.fieldNames.toSeq
-    val types = cols.map(c => df.schema(c).dataType)
-    val projected = df.select(cols.map(col): _*)
-    val agg = new ProfileAggregator(cols, types)
-    projected.as(Encoders.row(projected.schema)).select(agg.toColumn).head()
-  }
+  /** Typed single-pass profiler: one [[profileState]] pass, finished. */
+  def profileTyped(df: DataFrame, columns: Seq[String] = Nil): Seq[ColumnProfile] =
+    finishState(profileState(df, columns))
 
   // ------------------------------------------------------ incremental profiling
 
@@ -364,8 +335,8 @@ object Profiler {
       typeNames.map(org.apache.spark.sql.types.DataType.fromDDL)
   }
 
-  /** [[profileTyped]] stopped before `finish`: one pass over `df`, returning
-    * the mergeable state instead of the finished profiles. */
+  /** The typed path's one pass over `df`, returning the mergeable state;
+    * [[finishState]] turns it into profiles ([[profileTyped]] does both). */
   def profileState(df: DataFrame, columns: Seq[String] = Nil): ProfileState = {
     val cols = if (columns.nonEmpty) columns else df.schema.fieldNames.toSeq
     val types = cols.map(c => df.schema(c).dataType)
@@ -607,8 +578,10 @@ object Profiler {
       .reduce(mergeStates))
   }
 
-  /** [[ProfileAggregator]] with the buffer itself as the result — the
-    * distributed half of incremental profiling. */
+  /** The typed path's aggregator, with the buffer itself as the result —
+    * the distributed half of one-shot and incremental profiling. Input rows
+    * must be pre-projected to exactly `columns` (ordinal access — no
+    * per-row name lookups). */
   class ProfileStateAggregator(
       columns: Seq[String],
       types: Seq[DataType],

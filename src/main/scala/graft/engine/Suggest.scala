@@ -117,7 +117,7 @@ object Suggest {
       if (columns.nonEmpty) columns
       else schema.fields.toSeq.filter(f => sweepable(f.dataType)).map(_.name)
 
-    // Parallelism, bisected per scan (SweepProbe) on a single-split 100k-row
+    // Parallelism, bisected per scan on a single-split 100k-row
     // input: scan 1 is a pure fold (HLL register-max, min/max, counters) —
     // ~0.2 µs/row once the castable check is the native digit walk — so a
     // sub-broadcast-threshold input (≤10 MB) runs FASTER as its natural
@@ -131,7 +131,6 @@ object Suggest {
     // (measured 0.64 s wall / 1.2 CPU at 8-way vs 1.1 s / 10.2 CPU at
     // 32-way, 1.8 s unspread). At scale both scans see many natural splits
     // and neither branch adds an exchange.
-    val dfS1 = df
 
     // ---- scan 1: the fused facts pass -------------------------------------
     val aggs: Seq[Column] = count(lit(1)).as("__total") +: cols.flatMap { name =>
@@ -164,7 +163,7 @@ object Suggest {
         approx_count_distinct(c, 0.05).as(s"__ad_$name"),
         castable.as(s"__cast_$name"))
     }
-    val row = dfS1.agg(aggs.head, aggs.tail: _*).head()
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
     val total = row.getLong(0)
     if (total == 0) return Nil
 

@@ -11,8 +11,8 @@ import org.apache.spark.storage.StorageLevel
   * correct, the shingling just recomputes per consumer — so a bare call can
   * never leak storage memory into a long-lived session (notebook, streaming
   * driver, multi-corpus loop). Callers that want the reuse — any pipeline
-  * that builds AND materializes the result in one place (a batch job, the
-  * bench, Verify) — either wrap build+materialization in
+  * that builds AND materializes the result in one place (a batch job,
+  * Verify) — either wrap build+materialization in
   * [[CacheScope.cached]] (ambient scope, released on exit) or pass an
   * explicit scope and own `unpersist()`.
   */

@@ -100,4 +100,31 @@ class TranscriptsSpec extends SparkSpec {
     // flagship suite — every rule executed for real)
     rows.count(_.getLong(3) < 0L) shouldBe 0
   }
+
+  test("SparkEntry.overlapped: a failing block surfaces only after the background count ended") {
+    // each of the 4 background tasks sleeps, then tallies itself: had the
+    // block's exception escaped without the wait, the tally would be short
+    // and the count job would still be running into the next query
+    OverlapTally.done.set(0)
+    val slow = spark.range(0, 4, 1, 4).toDF().filter(udf { (x: Long) =>
+      Thread.sleep(300); OverlapTally.done.incrementAndGet(); x >= 0 }.apply(col("id")))
+    val e = intercept[IllegalStateException] {
+      SparkEntry.overlapped(slow) { throw new IllegalStateException("block failed") }
+    }
+    e.getMessage shouldBe "block failed"
+    OverlapTally.done.get shouldBe 4
+  }
+
+  test("SparkEntry.overlapped: a background failure is rethrown after a clean block") {
+    val failing = spark.range(0, 1).toDF().filter(udf { (x: Long) =>
+      if (x >= 0) throw new RuntimeException("background failed"); true }.apply(col("id")))
+    val e = intercept[Exception] { SparkEntry.overlapped(failing) { 7 } }
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).toSeq should contain ("background failed")
+    SparkEntry.overlapped(spark.range(0, 3).toDF()) { 7 } shouldBe 7
+  }
+}
+
+private object OverlapTally {
+  val done = new java.util.concurrent.atomic.AtomicInteger
 }
