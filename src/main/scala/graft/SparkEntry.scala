@@ -187,9 +187,9 @@ object SparkEntry {
     * frame must already be under a CacheScope: the forced blocks are what
     * every later consumer reads. */
   private[graft] def overlapped[A](df: DataFrame)(body: => A): A = {
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Await
     import scala.concurrent.duration.Duration
-    val f = Future { df.count(); () }(overlapPool)
+    val f = SparkFuture(df.sparkSession.sparkContext) { df.count(); () }(overlapPool)
     val out = try body finally Await.ready(f, Duration.Inf)
     Await.result(f, Duration.Inf)
     out

@@ -33,29 +33,32 @@ object TranscriptSuite {
     // partition_covers_key: the suite partitions by pmod(xxhash64(conv_id))
     // — a function of a key column — so equal keys are co-partitioned and
     // the global verdict is the exact roll-up of per-partition dup counts
-    // (no table-wide distinct shuffle)
+    // (no table-wide distinct shuffle). Walk key (conv_id, turn_idx): it
+    // rides the same group-walk job as the three rules below, counting
+    // distinct turn_idx per conversation
     ValidationRule("key_uniqueness", RuleType.Uniqueness, Seq("conv_id", "turn_idx"),
       threshold = Some(0.99),
       parameters = Map("partition_covers_key" -> "true")),
-    // dense per-conversation turn_idx (the −1 injections leave gaps); on the
-    // bucketed layout both grouped phases are satisfied by the at-rest
-    // conv_id distribution — zero exchange (BucketingSpec)
+    // dense per-conversation turn_idx (the −1 injections leave gaps); a
+    // member of the (conv_id, turn_idx) walk — on the bucketed layout the
+    // walk's only exchange is its per-partition roll-up (BucketingSpec)
     ValidationRule("turn_sequence", RuleType.Sequence, Seq("conv_id"),
       parameters = Map("index" -> "turn_idx", "start" -> "0",
         "partition_covers_key" -> "true"),
       threshold = Some(0.9), severity = Severity.Warning),
-    // ts never regresses along turn_idx; the window partitions by conv_id,
-    // so the bucketed layout plans NO exchange — only the per-bucket sort
+    // ts never regresses along turn_idx; the walk's window partitions by
+    // conv_id, so the bucketed layout plans NO exchange — only the
+    // per-bucket sort by (turn_idx, ts) that uniqueness and sequence share
     ValidationRule("ts_monotonic", RuleType.Monotonic, Seq("conv_id"),
       parameters = Map("order_by" -> "turn_idx", "value" -> "ts",
         "partition_covers_key" -> "true"),
       threshold = Some(0.9), severity = Severity.Warning),
     // role DFA: turns alternate user ↔ {assistant,tool,system} and every
-    // conversation opens with a user turn. One more window pass with the
-    // SAME conv_id partitioning as ts_monotonic — no exchange on the
-    // bucketed layout; violations come from the injected numeric-string
-    // roles, NULL-role first turns, and duplicated keys (a dup row makes a
-    // same-role self-edge the grammar doesn't allow)
+    // conversation opens with a user turn. Same walk as ts_monotonic, with
+    // its own sort by (turn_idx, role) — the walk's second and last Sort,
+    // no exchange on the bucketed layout; violations come from the injected
+    // numeric-string roles, NULL-role first turns, and duplicated keys (a
+    // dup row makes a same-role self-edge the grammar doesn't allow)
     ValidationRule("role_grammar", RuleType.Transition, Seq("conv_id"),
       parameters = Map("order_by" -> "turn_idx", "value" -> "role",
         "pairs" -> ("user->assistant,user->tool,user->system," +

@@ -87,20 +87,12 @@ object Checks {
     * at-rest layout the whole pipeline plans ZERO exchange. NULL indices
     * are excluded (completeness owns nulls); NULL keys form their own
     * group, matching uniqueness's NULL-is-a-value semantics. */
-  def sequenceGroups(df: DataFrame, keys: Seq[String], idx: String,
-      part: Option[Column] = None): DataFrame = {
-    // an optional partition expression rides both phases (as "__part"):
-    // per-partition verdicts evaluate each (partition, group) subgroup's
-    // own density — exactly the global answer when the partition derives
-    // from the key
-    val partAliased = part.map(_.as("__part")).toSeq
-    val partCol = part.map(_ => col("__part")).toSeq
+  def sequenceGroups(df: DataFrame, keys: Seq[String], idx: String): DataFrame =
     df.filter(col(idx).isNotNull)
-      .groupBy(partAliased ++ (keys :+ idx).map(col): _*).agg(count(lit(1)).as("__n"))
-      .groupBy(partCol ++ keys.map(col): _*)
+      .groupBy((keys :+ idx).map(col): _*).agg(count(lit(1)).as("__n"))
+      .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_distinct"),
         min(col(idx)).as("min_idx"), max(col(idx)).as("max_idx"))
-  }
 
   /** Violation predicate over [[sequenceGroups]] rows. */
   def sequenceViolationCond(start: Option[Long]): Column = {
@@ -132,34 +124,36 @@ object Checks {
     * so verdicts are oracle-comparable. NULL order or value rows are
     * excluded (completeness owns nulls); NULL keys form their own group. */
   def monotonicGroups(df: DataFrame, keys: Seq[String], orderCol: String,
-      valueCol: String, strict: Boolean = false, descending: Boolean = false,
-      part: Option[Column] = None): DataFrame = {
-    // an optional partition expression joins BOTH the window partitioning
-    // and the grouping: per-partition verdicts evaluate each (partition,
-    // group) subgroup's own walk — consistent with sequence/uniqueness,
-    // and exactly the global answer when the partition derives from the key
-    val w = Window.partitionBy(part.toSeq ++ keys.map(col): _*)
+      valueCol: String, strict: Boolean = false,
+      descending: Boolean = false): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(walkOrder(orderCol, valueCol, descending): _*)
-    val prev = lag(col(valueCol), 1).over(w)
-    // asc: violation when value < prev (or == under strict); desc mirrored
-    val worse = if (descending) col(valueCol) > prev else col(valueCol) < prev
-    val tie = col(valueCol) === prev
-    val viol = if (strict) worse || tie else worse
+    val viol = regresses(col(valueCol), lag(col(valueCol), 1).over(w), strict, descending)
     df.filter(col(orderCol).isNotNull && col(valueCol).isNotNull)
-      .select(part.map(_.as("__part")).toSeq ++ keys.map(col) :+
-        when(viol, 1L).otherwise(0L).as("__viol"): _*)
-      .groupBy(part.map(_ => col("__part")).toSeq ++ keys.map(col): _*)
+      .select(keys.map(col) :+ when(viol, 1L).otherwise(0L).as("__viol"): _*)
+      .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_rows"), sum(col("__viol")).as("inversions"))
+  }
+
+  /** THE monotonic step test, shared by every face of the family: `v`
+    * regresses vs its walk predecessor `prev` — asc: `v < prev` (or `==`
+    * under strict); desc mirrored. NULL when `prev` is (the walk's first
+    * row), which every caller counts as no violation. */
+  private[engine] def regresses(v: Column, prev: Column, strict: Boolean,
+      descending: Boolean): Column = {
+    val worse = if (descending) v > prev else v < prev
+    if (strict) worse || v === prev else worse
   }
 
   /** THE monotonic walk order — the load-bearing determinism invariant
     * shared by the verdict ([[monotonicGroups]]), quarantine
-    * ([[monotonicViolations]]) and filter ([[keepMonotone]]) faces: the
-    * walk always ascends in orderCol; `descending` flips only the value
-    * tiebreak (tied rows walk toward the permitted direction) and, in the
-    * callers, the comparison. One definition so the three faces can never
-    * disagree about what "the walk" is. */
-  private def walkOrder(orderCol: String, valueCol: String,
+    * ([[monotonicViolations]]) and filter ([[keepMonotone]]) faces and the
+    * partitioned walk ([[GroupWalk]]): the walk always ascends in
+    * orderCol; `descending` flips only the value tiebreak (tied rows walk
+    * toward the permitted direction) and, in the callers, the comparison.
+    * One definition so the faces can never disagree about what "the walk"
+    * is. */
+  private[engine] def walkOrder(orderCol: String, valueCol: String,
       descending: Boolean): Seq[Column] =
     if (descending) Seq(col(orderCol), col(valueCol).desc)
     else Seq(col(orderCol), col(valueCol))
@@ -174,12 +168,9 @@ object Checks {
       .orderBy(walkOrder(orderCol, valueCol, descending): _*)
     // materialize the predecessor, THEN filter on the plain column (window
     // expressions are not allowed directly in a WHERE)
-    val prev = col("__prev_value")
-    val worse = if (descending) col(valueCol) > prev else col(valueCol) < prev
-    val viol = if (strict) worse || (col(valueCol) === prev) else worse
     df.filter(col(orderCol).isNotNull && col(valueCol).isNotNull)
       .withColumn("__prev_value", lag(col(valueCol), 1).over(w))
-      .filter(viol)
+      .filter(regresses(col(valueCol), col("__prev_value"), strict, descending))
   }
 
   /** Filter face of the monotonic rule: KEEP the monotone walk — a row
@@ -222,7 +213,7 @@ object Checks {
     * are engine-reproducible). An unset `first`/`last` constrains nothing;
     * the edge set is required — an empty grammar is a misconfiguration,
     * not "everything fails". */
-  private def transitionViolCond(v: Column, prev: Column, isLast: Column,
+  private[engine] def transitionViolCond(v: Column, prev: Column, isLast: Column,
       pairs: Seq[(String, String)], first: Option[Seq[String]],
       last: Option[Seq[String]]): Column = {
     val edgeOk = pairs.map { case (f, t) => prev === lit(f) && v === lit(t) }
@@ -234,7 +225,7 @@ object Checks {
 
   /** Per-key-group transition-grammar stats: for each key group, walk the
     * value column in (orderCol, value) order and count rows that break the
-    * grammar. Returns (part?, keys..., n_rows, bad_rows) — the verdict unit
+    * grammar. Returns (keys..., n_rows, bad_rows) — the verdict unit
     * is GROUPS (a conversation either satisfies its role grammar or not),
     * rolled up by the caller. One window pass (lag + lead share the frame)
     * partitioned by the keys — NO exchange on a key-bucketed layout, only
@@ -244,18 +235,16 @@ object Checks {
     * deterministic under order ties, the [[walkOrder]] convention. */
   def transitionGroups(df: DataFrame, keys: Seq[String], orderCol: String,
       valueCol: String, pairs: Seq[(String, String)],
-      first: Option[Seq[String]] = None, last: Option[Seq[String]] = None,
-      part: Option[Column] = None): DataFrame = {
+      first: Option[Seq[String]] = None,
+      last: Option[Seq[String]] = None): DataFrame = {
     val v = col(valueCol).cast(StringType)
-    val w = Window.partitionBy(part.toSeq ++ keys.map(col): _*)
-      .orderBy(col(orderCol), v)
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(orderCol), v)
     val prev = lag(v, 1).over(w)
     val isLast = lead(v, 1).over(w).isNull
     val viol = transitionViolCond(v, prev, isLast, pairs, first, last)
     df.filter(col(orderCol).isNotNull && col(valueCol).isNotNull)
-      .select(part.map(_.as("__part")).toSeq ++ keys.map(col) :+
-        when(viol, 1L).otherwise(0L).as("__viol"): _*)
-      .groupBy(part.map(_ => col("__part")).toSeq ++ keys.map(col): _*)
+      .select(keys.map(col) :+ when(viol, 1L).otherwise(0L).as("__viol"): _*)
+      .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_rows"), sum(col("__viol")).as("bad_rows"))
   }
 

@@ -1,0 +1,172 @@
+package graft.engine
+
+import graft.{RuleType, ValidationRule}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+
+/** One grouped walk per key: the partitioned uniqueness, sequence,
+  * monotonic and transition rules that share a walk key (group columns K,
+  * walk index I) are evaluated by ONE Spark job instead of one job each.
+  *
+  * The job scans once and derives every member's per-row flags from window
+  * functions partitioned by (partition, K) — one Sort per distinct walk
+  * order, none at all (a two-phase hash aggregate) when no member needs an
+  * order — then aggregates by (partition, K) into per-member group stats
+  * and rolls those up by partition. On a K-bucketed layout the only
+  * exchange is the roll-up's. Uniqueness rides the walk as the count of
+  * distinct I values per (partition, K) group, the sequence family's
+  * density as the same count over non-NULL I; a monotonic or transition
+  * member's predecessor is its last INCLUDED row before this one (NULL
+  * order or value rows stay in the walk but are skipped, as the
+  * single-rule pipelines filter them out). */
+private[graft] object GroupWalk {
+
+  /** Group columns and walk index. The index is None only for a
+    * single-column uniqueness rule, which groups by its key alone. */
+  final case class Key(groups: Seq[String], index: Option[String])
+
+  /** One rule of a walk, parameters parsed. */
+  sealed trait Member {
+    def rule: ValidationRule
+    def key: Key
+    /** Columns the member reads beyond the key. */
+    def values: Seq[String] = Nil
+    /** The walk order the member's predecessor needs, if any. */
+    def order: Option[Seq[Column]] = None
+  }
+  final case class Unique(rule: ValidationRule, key: Key) extends Member
+  final case class Dense(rule: ValidationRule, key: Key, start: Option[Long]) extends Member
+  final case class Monotone(rule: ValidationRule, key: Key, value: String,
+      strict: Boolean, descending: Boolean) extends Member {
+    override def values: Seq[String] = Seq(value)
+    override def order: Option[Seq[Column]] =
+      Some(Checks.walkOrder(key.index.get, value, descending))
+  }
+  final case class Grammar(rule: ValidationRule, key: Key, value: String,
+      pairs: Seq[(String, String)], first: Option[Seq[String]],
+      last: Option[Seq[String]]) extends Member {
+    override def values: Seq[String] = Seq(value)
+    override def order: Option[Seq[Column]] =
+      Some(Seq(col(key.index.get), col(value).cast(StringType)))
+  }
+
+  val families: Set[String] = Set(RuleType.Uniqueness, RuleType.Sequence,
+    RuleType.Monotonic, RuleType.Transition)
+
+  /** Parse `rule`'s parameters and resolve its columns against `df`.
+    * Left: the error the rule reports as its own result. */
+  def member(df: DataFrame, rule: ValidationRule): Either[Throwable, Member] =
+    try {
+      val keys = if (rule.columns.nonEmpty) rule.columns else Seq(rule.column)
+      val m = rule.ruleType match {
+        case RuleType.Uniqueness =>
+          Unique(rule, if (keys.size == 1) Key(keys, None) else Key(keys.init, Some(keys.last)))
+        case RuleType.Sequence =>
+          val idx = rule.param("index").getOrElse(throw new IllegalArgumentException(
+            s"sequence rule '${rule.name}' needs an index parameter"))
+          Dense(rule, Key(keys, Some(idx)), rule.param("start").map(_.toLong))
+        case RuleType.Monotonic =>
+          val (orderCol, valueCol, strict, desc) = RulePlanner.monotonicParams(rule)
+          Monotone(rule, Key(keys, Some(orderCol)), valueCol, strict, desc)
+        case _ =>
+          val (orderCol, valueCol, pairs, first, last) = RulePlanner.transitionParams(rule)
+          Grammar(rule, Key(keys, Some(orderCol)), valueCol, pairs, first, last)
+      }
+      rule.paramBool("partition_covers_key")
+      // analysis is eager: a missing column raises here, before planning
+      df.select((m.key.groups ++ m.key.index ++ m.values).map(col): _*)
+      Right(m)
+    } catch { case e: Throwable => Left(e) }
+
+  /** The walk's roll-up: one row per partition — `__part`, then `g<j>`
+    * and `f<j>` (longs) for member j. For a uniqueness member `f` is the
+    * partition's duplicate rows (rows − distinct keys; `g` is unused); for
+    * the group-unit families `g` counts the member's key groups and `f`
+    * the violating ones. All members share `key`. */
+  def frame(df: DataFrame, key: Key, members: Seq[Member], part: Column): DataFrame = {
+    val partKey = Checks.partGroupCol(df, part)
+    val ks = key.groups.map(col)
+    val keyOut = partKey.as("__part") +: ks.zipWithIndex.map { case (c, i) => c.as(s"__k$i") }
+    val byKey = col("__part") +: key.groups.indices.map(i => col(s"__k$i"))
+    val dense = members.exists(_.isInstanceOf[Dense])
+    val uniques = members.exists(_.isInstanceOf[Unique])
+    val orders = members.flatMap(_.order).distinctBy(_.map(_.toString))
+    def aggregate(d: DataFrame, aggs: Seq[Column]) = d.groupBy(byKey: _*).agg(aggs.head, aggs.tail: _*)
+
+    // per-(partition, K) stats: `__dups` for uniqueness, the sequence
+    // family's (n_distinct, min_idx, max_idx), `__n<j>`/`__b<j>` (included
+    // rows, violating rows) and the accept flag `__e<j>` of the rest
+    val stats = if (orders.isEmpty) {
+      // no member needs an order: two-phase hash aggregate, no Sort
+      val g1 = df.groupBy(keyOut ++ key.index.map(i => col(i).as("__i")): _*)
+        .agg(count(lit(1)).as("__c"))
+      if (!dense) g1.withColumn("__dups", col("__c") - 1L)
+      else aggregate(g1,
+        (if (uniques) Seq((sum("__c") - count(lit(1))).as("__dups")) else Nil) ++
+          Seq(count(col("__i")).as("n_distinct"),
+            min(col("__i")).as("min_idx"), max(col("__i")).as("max_idx")))
+    } else {
+      def walk(order: Seq[Column]) = Window.partitionBy(partKey +: ks: _*).orderBy(order: _*)
+      def preceding(order: Seq[Column]) = walk(order).rowsBetween(Window.unboundedPreceding, -1)
+      val i = col(key.index.get)
+      // an index change vs the previous row of the first walk (every walk
+      // orders by I first, so equal indices are adjacent); struct(I) tells
+      // the first row (NULL lag) from a repeated NULL index
+      val newIndex = if (uniques || dense) Seq(i.as("__i"),
+        (!(lag(struct(i), 1).over(walk(orders.head)) <=> struct(i))).as("__new"))
+      else Nil
+      val flags = members.zipWithIndex.flatMap {
+        case (m: Monotone, j) =>
+          val incl = i.isNotNull && col(m.value).isNotNull
+          val prev = last(when(incl, col(m.value)), ignoreNulls = true).over(preceding(m.order.get))
+          Seq(when(incl, 1L).otherwise(0L).as(s"__n$j"),
+            when(incl && Checks.regresses(col(m.value), prev, m.strict, m.descending), 1L)
+              .otherwise(0L).as(s"__b$j"))
+        case (m: Grammar, j) =>
+          val incl = i.isNotNull && col(m.value).isNotNull
+          val v = col(m.value).cast(StringType)
+          val prev = last(when(incl, v), ignoreNulls = true).over(preceding(m.order.get))
+          // the accept check belongs to the walk's last included row: the
+          // aggregate picks it as the included row of highest position
+          // (no look-ahead frame)
+          val accept = m.last.toSeq.flatMap(ls => Seq(
+            when(incl, row_number().over(walk(m.order.get))).as(s"__r$j"),
+            when(!v.isin(ls: _*), 1L).otherwise(0L).as(s"__e$j")))
+          Seq(when(incl, 1L).otherwise(0L).as(s"__n$j"),
+            when(incl && Checks.transitionViolCond(v, prev, lit(false), m.pairs, m.first, None), 1L)
+              .otherwise(0L).as(s"__b$j")) ++ accept
+        case _ => Nil
+      }
+      def counts(j: Int) = Seq(sum(s"__n$j").as(s"__n$j"), sum(s"__b$j").as(s"__b$j"))
+      val memberAggs = members.zipWithIndex.flatMap {
+        case (g: Grammar, j) if g.last.isDefined =>
+          counts(j) :+ max_by(col(s"__e$j"), col(s"__r$j")).as(s"__e$j")
+        case (_: Monotone | _: Grammar, j) => counts(j)
+        case _ => Nil
+      }
+      aggregate(df.select(keyOut ++ newIndex ++ flags: _*),
+        (if (uniques) Seq((count(lit(1)) - count(when(col("__new"), 1))).as("__dups")) else Nil) ++
+          (if (dense) Seq(count(when(col("__i").isNotNull && col("__new"), 1)).as("n_distinct"),
+            min(col("__i")).as("min_idx"), max(col("__i")).as("max_idx")) else Nil) ++
+          memberAggs)
+    }
+
+    val perGroup = members.zipWithIndex.flatMap { case (m, j) =>
+      def unit(exists: Column, violating: Column) = Seq(
+        when(exists, 1L).otherwise(0L).as(s"g$j"),
+        when(exists && violating, 1L).otherwise(0L).as(s"f$j"))
+      m match {
+        case _: Unique => Seq(lit(1L).as(s"g$j"), col("__dups").as(s"f$j"))
+        case d: Dense => unit(col("n_distinct") > 0L, Checks.sequenceViolationCond(d.start))
+        case _: Monotone => unit(col(s"__n$j") > 0L, col(s"__b$j") > 0L)
+        case g: Grammar => unit(col(s"__n$j") > 0L, col(s"__b$j") > 0L ||
+          g.last.fold(lit(false))(_ => coalesce(col(s"__e$j") === 1L, lit(false))))
+      }
+    }
+    val sums = members.indices.flatMap(j => Seq(sum(s"g$j").as(s"g$j"), sum(s"f$j").as(s"f$j")))
+    stats.select(col("__part") +: perGroup: _*)
+      .groupBy(col("__part")).agg(sums.head, sums.tail: _*)
+  }
+}

@@ -50,8 +50,9 @@ class Validator(
     * verdicts come out alongside the global ones:
     *  - fusible rules: the fused aggregate groups by the expression — global
     *    counts are the driver-side roll-up of the SAME single pass;
-    *  - uniqueness: one extra grouped job per key set; a partition's verdict
-    *    assesses uniqueness WITHIN that partition (cross-partition duplicates
+    *  - uniqueness, sequence, monotonic, transition: one grouped walk job
+    *    per walk key (see [[GroupWalk]]); a partition's verdict assesses the
+    *    rule WITHIN that partition (cross-partition duplicates or groups
     *    appear only in the global verdict, so per-partition failure counts
     *    sum to the global count exactly when the partition expression is
     *    derived from the key — the recommended layout);
@@ -83,8 +84,9 @@ class Validator(
     // 28M-turn bench shape the fused pass is ~40% of the suite wall and
     // every other section used to start only when it finished.
     val fusedStart = System.nanoTime()
-    val fusedF: Future[Either[Throwable, (Long, Map[String, Long], Seq[PartitionVerdict], Map[String, Long])]] = Future {
-      spark.sparkContext.setJobDescription(s"$tableName fused-stats")
+    val sc = spark.sparkContext
+    val fusedF: Future[Either[Throwable, (Long, Map[String, Long], Seq[PartitionVerdict], Map[String, Long])]] = SparkFuture(sc) {
+      sc.setJobDescription(s"$tableName fused-stats")
       try {
         partitionExpr match {
           case None =>
@@ -174,8 +176,8 @@ class Validator(
     // decision and cached total feed the scan shape), so they await inside
     // their futures — serialized after fused like before, but overlapping
     // every other section
-    val driftF: Future[(Map[String, ValidationResult], Seq[PartitionVerdict])] = Future {
-      spark.sparkContext.setJobDescription(s"$tableName drift-batch")
+    val driftF: Future[(Map[String, ValidationResult], Seq[PartitionVerdict])] = SparkFuture(sc) {
+      sc.setJobDescription(s"$tableName drift-batch")
       executeDriftBatch(df, rules.filter(_.ruleType == RuleType.drift), totalCount,
         partitionExpr.filter(_ => partTotalsEarly.nonEmpty), partTotalsEarly)
     }
@@ -184,101 +186,131 @@ class Validator(
     // overlaps the drift scan and the uniqueness/referential jobs. Rules
     // referencing missing columns fall through to executeSingle, which
     // surfaces the real analysis error per rule.
-    val outlierF: Future[(Map[String, ValidationResult], Seq[PartitionVerdict])] = Future {
-      spark.sparkContext.setJobDescription(s"$tableName outlier-batch")
+    val outlierF: Future[(Map[String, ValidationResult], Seq[PartitionVerdict])] = SparkFuture(sc) {
+      sc.setJobDescription(s"$tableName outlier-batch")
       executeOutlierBatch(df,
         rules.filter(r => r.ruleType == RuleType.Outlier &&
           r.columns.forall(c => schema.fieldNames.exists(_.equalsIgnoreCase(c)))),
         totalCount, partitionExpr.filter(_ => partTotalsEarly.nonEmpty), partTotalsEarly)
     }
 
-    // 2b. partitioned uniqueness + referential: per-partition verdicts, and
-    // for referential the global verdict rides the same grouped job. A
-    // uniqueness rule declaring `partition_covers_key=true` (the partition
-    // expression is a function of a subset of its key columns, so equal
-    // keys are always co-partitioned) also gets its GLOBAL verdict from the
-    // roll-up — the table-wide distinct shuffle disappears.
+    // 2b. partitioned referential + the grouped per-key families:
+    // per-partition verdicts, and for referential the global verdict rides
+    // the same grouped job. A grouped rule declaring
+    // `partition_covers_key=true` (the partition expression is a function
+    // of a subset of its key columns, so equal keys are always
+    // co-partitioned) also gets its GLOBAL verdict from the roll-up — the
+    // table-wide job disappears.
     def partTotals: Map[String, Long] = partTotalsEarly
-    // per-rule futures, FLAT (no nested awaits on the bounded pool): every
-    // referential and uniqueness rule's grouped job overlaps the drift scan
-    // and each other
-    // shared scaffolding for the per-rule grouped-job families (uniqueness,
-    // sequence, monotonic): run the grouped job; on success optionally
-    // promote the partition_covers_key roll-up to the global verdict; on
-    // failure surface the job's error as the rule's result (−1/−1 sentinel,
+    type Grouped = (String, Option[ValidationResult], Seq[PartitionVerdict])
+    // shared tail of the grouped families: on success optionally promote
+    // the partition_covers_key roll-up to the global verdict; on failure
+    // surface the job's error as the rule's result (−1/−1 sentinel,
     // severity→error) — with partition_covers_key the global verdict
     // DEPENDS on this job, and a silent Nil would fall back to the
     // table-wide job the caller opted out of
-    def groupedRuleFuture(r: ValidationRule,
-        run: () => Either[Throwable, Seq[PartitionVerdict]],
+    def groupedOutcome(r: ValidationRule, tu: Long,
+        run: Either[Throwable, Seq[PartitionVerdict]],
         globalTotal: Seq[PartitionVerdict] => Long,
-        extraMeta: Map[String, String])
-        : Future[(String, Option[ValidationResult], Seq[PartitionVerdict])] =
-      Future {
-        val tu = System.nanoTime()
-        spark.sparkContext.setJobDescription(s"$tableName rule:${r.name}")
-        // outer try: paramBool in the promotion check is fail-loud, and its
-        // raise must land in THIS rule's failure result, not kill the await
-        try {
-          run() match {
-            case Right(verdicts) =>
-              val globalFromRollup =
-                if (r.paramBool("partition_covers_key") && verdicts.nonEmpty) {
-                  val failed = verdicts.map(_.failed_count).sum
-                  Some(ValidationResult.verdict(r, failed, globalTotal(verdicts),
-                    (System.nanoTime() - tu) / 1e6,
-                    Map("keys" -> (if (r.columns.nonEmpty) r.columns else Seq(r.column)).mkString(","),
-                      "partitioned" -> "true") ++ extraMeta))
-                } else None
-              (r.name, globalFromRollup, verdicts)
-            case Left(e) =>
-              (r.name, Some(ValidationResult.failure(r, e,
-                (System.nanoTime() - tu) / 1e6)), Nil: Seq[PartitionVerdict])
-          }
-        } catch {
-          case e: Throwable =>
+        extraMeta: Map[String, String]): Grouped =
+      // outer try: paramBool in the promotion check is fail-loud, and its
+      // raise must land in THIS rule's failure result, not kill the await
+      try {
+        run match {
+          case Right(verdicts) =>
+            val globalFromRollup =
+              if (r.paramBool("partition_covers_key") && verdicts.nonEmpty) {
+                val failed = verdicts.map(_.failed_count).sum
+                Some(ValidationResult.verdict(r, failed, globalTotal(verdicts),
+                  (System.nanoTime() - tu) / 1e6,
+                  Map("keys" -> (if (r.columns.nonEmpty) r.columns else Seq(r.column)).mkString(","),
+                    "partitioned" -> "true") ++ extraMeta))
+              } else None
+            (r.name, globalFromRollup, verdicts)
+          case Left(e) =>
             (r.name, Some(ValidationResult.failure(r, e,
               (System.nanoTime() - tu) / 1e6)), Nil: Seq[PartitionVerdict])
         }
+      } catch {
+        case e: Throwable =>
+          (r.name, Some(ValidationResult.failure(r, e,
+            (System.nanoTime() - tu) / 1e6)), Nil: Seq[PartitionVerdict])
+      }
+    // one grouped job per rule (functional_dependency, diff and the
+    // binary families below), FLAT (no nested awaits on the bounded pool)
+    def groupedRuleFuture(r: ValidationRule,
+        run: () => Either[Throwable, Seq[PartitionVerdict]],
+        globalTotal: Seq[PartitionVerdict] => Long,
+        extraMeta: Map[String, String]): Future[Grouped] =
+      SparkFuture(sc) {
+        val tu = System.nanoTime()
+        sc.setJobDescription(s"$tableName rule:${r.name}")
+        groupedOutcome(r, tu, try run() catch { case e: Throwable => Left(e) },
+          globalTotal, extraMeta)
       }
     // OPTIMISTIC submission: grouped jobs no longer wait for the fused scan
     // (they consume partTotals by-name, after their own collect). When the
     // fused pass yields NO totals (empty table or fused failure) their
     // results are DISCARDED at assembly below, reproducing the old gate's
     // observable behavior on those paths.
-    val (refFs, uniqFs) = partitionExpr match {
+    val refFs = partitionExpr match {
       case Some(p) =>
-        val rf = rules.filter(_.ruleType == RuleType.Referential).map { r =>
-          r.name -> Future {
-            spark.sparkContext.setJobDescription(s"$tableName rule:${r.name}")
+        rules.filter(_.ruleType == RuleType.Referential).map { r =>
+          r.name -> SparkFuture(sc) {
+            sc.setJobDescription(s"$tableName rule:${r.name}")
             referentialPartitioned(df, r, p, partTotals, totalCount)
           }
         }
-        val uf = rules.filter(_.ruleType == RuleType.Uniqueness).map { r =>
-          groupedRuleFuture(r, () => uniquenessPartitionVerdicts(df, r, p, partTotals),
-            _ => partTotals.values.sum, Map.empty)
-        }
-        (rf, uf)
-      case _ => (Nil, Nil)
+      case _ => Nil
     }
-    // sequence + monotonic rules: same shape as uniqueness — one grouped
-    // job per rule yields per-partition verdicts, and partition_covers_key
-    // promotes the roll-up to the global verdict (verdict unit: groups, so
-    // the global total is the verdicts' own group-count sum, not the
-    // row-count partTotals)
-    val seqFs = partitionExpr match {
+    // uniqueness + sequence + monotonic + transition: ONE future per walk
+    // key returning all of its members' outcomes (see [[GroupWalk]]). A
+    // rule whose parameters or columns do not resolve reports its own
+    // error without joining a walk; a shared walk that fails at runtime
+    // re-runs its members one at a time, so a poisoned member gets its
+    // real error and the others keep their verdicts. Verdict unit: rows
+    // (uniqueness — the global total is the row-count partTotals) or
+    // groups (the others — the global total is the verdicts' own sum).
+    val walkFs: Seq[Future[Seq[Grouped]]] = partitionExpr match {
       case Some(p) =>
-        rules.filter(r => r.ruleType == RuleType.Sequence ||
-            r.ruleType == RuleType.Monotonic ||
-            r.ruleType == RuleType.Transition ||
-            r.ruleType == RuleType.FunctionalDependency ||
+        val prepared = rules.filter(r => GroupWalk.families(r.ruleType))
+          .map(r => r -> GroupWalk.member(df, r))
+        val members = prepared.collect { case (_, Right(m)) => m }
+        val walks = members.map(_.key).distinct.map(k => members.filter(_.key == k))
+        def outcome(m: GroupWalk.Member, tu: Long,
+            run: Either[Throwable, Seq[PartitionVerdict]]): Grouped = m match {
+          case _: GroupWalk.Unique => groupedOutcome(m.rule, tu, run, _ => partTotals.values.sum, Map.empty)
+          case _ => groupedOutcome(m.rule, tu, run, _.map(_.total_count).sum, Map("unit" -> "groups"))
+        }
+        prepared.collect { case (r, Left(e)) =>
+          Future.successful(Seq(groupedOutcome(r, System.nanoTime(), Left(e), _ => 0L, Map.empty)))
+        } ++ walks.map { ms =>
+          SparkFuture(sc) {
+            val tu = System.nanoTime()
+            sc.setJobDescription(s"$tableName group-walk")
+            def run(ms: Seq[GroupWalk.Member]): Seq[Grouped] =
+              (try Right(walkVerdicts(df, ms, p, partTotals))
+               catch { case e: Throwable => Left(e) }) match {
+                case Right(vs) => ms.zip(vs).map { case (m, v) => outcome(m, tu, Right(v)) }
+                case Left(_) if ms.size > 1 => ms.flatMap(m => run(Seq(m)))
+                case Left(e) => Seq(outcome(ms.head, tu, Left(e)))
+              }
+            run(ms)
+          }
+        }
+      case _ => Nil
+    }
+    // functional_dependency + diff: one grouped job per rule yields
+    // per-partition verdicts, and partition_covers_key promotes the
+    // roll-up to the global verdict (verdict unit: groups/keys, so the
+    // global total is the verdicts' own sum, not the row-count partTotals)
+    val fdDiffFs = partitionExpr match {
+      case Some(p) =>
+        rules.filter(r => r.ruleType == RuleType.FunctionalDependency ||
             r.ruleType == RuleType.Diff).map { r =>
           val run = () => r.ruleType match {
-            case RuleType.Sequence   => sequencePartitionVerdicts(df, r, p, partTotals)
-            case RuleType.Monotonic  => monotonicPartitionVerdicts(df, r, p, partTotals)
-            case RuleType.Transition => transitionPartitionVerdicts(df, r, p, partTotals)
-            case RuleType.Diff       => diffPartitionVerdicts(df, r, p, partTotals)
-            case _                   => fdPartitionVerdicts(df, r, p, partTotals)
+            case RuleType.Diff => diffPartitionVerdicts(df, r, p, partTotals)
+            case _             => fdPartitionVerdicts(df, r, p, partTotals)
           }
           val unit = if (r.ruleType == RuleType.Diff) "keys" else "groups"
           groupedRuleFuture(r, run, _.map(_.total_count).sum, Map("unit" -> unit))
@@ -372,16 +404,16 @@ class Validator(
              catch { case _: Throwable => true }))))
     val singleFs: Map[String, Future[ValidationResult]] = rules
       .filterNot(coveredPredicted)
-      .map(r => r.name -> Future {
-        spark.sparkContext.setJobDescription(s"$tableName rule:${r.name}")
+      .map(r => r.name -> SparkFuture(sc) {
+        sc.setJobDescription(s"$tableName rule:${r.name}")
         executeSingle(df, r, tableName, totalCount)
       }).toMap
 
     val (driftResults, driftVerdicts) = Await.result(driftF, Duration.Inf)
     val (outlierResults, outlierVerdicts) = Await.result(outlierF, Duration.Inf)
     val refPairsAll = refFs.map { case (n, f) => n -> Await.result(f, Duration.Inf) }
-    val uniqPairsAll = uniqFs.map(f => Await.result(f, Duration.Inf)) ++
-      seqFs.map(f => Await.result(f, Duration.Inf)) ++
+    val groupedAll = walkFs.flatMap(f => Await.result(f, Duration.Inf)) ++
+      fdDiffFs.map(f => Await.result(f, Duration.Inf)) ++
       cardFs.map(f => Await.result(f, Duration.Inf))
     // discard the optimistically-run grouped results when the fused pass
     // yielded no partition totals (empty table or fused failure) — the old
@@ -389,11 +421,11 @@ class Validator(
     // rules fall through to isolated single jobs in the assembly below
     val keepGrouped = partTotals.nonEmpty
     val refPairs = if (keepGrouped) refPairsAll else Nil
-    val uniqPairs = if (keepGrouped) uniqPairsAll else Nil
+    val grouped = if (keepGrouped) groupedAll else Nil
     val (specialResults, specialVerdicts): (Map[String, ValidationResult], Seq[PartitionVerdict]) =
       (refPairs.map { case (n, (res, _)) => n -> res }.toMap ++
-        uniqPairs.collect { case (n, Some(res), _) => n -> res }.toMap,
-        refPairs.flatMap(_._2._2) ++ uniqPairs.flatMap(_._3) ++ rowCountVerdicts)
+        grouped.collect { case (n, Some(res), _) => n -> res }.toMap,
+        refPairs.flatMap(_._2._2) ++ grouped.flatMap(_._3) ++ rowCountVerdicts)
 
     val results: Seq[ValidationResult] = rules.map { r =>
       fusedResults.getOrElse(r.name,
@@ -429,7 +461,7 @@ class Validator(
         case res if !res.passed && res.failed_count > 0 &&
             rules.exists(r => r.name == res.rule_name && r.param("examples").isDefined) =>
           val r = rules.find(_.name == res.rule_name).get
-          res.rule_name -> Future[ValidationResult => ValidationResult] {
+          res.rule_name -> SparkFuture[ValidationResult => ValidationResult](sc) {
             try {
               val n = r.param("examples").get.toInt
               if (n <= 0) identity[ValidationResult] _
@@ -506,49 +538,32 @@ class Validator(
     }
   }
 
-  /** Per-partition uniqueness verdicts: duplicates WITHIN each partition
-    * ((rows − distinct keys) per partition) from one grouped job. The global
-    * verdict stays a separate table-wide distinct (cross-partition
-    * duplicates are invisible inside partitions); when the partition
-    * expression derives from the key — the recommended layout — the two
-    * levels agree exactly. */
-  private def uniquenessPartitionVerdicts(
-      df: DataFrame, rule: ValidationRule, p: org.apache.spark.sql.Column,
-      partTotals: => Map[String, Long]): Either[Throwable, Seq[PartitionVerdict]] =
-    try {
-      val keys = if (rule.columns.nonEmpty) rule.columns else Seq(rule.column)
-      // the first groupBy runs over the WHOLE table — raw partition key
-      // (Checks.rawKeyStringable); the second is O(buckets)
-      val rows = df
-        .groupBy(Checks.partGroupCol(df, p).as("__part") +: keys.map(col): _*)
-        .agg(count(lit(1)).as("__cnt"))
-        .groupBy(col("__part"))
-        .agg((sum("__cnt") - count(lit(1))).as("__failed"))
-        .collect()
-      Right(verdictsFrom(rule,
-        rows.map(r => Checks.partKeyString(r.get(0)) -> r.getLong(1)).toMap, partTotals))
-    } catch { case e: Throwable => Left(e) }
-
-  /** Per-partition sequence verdicts from ONE grouped job: the two-phase
-    * dense-index aggregation additionally keyed by the partition expression,
-    * rolled up to (partition → groups, violating). The verdict unit is
-    * groups. Like uniqueness, per-partition counts agree with the global
-    * exactly when the partition expression derives from the key (groups
-    * never straddle partitions) — `partition_covers_key=true` then also
-    * takes the GLOBAL verdict from the roll-up, skipping the table-wide
-    * job. */
-  private def sequencePartitionVerdicts(
-      df: DataFrame, rule: ValidationRule, p: org.apache.spark.sql.Column,
-      partTotals: => Map[String, Long]): Either[Throwable, Seq[PartitionVerdict]] =
-    try {
-      val keys = if (rule.columns.nonEmpty) rule.columns else Seq(rule.column)
-      val idx = rule.param("index").getOrElse(throw new IllegalArgumentException(
-        s"sequence rule '${rule.name}' needs an index parameter"))
-      val start = rule.param("start").map(_.toLong)
-      Right(groupUnitVerdicts(rule,
-        Checks.sequenceGroups(df, keys, idx, part = Some(Checks.partGroupCol(df, p))),
-        Checks.sequenceViolationCond(start), partTotals))
-    } catch { case e: Throwable => Left(e) }
+  /** Per-partition verdicts of one walk's members, in member order, from
+    * ONE job ([[GroupWalk.frame]]). Uniqueness: duplicates WITHIN each
+    * partition ((rows − distinct keys) per partition) over the fused
+    * pass's row totals. The group-unit families: groups and violating
+    * groups per partition. The global uniqueness verdict stays a separate
+    * table-wide distinct unless `partition_covers_key` promotes the
+    * roll-up (cross-partition duplicates are invisible inside partitions);
+    * when the partition expression derives from the key — the recommended
+    * layout — the two levels agree exactly. */
+  private def walkVerdicts(df: DataFrame, members: Seq[GroupWalk.Member],
+      p: org.apache.spark.sql.Column,
+      partTotals: => Map[String, Long]): Seq[Seq[PartitionVerdict]] = {
+    val rows = GroupWalk.frame(df, members.head.key, members, p)
+      .limit(maxPartitionBuckets + 1).collect()
+    require(rows.length <= maxPartitionBuckets,
+      s"partition expression produced more than $maxPartitionBuckets buckets")
+    members.zipWithIndex.map { case (m, j) =>
+      val perPart = rows.toSeq.map(r =>
+        (Checks.partKeyString(r.get(0)), r.getLong(1 + 2 * j), r.getLong(2 + 2 * j)))
+      m match {
+        case _: GroupWalk.Unique =>
+          verdictsFrom(m.rule, perPart.map { case (part, _, dups) => part -> dups }.toMap, partTotals)
+        case _ => unitVerdicts(m.rule, perPart.filter(_._2 > 0L), partTotals)
+      }
+    }
+  }
 
   /** (determinant keys, dependent columns) of a functional_dependency rule.
     * The determinant comes from columns/column, the dependent from the
@@ -1023,57 +1038,17 @@ class Validator(
     } catch { case e: Throwable => Left(e) }
   }
 
-  private def monotonicParams(rule: ValidationRule): (String, String, Boolean, Boolean) =
-    RulePlanner.monotonicParams(rule)
-
-  /** Per-partition monotonic verdicts from ONE window + grouped job (the
-    * [[Checks.monotonicGroups]] pipeline additionally keyed by the partition
-    * expression). Verdict unit is groups; same partition_covers_key
-    * contract as sequence/uniqueness. */
-  private def monotonicPartitionVerdicts(
-      df: DataFrame, rule: ValidationRule, p: org.apache.spark.sql.Column,
-      partTotals: => Map[String, Long]): Either[Throwable, Seq[PartitionVerdict]] =
-    try {
-      val keys = if (rule.columns.nonEmpty) rule.columns else Seq(rule.column)
-      val (orderCol, valueCol, strict, desc) = monotonicParams(rule)
-      Right(groupUnitVerdicts(rule,
-        Checks.monotonicGroups(df, keys, orderCol, valueCol, strict, desc,
-          part = Some(Checks.partGroupCol(df, p))),
-        col("inversions") > 0L, partTotals))
-    } catch { case e: Throwable => Left(e) }
-
-  /** Per-partition transition verdicts — [[Checks.transitionGroups]]
-    * additionally keyed by the partition expression; verdict unit is
-    * groups (a conversation either satisfies its role grammar or not),
-    * same partition_covers_key contract as sequence/monotonic. */
-  private def transitionPartitionVerdicts(
-      df: DataFrame, rule: ValidationRule, p: org.apache.spark.sql.Column,
-      partTotals: => Map[String, Long]): Either[Throwable, Seq[PartitionVerdict]] =
-    try {
-      val keys = if (rule.columns.nonEmpty) rule.columns else Seq(rule.column)
-      val (orderCol, valueCol, pairs, first, last) = RulePlanner.transitionParams(rule)
-      Right(groupUnitVerdicts(rule,
-        Checks.transitionGroups(df, keys, orderCol, valueCol, pairs, first, last,
-          part = Some(Checks.partGroupCol(df, p))),
-        col("bad_rows") > 0L, partTotals))
-    } catch { case e: Throwable => Left(e) }
-
-  /** Shared tail of the group-unit families (sequence, monotonic): roll a
-    * per-(partition, group) stats frame up to one verdict per partition.
-    * Partitions present in `partTotals` but ABSENT from the stats (every
-    * row excluded by the family's NULL filter — e.g. a bucket whose
-    * turn_idx is entirely NULL) get an explicit empty verdict (0 groups,
-    * rate 1.0) so every (partition, rule) pair is assessed — a missing row
-    * would be indistinguishable from "never evaluated" downstream. */
+  /** Shared tail of the per-rule group-unit jobs (functional_dependency,
+    * diff): roll a per-(partition, group) stats frame up to one verdict per
+    * partition — see [[unitVerdicts]]. */
   private def groupUnitVerdicts(rule: ValidationRule, groupStats: DataFrame,
       violCond: org.apache.spark.sql.Column,
       partTotals: => Map[String, Long]): Seq[PartitionVerdict] = {
-    // limit-before-collect: for sequence/monotonic/fd the partition space
-    // was already bounded by the fused pass's guard over the same rows,
-    // but the DIFF family's key frame includes reference-side keys the
-    // fused pass never saw — a reference snapshot with an unbounded raw
-    // partition column must raise the standard bucket guard, not OOM the
-    // driver
+    // limit-before-collect: for fd the partition space was already
+    // bounded by the fused pass's guard over the same rows, but the DIFF
+    // family's key frame includes reference-side keys the fused pass never
+    // saw — a reference snapshot with an unbounded raw partition column
+    // must raise the standard bucket guard, not OOM the driver
     val rows = groupStats
       .groupBy(col("__part"))
       .agg(count(lit(1)).as("__groups"),
@@ -1082,18 +1057,28 @@ class Validator(
       .collect()
     require(rows.length <= maxPartitionBuckets,
       s"partition expression produced more than $maxPartitionBuckets buckets")
-    val present = rows.toSeq.map { r =>
-      val part = Checks.partKeyString(r.get(0))
-      val total = r.getLong(1)
-      val failed = if (r.isNullAt(2)) 0L else r.getLong(2)
+    unitVerdicts(rule, rows.toSeq.map(r => (Checks.partKeyString(r.get(0)), r.getLong(1),
+      if (r.isNullAt(2)) 0L else r.getLong(2))), partTotals)
+  }
+
+  /** Group-unit verdicts from (partition, groups, violating groups) of the
+    * partitions holding at least one group. Partitions present in
+    * `partTotals` but ABSENT here (every row excluded by the family's NULL
+    * filter — e.g. a bucket whose turn_idx is entirely NULL) get an
+    * explicit empty verdict (0 groups, rate 1.0) so every (partition, rule)
+    * pair is assessed — a missing row would be indistinguishable from
+    * "never evaluated" downstream. */
+  private def unitVerdicts(rule: ValidationRule, present: Seq[(String, Long, Long)],
+      partTotals: => Map[String, Long]): Seq[PartitionVerdict] = {
+    val assessed = present.map { case (part, total, failed) =>
       val rate = if (total == 0) 1.0 else (total - failed).toDouble / total
       PartitionVerdict(part, rule.name,
         ValidationResult.passedOf(rule.threshold, failed, rate), failed, total, rate)
     }
-    val seen = present.map(_.partition).toSet
+    val seen = assessed.map(_.partition).toSet
     // null-safe ordering: a NULL partition key is a legal partition (the
     // grouped passes keep it), so the fill must not NPE sorting it
-    present ++ partTotals.keys.filterNot(seen).toSeq.sortBy(Option(_)).map { part =>
+    assessed ++ partTotals.keys.filterNot(seen).toSeq.sortBy(Option(_)).map { part =>
       PartitionVerdict(part, rule.name,
         ValidationResult.passedOf(rule.threshold, 0L, 1.0), 0L, 0L, 1.0)
     }
@@ -1523,7 +1508,7 @@ class Validator(
           // sequence): rate = fraction of conversations whose value walk
           // never regresses
           val keys = if (rule.columns.nonEmpty) rule.columns else Seq(rule.column)
-          val (orderCol, valueCol, strict, desc) = monotonicParams(rule)
+          val (orderCol, valueCol, strict, desc) = RulePlanner.monotonicParams(rule)
           val row = Checks.monotonicGroups(df, keys, orderCol, valueCol, strict, desc)
             .agg(count(lit(1)),
               sum(when(col("inversions") > 0L, 1L).otherwise(0L))).head()
@@ -1766,7 +1751,7 @@ class Validator(
     case RuleType.Monotonic =>
       // transition-level violation rows: each row whose value regresses vs
       // its predecessor in the ordered walk, predecessor alongside
-      val (orderCol, valueCol, strict, desc) = monotonicParams(rule)
+      val (orderCol, valueCol, strict, desc) = RulePlanner.monotonicParams(rule)
       Checks.monotonicViolations(df,
         if (rule.columns.nonEmpty) rule.columns else Seq(rule.column),
         orderCol, valueCol, strict, desc)
@@ -1897,7 +1882,7 @@ class Validator(
         // one blocking task instead.
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
-        val absoluteF = Future {
+        val absoluteF = SparkFuture(spark.sparkContext) {
           if (absolute.isEmpty) (Nil: Seq[ValidationResult], Nil: Seq[PartitionVerdict])
           else {
             val (s, v) = executeRulesPartitioned(df, absolute, tableName, partExpr)
@@ -2003,7 +1988,7 @@ class Validator(
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.global
     def runSet(rs: Seq[ValidationRule], df: => DataFrame, tag: String,
-        cache: Boolean = false): Future[Seq[ValidationResult]] = Future {
+        cache: Boolean = false): Future[Seq[ValidationResult]] = SparkFuture(spark.sparkContext) {
       // frame construction (the semi-join's column resolution) sits outside
       // executeRules' per-rule isolation — a misconfigured rule must still
       // fail as ITS OWN error result, not abort the table, so fall back to

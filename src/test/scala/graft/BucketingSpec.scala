@@ -61,6 +61,41 @@ class BucketingSpec extends SparkSpec {
     }
   }
 
+  test("the suite's four walk rules plan one scan, at most two sorts, no exchange below the roll-up") {
+    import graft.bench.TranscriptSuite
+    import graft.engine.GroupWalk
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val dir = java.nio.file.Files.createTempDirectory("bucketed_walk").toString
+    try {
+      TranscriptSuite.materialize(spark, dir, numConvs = 300L, shufflePartitions = 4)
+      spark.sql("DROP TABLE IF EXISTS graft_bench_turns")
+      val turns = TranscriptSuite.openTurns(spark, dir)
+      val names = Set("key_uniqueness", "turn_sequence", "ts_monotonic", "role_grammar")
+      val members = TranscriptSuite.rules.filter(r => names(r.name))
+        .map(r => GroupWalk.member(turns, r).toOption.get)
+      members should have size 4
+      members.map(_.key).distinct should have size 1
+      val walk = GroupWalk.frame(turns, members.head.key, members,
+        pmod(xxhash64(col("conv_id")), lit(32)))
+      walk.collect()
+      val plan = walk.queryExecution.executedPlan
+      val helper = new AdaptiveSparkPlanHelper {}
+      helper.collect(plan) { case s: FileSourceScanExec => s } should have size 1
+      helper.collect(plan) { case s: SortExec => s }.size should be <= 2
+      // the only hash exchange is the roll-up's, on the partition key
+      helper.collect(plan) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] =>
+          e.outputPartitioning.asInstanceOf[HashPartitioning].expressions
+            .flatMap(_.references.map(_.name))
+      } shouldBe Seq(Seq("__part"))
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS graft_bench_turns")
+    }
+  }
+
   test("pre-bucketed tables join without an exchange on either side") {
     val sf = "/root/testdata/sf0.001"
     val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

@@ -1419,4 +1419,88 @@ class ValidatorSpec extends SparkSpec {
       Some(col("amt")))
     sBad.results.head.failed_count shouldBe -1
   }
+
+  /** Runs `body`, then a marker job, and returns the (description, job
+    * group) of every job the listener saw start meanwhile — the marker's
+    * start arriving proves every earlier job start was delivered. */
+  private def jobsDuring(body: => Unit): Seq[(String, String)] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        seen.add((props.map(_.getProperty("spark.job.description")).orNull,
+          props.map(_.getProperty("spark.jobGroup.id")).orNull))
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      val marker = s"listener-marker-${System.nanoTime()}"
+      sc.setJobDescription(marker)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_._1 == marker) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq
+  }
+
+  private val walkRuleNames =
+    Seq("key_uniqueness", "turn_sequence", "ts_monotonic", "role_grammar")
+
+  test("a partitioned pass runs the four walk rules as one group-walk, no per-rule jobs") {
+    val turns = Transcripts.turns(spark, TranscriptConfig(numConvs = 200L))
+    val rules = graft.bench.TranscriptSuite.rules.filter(r => walkRuleNames.contains(r.name))
+    rules.map(_.name) shouldBe walkRuleNames
+    var summary: ValidationSummary = null
+    val jobs = jobsDuring {
+      summary = new Validator(spark, ValidationConfig())
+        .executeRulesPartitioned(turns, rules, "walkjobs",
+          Some(pmod(xxhash64(col("conv_id")), lit(8))))._1
+    }.map(_._1).filter(d => d != null && d.startsWith("walkjobs "))
+    summary.results.map(_.failed_count).foreach(_ should be >= 0L)
+    jobs should contain("walkjobs group-walk")
+    walkRuleNames.foreach(n => jobs should not contain s"walkjobs rule:$n")
+  }
+
+  test("pooled validation jobs carry the submitting thread's job group") {
+    // thread A warms the validator's pools (their threads inherit A's
+    // local properties); thread B's jobs must still carry B's own group
+    val cfg = TranscriptConfig(numConvs = 200L)
+    val turns = Transcripts.turns(spark, cfg)
+    val index = Transcripts.convIndex(spark, cfg)
+    val rules = graft.bench.TranscriptSuite.rules.filterNot(_.ruleType == RuleType.drift) ++ Seq(
+      ValidationRule("conv_unique", RuleType.Uniqueness, Seq("conv_id", "role")),
+      ValidationRule("text_unique", RuleType.Uniqueness, Seq("conv_id", "text")))
+    val v = new Validator(spark, ValidationConfig(),
+      n => if (n == "conv_index") Some(index) else None)
+    def onThread(group: String, table: String): Unit = {
+      var failure: Option[Throwable] = None
+      val t = new Thread(() => {
+        try {
+          spark.sparkContext.setJobGroup(group, s"validation $group")
+          v.executeRulesPartitioned(turns, rules, table,
+            Some(pmod(xxhash64(col("conv_id")), lit(8))))
+          ()
+        } catch { case e: Throwable => failure = Some(e) }
+      })
+      t.start()
+      t.join()
+      failure.foreach(e => throw e)
+    }
+    val jobs = jobsDuring {
+      onThread("g1", "tA")
+      onThread("g2", "tB")
+    }
+    def groupsOf(table: String) =
+      jobs.filter(j => j._1 != null && j._1.startsWith(s"$table ")).map(_._2)
+    groupsOf("tA") should not be empty
+    groupsOf("tB") should not be empty
+    groupsOf("tA").distinct shouldBe Seq("g1")
+    groupsOf("tB").distinct shouldBe Seq("g2")
+  }
 }
