@@ -1,23 +1,23 @@
 #!/usr/bin/env python3
 """Alternating parent/change pairs of one perfbench workload.
 
-    python3 scripts/perf_pairs.py --workload bulk_suite [--seeds 11-20]
-        [--parent REV | --parent-dir DIR] [--seconds S] [--out FILE]
+    python3 scripts/perf_pairs.py --workload bulk_suite --parent REV
+        [--seeds 11-20] [--out FILE]
 
 For each seed, runs `perfbench/run.py --trace 0` once in a checkout of the
-parent commit and once in the working tree, alternating which side runs
-first from seed to seed. The parent checkout is a `git worktree add` of REV
-(default HEAD, i.e. the commit the working tree's changes sit on), removed
-again at the end; `--parent-dir` uses an existing checkout instead.
+parent revision and once in the working tree, alternating which side runs
+first from seed to seed. The parent checkout is a `git worktree add` of REV,
+removed again at the end. REV has no default: once the change is committed,
+HEAD is the change itself, so name the parent explicitly (for a committed
+change, `HEAD~1`). Every run uses BENCHMARK.json's `run_seconds`.
 
 For every end-to-end metric BENCHMARK.json names (read, never written) it
 prints each side's median and quartiles, the change/parent ratio of the
 medians, and how many pairs the change won (ties count for neither side).
 A metric is marked `unresolved` when the parent's IQR/median exceeds the
 metric's bound, and `claimable` when the change won at least 9 of 10 pairs
-and its median beats the parent's by more than the parent's IQR. The run
-length defaults to BENCHMARK.json's `run_seconds`. Exits non-zero if any
-run failed.
+and its median beats the parent's by more than the parent's IQR. Exits
+non-zero if any run failed.
 """
 import argparse
 import json
@@ -62,28 +62,22 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", default="11-20", help="inclusive range, e.g. 11-20 (≥10 seeds)")
-    ap.add_argument("--parent", default="HEAD", help="parent revision for the worktree")
-    ap.add_argument("--parent-dir", help="existing checkout of the parent to use instead")
-    ap.add_argument("--seconds", type=float)
+    ap.add_argument("--parent", required=True, help="parent revision, e.g. HEAD~1")
     ap.add_argument("--out", help="append every run's result as a JSON line here")
     args = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         spec = json.load(fh)
     metrics = spec["end_to_end"]
-    seconds = args.seconds or spec["run_seconds"]
+    seconds = spec["run_seconds"]
     seeds = seeds_of(args.seeds)
     if len(seeds) < 10:
         print(f"note: {len(seeds)} seeds; a claim needs at least 10 pairs", file=sys.stderr)
 
-    worktree = None
-    parent = args.parent_dir
-    if parent is None:
-        worktree = tempfile.mkdtemp(prefix="perf-parent-")
-        os.rmdir(worktree)
-        subprocess.run(["git", "worktree", "add", "--detach", worktree, args.parent],
-                       cwd=ROOT, check=True, stdout=subprocess.DEVNULL)
-        parent = worktree
+    parent = tempfile.mkdtemp(prefix="perf-parent-")
+    os.rmdir(parent)
+    subprocess.run(["git", "worktree", "add", "--detach", parent, args.parent],
+                   cwd=ROOT, check=True, stdout=subprocess.DEVNULL)
 
     runs = {"parent": [], "change": []}
     failed = 0
@@ -109,9 +103,8 @@ def main():
             else:
                 failed += 1
     finally:
-        if worktree:
-            subprocess.run(["git", "worktree", "remove", "--force", worktree], cwd=ROOT,
-                           stdout=subprocess.DEVNULL)
+        subprocess.run(["git", "worktree", "remove", "--force", parent], cwd=ROOT,
+                       stdout=subprocess.DEVNULL)
 
     n = len(runs["parent"])
     print(f"\n{args.workload}: {n} complete pairs, {failed} with a failed run, "

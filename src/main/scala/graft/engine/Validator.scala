@@ -266,11 +266,14 @@ class Validator(
     // uniqueness + sequence + monotonic + transition: ONE future per walk
     // key returning all of its members' outcomes (see [[GroupWalk]]). A
     // rule whose parameters or columns do not resolve reports its own
-    // error without joining a walk; a shared walk that fails at runtime
-    // re-runs its members one at a time, so a poisoned member gets its
-    // real error and the others keep their verdicts. Verdict unit: rows
-    // (uniqueness — the global total is the row-count partTotals) or
-    // groups (the others — the global total is the verdicts' own sum).
+    // error without joining a walk; a shared walk job that fails at
+    // runtime re-runs its members one at a time, so a poisoned member gets
+    // its real error and the others keep their verdicts — unless the
+    // failure is one no member can cause (a cancelled job or job group, an
+    // interrupt, a stopped context), which every member reports as is.
+    // Verdict unit: rows (uniqueness — the global total is the row-count
+    // partTotals) or groups (the others — the global total is the
+    // verdicts' own sum).
     val walkFs: Seq[Future[Seq[Grouped]]] = partitionExpr match {
       case Some(p) =>
         val prepared = rules.filter(r => GroupWalk.families(r.ruleType))
@@ -289,11 +292,15 @@ class Validator(
             val tu = System.nanoTime()
             sc.setJobDescription(s"$tableName group-walk")
             def run(ms: Seq[GroupWalk.Member]): Seq[Grouped] =
-              (try Right(walkVerdicts(df, ms, p, partTotals))
+              (try Right(walkRows(df, ms, p))
                catch { case e: Throwable => Left(e) }) match {
-                case Right(vs) => ms.zip(vs).map { case (m, v) => outcome(m, tu, Right(v)) }
-                case Left(_) if ms.size > 1 => ms.flatMap(m => run(Seq(m)))
-                case Left(e) => Seq(outcome(ms.head, tu, Left(e)))
+                case Right(rows) => ms.zipWithIndex.map { case (m, j) =>
+                  outcome(m, tu, try Right(walkMemberVerdicts(m, j, rows, partTotals))
+                    catch { case e: Throwable => Left(e) })
+                }
+                case Left(e) if ms.size > 1 && !Validator.cancelled(sc, e) =>
+                  ms.flatMap(m => run(Seq(m)))
+                case Left(e) => ms.map(m => outcome(m, tu, Left(e)))
               }
             run(ms)
           }
@@ -538,30 +545,36 @@ class Validator(
     }
   }
 
-  /** Per-partition verdicts of one walk's members, in member order, from
-    * ONE job ([[GroupWalk.frame]]). Uniqueness: duplicates WITHIN each
-    * partition ((rows − distinct keys) per partition) over the fused
-    * pass's row totals. The group-unit families: groups and violating
-    * groups per partition. The global uniqueness verdict stays a separate
-    * table-wide distinct unless `partition_covers_key` promotes the
-    * roll-up (cross-partition duplicates are invisible inside partitions);
-    * when the partition expression derives from the key — the recommended
-    * layout — the two levels agree exactly. */
-  private def walkVerdicts(df: DataFrame, members: Seq[GroupWalk.Member],
-      p: org.apache.spark.sql.Column,
-      partTotals: => Map[String, Long]): Seq[Seq[PartitionVerdict]] = {
-    val rows = GroupWalk.frame(df, members.head.key, members, p)
+  /** The roll-up rows of one walk's members from ONE job
+    * ([[GroupWalk.frame]]): per partition, each member's (groups, failed)
+    * pair. limit(max+1) so a raw high-cardinality partition expression
+    * trips the guard in [[walkMemberVerdicts]] instead of flooding the
+    * driver. */
+  private def walkRows(df: DataFrame, members: Seq[GroupWalk.Member],
+      p: org.apache.spark.sql.Column): Array[org.apache.spark.sql.Row] =
+    GroupWalk.frame(df, members.head.key, members, p)
       .limit(maxPartitionBuckets + 1).collect()
+
+  /** Per-partition verdicts of the `j`-th member of a walk from its
+    * [[walkRows]]. Uniqueness: duplicates WITHIN each partition ((rows −
+    * distinct keys) per partition) over the fused pass's row totals. The
+    * group-unit families: groups and violating groups per partition. The
+    * global uniqueness verdict stays a separate table-wide distinct unless
+    * `partition_covers_key` promotes the roll-up (cross-partition
+    * duplicates are invisible inside partitions); when the partition
+    * expression derives from the key — the recommended layout — the two
+    * levels agree exactly. */
+  private def walkMemberVerdicts(m: GroupWalk.Member, j: Int,
+      rows: Array[org.apache.spark.sql.Row],
+      partTotals: => Map[String, Long]): Seq[PartitionVerdict] = {
     require(rows.length <= maxPartitionBuckets,
       s"partition expression produced more than $maxPartitionBuckets buckets")
-    members.zipWithIndex.map { case (m, j) =>
-      val perPart = rows.toSeq.map(r =>
-        (Checks.partKeyString(r.get(0)), r.getLong(1 + 2 * j), r.getLong(2 + 2 * j)))
-      m match {
-        case _: GroupWalk.Unique =>
-          verdictsFrom(m.rule, perPart.map { case (part, _, dups) => part -> dups }.toMap, partTotals)
-        case _ => unitVerdicts(m.rule, perPart.filter(_._2 > 0L), partTotals)
-      }
+    val perPart = rows.toSeq.map(r =>
+      (Checks.partKeyString(r.get(0)), r.getLong(1 + 2 * j), r.getLong(2 + 2 * j)))
+    m match {
+      case _: GroupWalk.Unique =>
+        verdictsFrom(m.rule, perPart.map { case (part, _, dups) => part -> dups }.toMap, partTotals)
+      case _ => unitVerdicts(m.rule, perPart.filter(_._2 > 0L), partTotals)
     }
   }
 
@@ -2444,6 +2457,18 @@ object Validator {
     * must fall back instead of aborting. */
   private[engine] def ruleKeys(r: graft.ValidationRule): Seq[String] =
     if (r.columns.nonEmpty) r.columns else Seq(r.column)
+
+  /** A job failure no single rule can cause: the caller cancelled the job
+    * or its job group, interrupted the thread, or stopped the context.
+    * Re-running a shared job's rules one at a time would start a fresh scan
+    * per rule for a caller who has already given up on all of them. */
+  private[engine] def cancelled(sc: org.apache.spark.SparkContext, e: Throwable): Boolean =
+    sc.isStopped || Thread.currentThread.isInterrupted ||
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).exists {
+        case _: InterruptedException => true
+        case t: org.apache.spark.SparkThrowable => t.getCondition == "SPARK_JOB_CANCELLED"
+        case _ => false
+      }
 
   /** Wilson 95% score interval of the SUCCESS rate given (failed, total) —
     * the sampled tier's "how tight is this estimate" annotation. Preferred

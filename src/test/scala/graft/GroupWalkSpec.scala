@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.{Checks, Validator}
+import graft.engine.{Checks, GroupWalk, Validator}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -224,4 +224,70 @@ class GroupWalkSpec extends SparkSpec {
       }
     }
   }
+
+  /** Distinct SQL executions among the walk jobs (`<table> group-walk`):
+    * one per walk key when no walk is re-run. */
+  private def walkExecutions(table: String, jobs: Seq[(String, String, String)]): Int =
+    jobs.filter(_._1 == s"$table group-walk").map(_._3).distinct.size
+
+  test("a cancelled walk reports the cancellation instead of re-running its members") {
+    // an RDD-backed frame, so the optimizer cannot fold the gated filter
+    // into a local relation at planning time: every scan runs in a job
+    val df = spark.createDataFrame(turns.rdd, turns.schema).filter(udf { (s: String) =>
+      WalkGate.open.await(60, java.util.concurrent.TimeUnit.SECONDS); s != null
+    }.apply(col("sub")))
+    val rules = suite(covers = true)
+    val walkKeys = rules.flatMap(r => GroupWalk.member(df, r).toOption).map(_.key).distinct.size
+    walkKeys should be > 1
+    val sc = spark.sparkContext
+    val walksStarted = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val allStarted = scala.concurrent.Promise[Unit]()
+    WalkGate.open = new java.util.concurrent.CountDownLatch(1)
+    val jobs = jobsDuring(
+      onStart = j => if (j._1 == "tcancel group-walk") {
+        walksStarted.add(j._3)
+        if (walksStarted.size >= walkKeys) allStarted.trySuccess(())
+      },
+      body = {
+        val pass = new Thread(() => {
+          sc.setJobGroup("walk-cancel", "cancelled pass")
+          try new Validator(spark, ValidationConfig())
+            .executeRulesPartitioned(df, rules, "tcancel", Some(part))
+          catch { case _: Throwable => () }
+          ()
+        })
+        pass.start()
+        // every scan waits at the gate until each walk's job has started
+        // and the pass's group is cancelled
+        try {
+          scala.concurrent.Await.result(allStarted.future,
+            scala.concurrent.duration.Duration(60, "s"))
+          sc.cancelJobGroup("walk-cancel")
+        } finally WalkGate.open.countDown()
+        pass.join()
+      })
+    walkExecutions("tcancel", jobs) shouldBe walkKeys
+  }
+
+  test("a walk over too many partition buckets reports the guard instead of re-running") {
+    val v = new Validator(spark, ValidationConfig())
+    val df = spark.range(0, v.maxPartitionBuckets + 1L)
+      .select(col("id"), (col("id") % 3).cast("int").as("turn_idx"))
+    val rules = Seq(
+      ValidationRule("ids_unique", RuleType.Uniqueness, Seq("id", "turn_idx")),
+      ValidationRule("ids_seq", RuleType.Sequence, Seq("id"),
+        parameters = Map("index" -> "turn_idx")))
+    var summary: ValidationSummary = null
+    val jobs = jobsDuring {
+      summary = v.executeRulesPartitioned(df, rules, "tguard", Some(col("id")))._1
+    }
+    walkExecutions("tguard", jobs) shouldBe 1
+    summary.results.map(_.rule_name).toSet shouldBe rules.map(_.name).toSet
+  }
+}
+
+/** Holds every scan of the cancellation test's table until the test has
+  * cancelled the pass's job group. */
+object WalkGate {
+  @volatile var open = new java.util.concurrent.CountDownLatch(0)
 }

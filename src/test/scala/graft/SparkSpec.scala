@@ -22,4 +22,37 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Runs `body`, then a marker job, and returns the (description, job
+    * group, SQL execution id) of every job the listener saw start
+    * meanwhile — the marker's start arriving proves every earlier job start
+    * was delivered. `onStart` sees each start as it is delivered. */
+  protected def jobsDuring(body: => Unit,
+      onStart: ((String, String, String)) => Unit = _ => ()): Seq[(String, String, String)] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        def prop(k: String) = props.map(_.getProperty(k)).orNull
+        val job = (prop("spark.job.description"), prop("spark.jobGroup.id"),
+          prop("spark.sql.execution.id"))
+        seen.add(job)
+        onStart(job)
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      val marker = s"listener-marker-${System.nanoTime()}"
+      sc.setJobDescription(marker)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_._1 == marker) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq
+  }
 }

@@ -1420,35 +1420,6 @@ class ValidatorSpec extends SparkSpec {
     sBad.results.head.failed_count shouldBe -1
   }
 
-  /** Runs `body`, then a marker job, and returns the (description, job
-    * group) of every job the listener saw start meanwhile — the marker's
-    * start arriving proves every earlier job start was delivered. */
-  private def jobsDuring(body: => Unit): Seq[(String, String)] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val props = Option(js.properties)
-        seen.add((props.map(_.getProperty("spark.job.description")).orNull,
-          props.map(_.getProperty("spark.jobGroup.id")).orNull))
-        ()
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      val marker = s"listener-marker-${System.nanoTime()}"
-      sc.setJobDescription(marker)
-      try spark.range(1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen.asScala.exists(_._1 == marker) &&
-          System.nanoTime() < deadline) Thread.sleep(50)
-    } finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq
-  }
-
   private val walkRuleNames =
     Seq("key_uniqueness", "turn_sequence", "ts_monotonic", "role_grammar")
 
