@@ -1,13 +1,15 @@
 #!/usr/bin/env python3
-"""Alternating parent/change pairs of one perfbench workload.
+"""Alternating parent/change pairs of one or more perfbench workloads.
 
-    python3 scripts/perf_pairs.py --workload bulk_suite --parent REV
-        [--seeds 11-20] [--out FILE]
+    python3 scripts/perf_pairs.py --workload bulk_suite [--workload ...]
+        --parent REV [--seeds 11-20] [--out FILE]
 
-For each seed, runs `perfbench/run.py --trace 0` once in a checkout of the
-parent revision and once in the working tree, alternating which side runs
-first from seed to seed. The parent checkout is a `git worktree add` of REV,
-removed again at the end. REV has no default: once the change is committed,
+For each workload and seed, runs `perfbench/run.py --trace 0` once in a
+checkout of the parent revision and once in the working tree, alternating
+which side runs first from seed to seed. `--workload` may be given more than
+once: the workloads run one after another against the same parent checkout,
+and one table is printed per workload. The parent checkout is a
+`git worktree add` of REV, removed again at the end. REV has no default: once the change is committed,
 HEAD is the change itself, so name the parent explicitly (for a committed
 change, `HEAD~1`). Every run uses BENCHMARK.json's `run_seconds`.
 
@@ -60,7 +62,8 @@ def run(checkout, workload, seed, seconds):
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--workload", required=True)
+    ap.add_argument("--workload", required=True, action="append",
+                    help="perfbench workload; repeat for several")
     ap.add_argument("--seeds", default="11-20", help="inclusive range, e.g. 11-20 (≥10 seeds)")
     ap.add_argument("--parent", required=True, help="parent revision, e.g. HEAD~1")
     ap.add_argument("--out", help="append every run's result as a JSON line here")
@@ -79,35 +82,50 @@ def main():
     subprocess.run(["git", "worktree", "add", "--detach", parent, args.parent],
                    cwd=ROOT, check=True, stdout=subprocess.DEVNULL)
 
-    runs = {"parent": [], "change": []}
-    failed = 0
+    results = []
     try:
-        for k, seed in enumerate(seeds):
-            order = [("parent", parent), ("change", ROOT)]
-            if k % 2:
-                order.reverse()
-            pair = {}
-            for side, checkout in order:
-                r = run(checkout, args.workload, seed, seconds)
-                print(f"seed {seed} {side}: " + (
-                    " ".join(f"{m['name']}={r[m['name']]:.4g}" for m in metrics)
-                    if r else "FAILED"), flush=True)
-                if args.out:
-                    with open(args.out, "a") as fh:
-                        fh.write(json.dumps({"workload": args.workload, "seed": seed,
-                                             "side": side, "metrics": r}) + "\n")
-                pair[side] = r
-            if pair["parent"] and pair["change"]:
-                for side in runs:
-                    runs[side].append(pair[side])
-            else:
-                failed += 1
+        for workload in args.workload:
+            results.append((workload,) + pairs(workload, seeds, parent, seconds, metrics,
+                                               args.out))
     finally:
         subprocess.run(["git", "worktree", "remove", "--force", parent], cwd=ROOT,
                        stdout=subprocess.DEVNULL)
+    for workload, runs, failed in results:
+        report(workload, runs, failed, seconds, metrics)
+    sys.exit(1 if any(failed for _, _, failed in results) else 0)
 
+
+def pairs(workload, seeds, parent, seconds, metrics, out):
+    """Runs one pair per seed; returns each side's complete-pair results and
+    the number of pairs with a failed run."""
+    runs = {"parent": [], "change": []}
+    failed = 0
+    for k, seed in enumerate(seeds):
+        order = [("parent", parent), ("change", ROOT)]
+        if k % 2:
+            order.reverse()
+        pair = {}
+        for side, checkout in order:
+            r = run(checkout, workload, seed, seconds)
+            print(f"{workload} seed {seed} {side}: " + (
+                " ".join(f"{m['name']}={r[m['name']]:.4g}" for m in metrics)
+                if r else "FAILED"), flush=True)
+            if out:
+                with open(out, "a") as fh:
+                    fh.write(json.dumps({"workload": workload, "seed": seed,
+                                         "side": side, "metrics": r}) + "\n")
+            pair[side] = r
+        if pair["parent"] and pair["change"]:
+            for side in runs:
+                runs[side].append(pair[side])
+        else:
+            failed += 1
+    return runs, failed
+
+
+def report(workload, runs, failed, seconds, metrics):
     n = len(runs["parent"])
-    print(f"\n{args.workload}: {n} complete pairs, {failed} with a failed run, "
+    print(f"\n{workload}: {n} complete pairs, {failed} with a failed run, "
           f"{seconds:g} s per run")
     print(f"{'metric':<14}{'parent q1/med/q3':>30}{'change q1/med/q3':>30}"
           f"{'ratio':>8}{'wins':>8}  verdict")
@@ -132,7 +150,6 @@ def main():
         fmt = lambda q: "/".join(f"{x:.4g}" for x in q)
         print(f"{name:<14}{fmt(pq):>30}{fmt(cq):>30}{ratio:>8.3f}{f'{wins}/{n}':>8}  "
               + ("; ".join(verdict) or "within bound"))
-    sys.exit(1 if failed else 0)
 
 
 if __name__ == "__main__":

@@ -56,15 +56,6 @@ object Checks {
   private[graft] def partGroupCol(df: DataFrame, p: Column): Column =
     if (rawKeyStringable(df.select(p).schema.head.dataType)) p else p.cast("string")
 
-  /** Distinct-key count with PySpark-reference semantics: `distinct()` over
-    * the selected columns counts a NULL (or all-NULL tuple) as one distinct
-    * value — unlike SQL `COUNT(DISTINCT col)` which drops NULLs
-    * (divergence documented at /root/reference: `engines/pyspark_engine.py:85`
-    * vs `engines/duckdb_engine.py:91-99`; we standardize on PySpark).
-    * One shuffle of pruned key columns, map-side partial dedup. */
-  def distinctKeyCount(df: DataFrame, keys: Seq[String]): Long =
-    df.select(keys.map(col): _*).distinct().count()
-
   /** Duplicate keys and their multiplicities: groupBy(key).count().filter(>1).
     * Map-side combine already collapses hot keys to one row per task, so a
     * skewed key costs one reducer O(tasks) rows, not O(occurrences). */

@@ -6,9 +6,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
-/** One grouped walk per key: the partitioned uniqueness, sequence,
-  * monotonic and transition rules that share a walk key (group columns K,
-  * walk index I) are evaluated by ONE Spark job instead of one job each.
+/** One grouped walk per key: the uniqueness, sequence, monotonic and
+  * transition rules that share a walk key (group columns K, walk index I)
+  * are evaluated by ONE Spark job instead of one job each. This is the
+  * only place those four families' verdicts are computed: a partitioned
+  * pass walks over its partition expression, and a global verdict that no
+  * `partition_covers_key` roll-up gives walks over one constant partition.
   *
   * The job scans once and derives every member's per-row flags from window
   * functions partitioned by (partition, K) — one Sort per distinct walk
@@ -35,6 +38,16 @@ private[graft] object GroupWalk {
     def values: Seq[String] = Nil
     /** The walk order the member's predecessor needs, if any. */
     def order: Option[Seq[Column]] = None
+    /** Metadata of the member's global verdict when no
+      * `partition_covers_key` roll-up promotes it. */
+    def metadata: Map[String, String] =
+      Map("keys" -> Validator.ruleKeys(rule).mkString(",")) ++ (this match {
+        case _: Unique => Map.empty
+        case _: Dense => Map("index" -> key.index.get, "unit" -> "groups")
+        case m: Monotone => Map("order_by" -> key.index.get, "value" -> m.value, "unit" -> "groups")
+        case g: Grammar => Map("order_by" -> key.index.get, "value" -> g.value,
+          "edges" -> g.pairs.map { case (f, t) => s"$f->$t" }.mkString(","), "unit" -> "groups")
+      })
   }
   final case class Unique(rule: ValidationRule, key: Key) extends Member
   final case class Dense(rule: ValidationRule, key: Key, start: Option[Long]) extends Member
@@ -59,7 +72,7 @@ private[graft] object GroupWalk {
     * Left: the error the rule reports as its own result. */
   def member(df: DataFrame, rule: ValidationRule): Either[Throwable, Member] =
     try {
-      val keys = if (rule.columns.nonEmpty) rule.columns else Seq(rule.column)
+      val keys = Validator.ruleKeys(rule)
       val m = rule.ruleType match {
         case RuleType.Uniqueness =>
           Unique(rule, if (keys.size == 1) Key(keys, None) else Key(keys.init, Some(keys.last)))
@@ -74,17 +87,17 @@ private[graft] object GroupWalk {
           val (orderCol, valueCol, pairs, first, last) = RulePlanner.transitionParams(rule)
           Grammar(rule, Key(keys, Some(orderCol)), valueCol, pairs, first, last)
       }
-      rule.paramBool("partition_covers_key")
       // analysis is eager: a missing column raises here, before planning
       df.select((m.key.groups ++ m.key.index ++ m.values).map(col): _*)
       Right(m)
     } catch { case e: Throwable => Left(e) }
 
   /** The walk's roll-up: one row per partition — `__part`, then `g<j>`
-    * and `f<j>` (longs) for member j. For a uniqueness member `f` is the
-    * partition's duplicate rows (rows − distinct keys; `g` is unused); for
-    * the group-unit families `g` counts the member's key groups and `f`
-    * the violating ones. All members share `key`. */
+    * and `f<j>` (longs) for member j. For a uniqueness member `g` is the
+    * partition's rows and `f` its duplicate rows (rows − distinct keys);
+    * for the group-unit families `g` counts the member's key groups and
+    * `f` the violating ones. All members share `key`. An empty `df` has no
+    * row. */
   def frame(df: DataFrame, key: Key, members: Seq[Member], part: Column): DataFrame = {
     val partKey = Checks.partGroupCol(df, part)
     val ks = key.groups.map(col)
@@ -95,16 +108,17 @@ private[graft] object GroupWalk {
     val orders = members.flatMap(_.order).distinctBy(_.map(_.toString))
     def aggregate(d: DataFrame, aggs: Seq[Column]) = d.groupBy(byKey: _*).agg(aggs.head, aggs.tail: _*)
 
-    // per-(partition, K) stats: `__dups` for uniqueness, the sequence
+    // per-(partition, K) stats: `__rows`/`__dups` for uniqueness, the sequence
     // family's (n_distinct, min_idx, max_idx), `__n<j>`/`__b<j>` (included
     // rows, violating rows) and the accept flag `__e<j>` of the rest
     val stats = if (orders.isEmpty) {
       // no member needs an order: two-phase hash aggregate, no Sort
       val g1 = df.groupBy(keyOut ++ key.index.map(i => col(i).as("__i")): _*)
-        .agg(count(lit(1)).as("__c"))
-      if (!dense) g1.withColumn("__dups", col("__c") - 1L)
+        .agg(count(lit(1)).as("__rows"))
+      if (!dense) g1.withColumn("__dups", col("__rows") - 1L)
       else aggregate(g1,
-        (if (uniques) Seq((sum("__c") - count(lit(1))).as("__dups")) else Nil) ++
+        (if (uniques) Seq(sum("__rows").as("__rows"),
+          (sum("__rows") - count(lit(1))).as("__dups")) else Nil) ++
           Seq(count(col("__i")).as("n_distinct"),
             min(col("__i")).as("min_idx"), max(col("__i")).as("max_idx")))
     } else {
@@ -147,7 +161,8 @@ private[graft] object GroupWalk {
         case _ => Nil
       }
       aggregate(df.select(keyOut ++ newIndex ++ flags: _*),
-        (if (uniques) Seq((count(lit(1)) - count(when(col("__new"), 1))).as("__dups")) else Nil) ++
+        (if (uniques) Seq(count(lit(1)).as("__rows"),
+          (count(lit(1)) - count(when(col("__new"), 1))).as("__dups")) else Nil) ++
           (if (dense) Seq(count(when(col("__i").isNotNull && col("__new"), 1)).as("n_distinct"),
             min(col("__i")).as("min_idx"), max(col("__i")).as("max_idx")) else Nil) ++
           memberAggs)
@@ -158,7 +173,7 @@ private[graft] object GroupWalk {
         when(exists, 1L).otherwise(0L).as(s"g$j"),
         when(exists && violating, 1L).otherwise(0L).as(s"f$j"))
       m match {
-        case _: Unique => Seq(lit(1L).as(s"g$j"), col("__dups").as(s"f$j"))
+        case _: Unique => Seq(col("__rows").as(s"g$j"), col("__dups").as(s"f$j"))
         case d: Dense => unit(col("n_distinct") > 0L, Checks.sequenceViolationCond(d.start))
         case _: Monotone => unit(col(s"__n$j") > 0L, col(s"__b$j") > 0L)
         case g: Grammar => unit(col(s"__n$j") > 0L, col(s"__b$j") > 0L ||

@@ -31,11 +31,14 @@ class Validator(
 
   private val viewCounter = new AtomicLong(0)
 
-  /** Execute all enabled rules for `tableName` against `df`.
+  /** Execute all enabled rules for `tableName` against `df` — the
+    * unpartitioned case of [[executeRulesPartitioned]], with the same plan.
     * Fusible rules share ONE aggregate job; all drift rules share one
-    * multi-histogram scan per table side; each uniqueness key-set, each
-    * referential rule and each custom SQL rule is its own job. Result order
-    * matches rule order (globals first — observable contract). */
+    * multi-histogram scan per table side; uniqueness, sequence, monotonic
+    * and transition rules share one group-walk job per walk key (see
+    * [[GroupWalk]]); each referential rule and each custom SQL rule is its
+    * own job. Result order matches rule order (globals first — observable
+    * contract). */
   def executeRules(df: DataFrame, rules: Seq[ValidationRule], tableName: String): ValidationSummary =
     executeRulesPartitioned(df, rules, tableName, None)._1
 
@@ -50,12 +53,16 @@ class Validator(
     * verdicts come out alongside the global ones:
     *  - fusible rules: the fused aggregate groups by the expression — global
     *    counts are the driver-side roll-up of the SAME single pass;
-    *  - uniqueness, sequence, monotonic, transition: one grouped walk job
-    *    per walk key (see [[GroupWalk]]); a partition's verdict assesses the
-    *    rule WITHIN that partition (cross-partition duplicates or groups
-    *    appear only in the global verdict, so per-partition failure counts
-    *    sum to the global count exactly when the partition expression is
-    *    derived from the key — the recommended layout);
+    *  - uniqueness, sequence, monotonic, transition: one group-walk job per
+    *    walk key over the partition expression (see [[GroupWalk]]); a
+    *    partition's verdict assesses the rule WITHIN that partition
+    *    (cross-partition duplicates or groups appear only in the global
+    *    verdict, so per-partition failure counts sum to the global count
+    *    exactly when the partition expression is derived from the key — the
+    *    recommended layout). A rule declaring `partition_covers_key=true`
+    *    takes its global verdict from that walk's roll-up; every other rule
+    *    gets it from a second walk per key over one constant partition,
+    *    which is also the only walk of an unpartitioned pass;
     *  - referential: the violation rows are counted grouped by the
     *    expression, and the global verdict is their roll-up — one anti-join
     *    job serves both levels. */
@@ -200,53 +207,33 @@ class Validator(
     // `partition_covers_key=true` (the partition expression is a function
     // of a subset of its key columns, so equal keys are always
     // co-partitioned) also gets its GLOBAL verdict from the roll-up — the
-    // table-wide job disappears.
+    // table-wide job disappears. The walk families are served on every
+    // path, partitioned or not.
     def partTotals: Map[String, Long] = partTotalsEarly
     type Grouped = (String, Option[ValidationResult], Seq[PartitionVerdict])
-    // shared tail of the grouped families: on success optionally promote
-    // the partition_covers_key roll-up to the global verdict; on failure
-    // surface the job's error as the rule's result (−1/−1 sentinel,
-    // severity→error) — with partition_covers_key the global verdict
-    // DEPENDS on this job, and a silent Nil would fall back to the
-    // table-wide job the caller opted out of
-    def groupedOutcome(r: ValidationRule, tu: Long,
-        run: Either[Throwable, Seq[PartitionVerdict]],
-        globalTotal: Seq[PartitionVerdict] => Long,
-        extraMeta: Map[String, String]): Grouped =
-      // outer try: paramBool in the promotion check is fail-loud, and its
-      // raise must land in THIS rule's failure result, not kill the await
-      try {
-        run match {
-          case Right(verdicts) =>
-            val globalFromRollup =
-              if (r.paramBool("partition_covers_key") && verdicts.nonEmpty) {
-                val failed = verdicts.map(_.failed_count).sum
-                Some(ValidationResult.verdict(r, failed, globalTotal(verdicts),
-                  (System.nanoTime() - tu) / 1e6,
-                  Map("keys" -> (if (r.columns.nonEmpty) r.columns else Seq(r.column)).mkString(","),
-                    "partitioned" -> "true") ++ extraMeta))
-              } else None
-            (r.name, globalFromRollup, verdicts)
-          case Left(e) =>
-            (r.name, Some(ValidationResult.failure(r, e,
-              (System.nanoTime() - tu) / 1e6)), Nil: Seq[PartitionVerdict])
-        }
-      } catch {
-        case e: Throwable =>
-          (r.name, Some(ValidationResult.failure(r, e,
-            (System.nanoTime() - tu) / 1e6)), Nil: Seq[PartitionVerdict])
-      }
-    // one grouped job per rule (functional_dependency, diff and the
-    // binary families below), FLAT (no nested awaits on the bounded pool)
+    // one grouped job per rule (functional_dependency, diff and the binary
+    // families below), FLAT (no nested awaits on the bounded pool). On
+    // success a partition_covers_key roll-up is promoted to the global
+    // verdict; on failure the job's error is the rule's result (−1/−1
+    // sentinel, severity→error) — with partition_covers_key the global
+    // verdict DEPENDS on this job, and a silent Nil would fall back to the
+    // table-wide job the caller opted out of. paramBool is fail-loud: its
+    // raise lands in this rule's failure result too, never kills the await.
     def groupedRuleFuture(r: ValidationRule,
         run: () => Either[Throwable, Seq[PartitionVerdict]],
-        globalTotal: Seq[PartitionVerdict] => Long,
         extraMeta: Map[String, String]): Future[Grouped] =
       SparkFuture(sc) {
         val tu = System.nanoTime()
+        def ms = (System.nanoTime() - tu) / 1e6
         sc.setJobDescription(s"$tableName rule:${r.name}")
-        groupedOutcome(r, tu, try run() catch { case e: Throwable => Left(e) },
-          globalTotal, extraMeta)
+        try {
+          val verdicts = run().fold(e => throw e, identity)
+          (r.name, Option.when(r.paramBool("partition_covers_key") && verdicts.nonEmpty)(
+            ValidationResult.verdict(r, verdicts.map(_.failed_count).sum,
+              verdicts.map(_.total_count).sum, ms,
+              Map("keys" -> Validator.ruleKeys(r).mkString(","), "partitioned" -> "true") ++ extraMeta)),
+            verdicts)
+        } catch { case e: Throwable => (r.name, Some(ValidationResult.failure(r, e, ms)), Nil) }
       }
     // OPTIMISTIC submission: grouped jobs no longer wait for the fused scan
     // (they consume partTotals by-name, after their own collect). When the
@@ -263,49 +250,61 @@ class Validator(
         }
       case _ => Nil
     }
-    // uniqueness + sequence + monotonic + transition: ONE future per walk
-    // key returning all of its members' outcomes (see [[GroupWalk]]). A
-    // rule whose parameters or columns do not resolve reports its own
-    // error without joining a walk; a shared walk job that fails at
-    // runtime re-runs its members one at a time, so a poisoned member gets
-    // its real error and the others keep their verdicts — unless the
-    // failure is one no member can cause (a cancelled job or job group, an
-    // interrupt, a stopped context), which every member reports as is.
-    // Verdict unit: rows (uniqueness — the global total is the row-count
-    // partTotals) or groups (the others — the global total is the
-    // verdicts' own sum).
-    val walkFs: Seq[Future[Seq[Grouped]]] = partitionExpr match {
-      case Some(p) =>
-        val prepared = rules.filter(r => GroupWalk.families(r.ruleType))
-          .map(r => r -> GroupWalk.member(df, r))
-        val members = prepared.collect { case (_, Right(m)) => m }
-        val walks = members.map(_.key).distinct.map(k => members.filter(_.key == k))
-        def outcome(m: GroupWalk.Member, tu: Long,
-            run: Either[Throwable, Seq[PartitionVerdict]]): Grouped = m match {
-          case _: GroupWalk.Unique => groupedOutcome(m.rule, tu, run, _ => partTotals.values.sum, Map.empty)
-          case _ => groupedOutcome(m.rule, tu, run, _.map(_.total_count).sum, Map("unit" -> "groups"))
-        }
-        prepared.collect { case (r, Left(e)) =>
-          Future.successful(Seq(groupedOutcome(r, System.nanoTime(), Left(e), _ => 0L, Map.empty)))
-        } ++ walks.map { ms =>
-          SparkFuture(sc) {
-            val tu = System.nanoTime()
-            sc.setJobDescription(s"$tableName group-walk")
-            def run(ms: Seq[GroupWalk.Member]): Seq[Grouped] =
-              (try Right(walkRows(df, ms, p))
-               catch { case e: Throwable => Left(e) }) match {
-                case Right(rows) => ms.zipWithIndex.map { case (m, j) =>
-                  outcome(m, tu, try Right(walkMemberVerdicts(m, j, rows, partTotals))
-                    catch { case e: Throwable => Left(e) })
-                }
-                case Left(e) if ms.size > 1 && !Validator.cancelled(sc, e) =>
-                  ms.flatMap(m => run(Seq(m)))
-                case Left(e) => ms.map(m => outcome(m, tu, Left(e)))
+    // uniqueness + sequence + monotonic + transition: every verdict comes
+    // from a group walk (see [[GroupWalk]]), ONE future per walk key and
+    // level. The partition level (partitioned pass only) gives every
+    // member's per-partition verdicts and, for a member declaring
+    // `partition_covers_key=true`, its global verdict; the global level
+    // walks every other member over one constant partition, since a group
+    // that straddles partitions is walked in pieces. Global verdicts take
+    // their totals from the walk itself, never from the fused job. A rule
+    // whose parameters or columns do not resolve reports its own error; a
+    // walk failing at runtime re-runs its members one at a time — unless
+    // the failure is one no member can cause (a cancelled job or job
+    // group, an interrupt, a stopped context), which every member reports.
+    val walkFs: Seq[Future[Seq[Grouped]]] = {
+      val prepared = rules.filter(r => GroupWalk.families(r.ruleType)).map(r => r -> (for {
+        m <- GroupWalk.member(df, r)
+        covers <- scala.util.Try(partitionExpr.isDefined && r.paramBool("partition_covers_key")).toEither
+      } yield m -> covers))
+      val members = prepared.collect { case (_, Right(mc)) => mc }
+      val covers = members.collect { case (m, true) => m.rule.name }.toSet
+      def byKey(ms: Seq[GroupWalk.Member]) = ms.map(_.key).distinct.map(k => ms.filter(_.key == k))
+      def failed(r: ValidationRule, tu: Long, e: Throwable): Grouped =
+        (r.name, Some(ValidationResult.failure(r, e, (System.nanoTime() - tu) / 1e6)), Nil)
+      // the `j`-th member's global verdict: its (g, f) sums over the rows
+      def rollup(m: GroupWalk.Member, j: Int, rows: Array[org.apache.spark.sql.Row], tu: Long,
+          promoted: Boolean) =
+        ValidationResult.verdict(m.rule, rows.map(_.getLong(2 + 2 * j)).sum,
+          rows.map(_.getLong(1 + 2 * j)).sum, (System.nanoTime() - tu) / 1e6,
+          if (!promoted) m.metadata
+          else m.metadata.filter(kv => kv._1 == "keys" || kv._1 == "unit") + ("partitioned" -> "true"))
+      def walk(level: String, p: Option[Column])(ms: Seq[GroupWalk.Member])(
+          outcome: (GroupWalk.Member, Int, Array[org.apache.spark.sql.Row], Long) => Grouped) =
+        SparkFuture(sc) {
+          val tu = System.nanoTime()
+          sc.setJobDescription(s"$tableName $level")
+          def run(ms: Seq[GroupWalk.Member]): Seq[Grouped] =
+            (try Right(walkRows(df, ms, p))
+             catch { case e: Throwable => Left(e) }) match {
+              case Right(rows) => ms.zipWithIndex.map { case (m, j) =>
+                try outcome(m, j, rows, tu) catch { case e: Throwable => failed(m.rule, tu, e) }
               }
-            run(ms)
-          }
+              case Left(e) if ms.size > 1 && !Validator.cancelled(sc, e) =>
+                ms.flatMap(m => run(Seq(m)))
+              case Left(e) => ms.map(m => failed(m.rule, tu, e))
+            }
+          run(ms)
         }
-      case _ => Nil
+      prepared.collect { case (r, Left(e)) => Future.successful(Seq(failed(r, System.nanoTime(), e))) } ++
+        partitionExpr.toSeq.flatMap(p => byKey(members.map(_._1)).map(walk("group-walk", Some(p))(_) {
+          // an empty table has nothing to promote
+          (m, j, rows, tu) => (m.rule.name, Option.when(covers(m.rule.name))(
+            rollup(m, j, rows, tu, promoted = rows.nonEmpty)), walkMemberVerdicts(m, j, rows, partTotals))
+        })) ++
+        byKey(members.collect { case (m, false) => m }).map(walk("group-walk global", None)(_) {
+          (m, j, rows, tu) => (m.rule.name, Some(rollup(m, j, rows, tu, promoted = false)), Nil)
+        })
     }
     // functional_dependency + diff: one grouped job per rule yields
     // per-partition verdicts, and partition_covers_key promotes the
@@ -320,7 +319,7 @@ class Validator(
             case _             => fdPartitionVerdicts(df, r, p, partTotals)
           }
           val unit = if (r.ruleType == RuleType.Diff) "keys" else "groups"
-          groupedRuleFuture(r, run, _.map(_.total_count).sum, Map("unit" -> unit))
+          groupedRuleFuture(r, run, Map("unit" -> unit))
         }
       case _ => Nil
     }
@@ -342,7 +341,7 @@ class Validator(
             case RuleType.Quantile => quantilePartitionVerdicts(df, r, p)
             case _ => reconciliationPartitionVerdicts(df, r, p)
           }
-          groupedRuleFuture(r, run, _.map(_.total_count).sum, Map.empty)
+          groupedRuleFuture(r, run, Map.empty)
         }
       case _ => Nil
     }
@@ -373,42 +372,39 @@ class Validator(
           } catch { case _: Throwable => Nil }
         }
       else Nil
-    // 3. remaining rules (uniqueness/referential on the UNPARTITIONED path,
-    // custom SQL, stragglers) — each is an independent Spark job, submitted
-    // HERE, BEFORE any section await, so single-rule jobs overlap the drift
-    // and grouped sections instead of starting after the last of them
-    // completed (on the unpartitioned path EVERY non-fused family is a
-    // single, so the old post-await submission serialized the whole middle
-    // of the suite behind the drift batch). Which rules end up uncovered is
-    // exactly predictable from the section routing above: the fused map
-    // (already resolved), drift/outlier by type, and — when the grouped
-    // sections are active — referential plus the grouped families that
-    // promote their roll-up via partition_covers_key. The results list
-    // still preserves overall rule order (assembled by name), and per-rule
-    // error isolation is unchanged: executeSingle catches into a failure
-    // result, so a Future here never fails.
+    // 3. remaining rules (referential, functional_dependency and diff on
+    // the UNPARTITIONED path, custom SQL, stragglers) — each is an
+    // independent Spark job, submitted HERE, BEFORE any section await, so
+    // single-rule jobs overlap the drift and grouped sections instead of
+    // starting after the last of them completed. Which rules end up
+    // uncovered is exactly predictable from the section routing above: the
+    // fused map (already resolved), drift/outlier by type, the walk
+    // families always, and — when the grouped sections are active —
+    // referential plus functional_dependency and diff rules that promote
+    // their roll-up via partition_covers_key. The results list still
+    // preserves overall rule order (assembled by name), and per-rule error
+    // isolation is unchanged: executeSingle catches into a failure result,
+    // so a Future here never fails.
     // prediction must not force the fused future: fusible coverage comes
     // from the (driver-side) admission list, grouped coverage optimistically
     // from the partition expression alone. A misprediction — the fused job
-    // failed, or it yielded no totals and the grouped results get discarded
-    // below — lands in the assembly safety net (inline executeSingle),
-    // which is exactly the old behavior's error path.
+    // failed, or it yielded no totals and the referential/FD/diff results
+    // get discarded below — lands in the assembly safety net (inline
+    // executeSingle).
     val fusibleNames = wellFormedFusible.map(_.name).toSet
     val groupedActive = partitionExpr.isDefined
-    val groupedFamilies = Set(RuleType.Uniqueness, RuleType.Sequence,
-      RuleType.Monotonic, RuleType.Transition, RuleType.FunctionalDependency,
-      RuleType.Diff)
+    val groupedFamilies = Set(RuleType.FunctionalDependency, RuleType.Diff)
     val coveredPredicted = (r: ValidationRule) =>
       fusibleNames.contains(r.name) ||
+        GroupWalk.families(r.ruleType) ||
         r.ruleType == RuleType.drift ||
         (r.ruleType == RuleType.Outlier &&
           r.columns.forall(c => schema.fieldNames.exists(_.equalsIgnoreCase(c)))) ||
         (groupedActive && (r.ruleType == RuleType.Referential ||
           (groupedFamilies(r.ruleType) &&
-            // a malformed flag means the grouped future owns the (failure)
-            // result — covered; parse errors surface there, not here
-            (try r.paramBool("partition_covers_key")
-             catch { case _: Throwable => true }))))
+            // any flag but `false` is covered: the grouped future owns the
+            // result, and a malformed flag's parse error surfaces there
+            r.parameters.get("partition_covers_key").exists(_ != "false"))))
     val singleFs: Map[String, Future[ValidationResult]] = rules
       .filterNot(coveredPredicted)
       .map(r => r.name -> SparkFuture(sc) {
@@ -419,20 +415,27 @@ class Validator(
     val (driftResults, driftVerdicts) = Await.result(driftF, Duration.Inf)
     val (outlierResults, outlierVerdicts) = Await.result(outlierF, Duration.Inf)
     val refPairsAll = refFs.map { case (n, f) => n -> Await.result(f, Duration.Inf) }
-    val groupedAll = walkFs.flatMap(f => Await.result(f, Duration.Inf)) ++
-      fdDiffFs.map(f => Await.result(f, Duration.Inf)) ++
+    val walked = walkFs.flatMap(f => Await.result(f, Duration.Inf))
+    val groupedAll = fdDiffFs.map(f => Await.result(f, Duration.Inf)) ++
       cardFs.map(f => Await.result(f, Duration.Inf))
-    // discard the optimistically-run grouped results when the fused pass
-    // yielded no partition totals (empty table or fused failure) — the old
-    // submission gate's observable behavior on those paths: the affected
-    // rules fall through to isolated single jobs in the assembly below
+    // discard the optimistically-run grouped results and every per-partition
+    // verdict when the fused pass yielded no partition totals (empty table
+    // or fused failure) — the old submission gate's observable behavior on
+    // those paths: the affected non-walk rules fall through to isolated
+    // single jobs in the assembly below. Walk results never depend on it.
     val keepGrouped = partTotals.nonEmpty
     val refPairs = if (keepGrouped) refPairsAll else Nil
     val grouped = if (keepGrouped) groupedAll else Nil
+    // a walk rule has one result per level it joined: a failure (the −1
+    // sentinel) at either level is the rule's result
+    val walkResults = walked.groupBy(_._1).map { case (n, outs) =>
+      n -> outs.flatMap(_._2).minBy(_.failed_count)
+    }
     val (specialResults, specialVerdicts): (Map[String, ValidationResult], Seq[PartitionVerdict]) =
       (refPairs.map { case (n, (res, _)) => n -> res }.toMap ++
-        grouped.collect { case (n, Some(res), _) => n -> res }.toMap,
-        refPairs.flatMap(_._2._2) ++ grouped.flatMap(_._3) ++ rowCountVerdicts)
+        grouped.collect { case (n, Some(res), _) => n -> res }.toMap ++ walkResults,
+        refPairs.flatMap(_._2._2) ++ grouped.flatMap(_._3) ++
+          (if (keepGrouped) walked.flatMap(_._3) else Nil) ++ rowCountVerdicts)
 
     val results: Seq[ValidationResult] = rules.map { r =>
       fusedResults.getOrElse(r.name,
@@ -443,7 +446,10 @@ class Validator(
                 .map(f => Await.result(f, Duration.Inf))
                 // misprediction safety net (a section dropped a rule it was
                 // expected to own): run the isolated job now — correctness
-                // over latency on this path, which no current section hits
+                // over latency. Reached by fusible rules after a failed
+                // fused job, and by referential, functional_dependency and
+                // diff rules of a partitioned pass on an empty table or
+                // after a failed fused job
                 .getOrElse(executeSingle(df, r, tableName, totalCount))))))
     }
 
@@ -546,20 +552,24 @@ class Validator(
   }
 
   /** The roll-up rows of one walk's members from ONE job
-    * ([[GroupWalk.frame]]): per partition, each member's (groups, failed)
-    * pair. limit(max+1) so a raw high-cardinality partition expression
-    * trips the guard in [[walkMemberVerdicts]] instead of flooding the
-    * driver. */
+    * ([[GroupWalk.frame]]): per partition of `p` (one constant partition
+    * when None), each member's (groups, failed) pair. With a partition
+    * expression, limit(max+1) so a raw high-cardinality expression trips
+    * the guard in [[walkMemberVerdicts]] instead of flooding the driver.
+    * The constant partition yields at most one row and skips the limit:
+    * a limit's incremental take runs a chain of jobs until it has scanned
+    * every partition. */
   private def walkRows(df: DataFrame, members: Seq[GroupWalk.Member],
-      p: org.apache.spark.sql.Column): Array[org.apache.spark.sql.Row] =
-    GroupWalk.frame(df, members.head.key, members, p)
-      .limit(maxPartitionBuckets + 1).collect()
+      p: Option[org.apache.spark.sql.Column]): Array[org.apache.spark.sql.Row] = {
+    val rows = GroupWalk.frame(df, members.head.key, members, p.getOrElse(lit(0)))
+    p.fold(rows)(_ => rows.limit(maxPartitionBuckets + 1)).collect()
+  }
 
   /** Per-partition verdicts of the `j`-th member of a walk from its
     * [[walkRows]]. Uniqueness: duplicates WITHIN each partition ((rows −
     * distinct keys) per partition) over the fused pass's row totals. The
     * group-unit families: groups and violating groups per partition. The
-    * global uniqueness verdict stays a separate table-wide distinct unless
+    * global verdict comes from the one-partition walk unless
     * `partition_covers_key` promotes the roll-up (cross-partition
     * duplicates are invisible inside partitions); when the partition
     * expression derives from the key — the recommended layout — the two
@@ -1493,62 +1503,6 @@ class Validator(
           val (total, failed) = RulePlanner.runFused(df, Seq(rule))
           ValidationResult.verdict(rule, failed(rule.name), total, ms)
 
-        case RuleType.Uniqueness =>
-          val keys = if (rule.columns.nonEmpty) rule.columns else Seq(rule.column)
-          val total = totalOf(df, cachedTotal)
-          val distinct = Checks.distinctKeyCount(df, keys)
-          ValidationResult.verdict(rule, total - distinct, total, ms,
-            Map("keys" -> keys.mkString(",")))
-
-        case RuleType.Sequence =>
-          // dense per-key index integrity; the verdict unit is GROUPS
-          // (conversations), not rows — a 10^12-turn table has ~10^10
-          // conversations and the rate is "fraction of intact conversations"
-          val keys = if (rule.columns.nonEmpty) rule.columns else Seq(rule.column)
-          val idx = rule.param("index").getOrElse(throw new IllegalArgumentException(
-            s"sequence rule '${rule.name}' needs an index parameter"))
-          val start = rule.param("start").map(_.toLong)
-          val row = Checks.sequenceGroups(df, keys, idx).agg(
-            count(lit(1)),
-            sum(when(Checks.sequenceViolationCond(start), 1L).otherwise(0L))).head()
-          val total = row.getLong(0)
-          val failed = if (row.isNullAt(1)) 0L else row.getLong(1)
-          ValidationResult.verdict(rule, failed, total, ms,
-            Map("keys" -> keys.mkString(","), "index" -> idx, "unit" -> "groups"))
-
-        case RuleType.Monotonic =>
-          // per-key ordering integrity; verdict unit is GROUPS (like
-          // sequence): rate = fraction of conversations whose value walk
-          // never regresses
-          val keys = if (rule.columns.nonEmpty) rule.columns else Seq(rule.column)
-          val (orderCol, valueCol, strict, desc) = RulePlanner.monotonicParams(rule)
-          val row = Checks.monotonicGroups(df, keys, orderCol, valueCol, strict, desc)
-            .agg(count(lit(1)),
-              sum(when(col("inversions") > 0L, 1L).otherwise(0L))).head()
-          val total = row.getLong(0)
-          val failed = if (row.isNullAt(1)) 0L else row.getLong(1)
-          ValidationResult.verdict(rule, failed, total, ms,
-            Map("keys" -> keys.mkString(","), "order_by" -> orderCol,
-              "value" -> valueCol, "unit" -> "groups"))
-
-        case RuleType.Transition =>
-          // per-key value-adjacency grammar (the role DFA); verdict unit
-          // is GROUPS like sequence/monotonic: rate = fraction of
-          // conversations whose ordered value walk stays inside the
-          // allowed prev→next edges (and start/accept sets when given)
-          val keys = if (rule.columns.nonEmpty) rule.columns else Seq(rule.column)
-          val (orderCol, valueCol, pairs, first, last) = RulePlanner.transitionParams(rule)
-          val row = Checks.transitionGroups(df, keys, orderCol, valueCol, pairs, first, last)
-            .agg(count(lit(1)),
-              sum(when(col("bad_rows") > 0L, 1L).otherwise(0L))).head()
-          val total = row.getLong(0)
-          val failed = if (row.isNullAt(1)) 0L else row.getLong(1)
-          ValidationResult.verdict(rule, failed, total, ms,
-            Map("keys" -> keys.mkString(","), "order_by" -> orderCol,
-              "value" -> valueCol,
-              "edges" -> pairs.map { case (f, t) => s"$f->$t" }.mkString(","),
-              "unit" -> "groups"))
-
         case RuleType.FunctionalDependency =>
           // determinant → dependent consistency (the FD A→B contract);
           // verdict unit is GROUPS like sequence/monotonic: rate =
@@ -2053,7 +2007,7 @@ class Validator(
             val base = if (resolved.size == referenced.size)
               table.select(resolved.map(col): _*) else table
             // NULL-safe equality: NULL keys form their own group on the
-            // full path (distinctKeyCount, sequenceGroups), so an equi-join
+            // full path (the group walk), so an equi-join
             // — where NULL never matches — would silently drop NULL-key
             // delta rows from the frame. Aliased sides because the delta is
             // often derived from the same plan as the table (tests,

@@ -390,17 +390,20 @@ object SnapTable {
     * commit protocol must not race itself inside one process on
     * filesystems whose rename silently overwrites an existing destination
     * (raw local FS: the winner's manifest bytes can pair with the loser's
-    * checksum sidecar). */
+    * checksum sidecar). The writes carry the calling thread's job group,
+    * tags and scheduler pool ([[graft.SparkFuture]]); every write finishes
+    * before the first commit, so a failing write is rethrown only once no
+    * other write of the call is still running. */
   def appendMany(spark: SparkSession, dir: String, dfs: Seq[DataFrame]): Seq[Snapshot] = {
     snapshot(spark, dir) // fail fast (and loud) on a non-table before writing data
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Await
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
-    val staged = dfs.map(df => df.schema -> Future(writeDataFiles(spark, dir, df)))
-    staged.map { case (schema, f) =>
-      appendCommit(spark, dir, schema, Await.result(f, Duration.Inf), seq = None)
-    }
+    val staged = dfs.map(df => df.schema -> graft.SparkFuture(spark.sparkContext)(
+      writeDataFiles(spark, dir, df)))
+    staged.map { case (schema, f) => schema -> scala.util.Try(Await.result(f, Duration.Inf)) }
+      .map { case (schema, added) => appendCommit(spark, dir, schema, added.get, seq = None) }
   }
 
   /** Idempotent sequenced append — the EXACTLY-ONCE sink contract for

@@ -1,11 +1,27 @@
 package graft
 
-import graft.engine.Checks
+import graft.engine.{Checks, Validator}
 import graft.io.{TranscriptConfig, Transcripts}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class ChecksSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Distinct-key count with PySpark-reference semantics: `distinct()` over
+    * the selected columns counts a NULL (or all-NULL tuple) as one distinct
+    * value — unlike SQL `COUNT(DISTINCT col)` which drops NULLs. The
+    * reference for the group walk's uniqueness verdict (rows − distinct
+    * keys). */
+  private def distinctKeyCount(df: DataFrame, keys: Seq[String]): Long =
+    df.select(keys.map(col): _*).distinct().count()
+
+  /** (failed, total) of a uniqueness rule over `keys`, from the validator. */
+  private def uniqueness(df: DataFrame, keys: Seq[String]): (Long, Long) = {
+    val res = new Validator(spark, ValidationConfig())
+      .executeRules(df, Seq(ValidationRule("u", RuleType.Uniqueness, keys)), "t").results.head
+    (res.failed_count, res.total_count)
+  }
 
   test("duplicateKeys and salted variant produce identical verdicts") {
     val t = Transcripts.turns(spark, TranscriptConfig(numConvs = 300L, hotConvExtraTurns = 500L))
@@ -22,8 +38,13 @@ class ChecksSpec extends SparkSpec {
   }
 
   test("distinctKeyCount matches groupBy count") {
-    val df = Seq(("a", 1), ("a", 1), ("a", 2), ("b", 1)).toDF("k1", "k2")
-    Checks.distinctKeyCount(df, Seq("k1", "k2")) shouldBe 3
+    val df = Seq[(Option[String], Option[Int])]((Some("a"), Some(1)), (Some("a"), Some(1)),
+      (Some("a"), Some(2)), (Some("b"), Some(1)), (None, None), (None, None), (None, Some(1)))
+      .toDF("k1", "k2")
+    distinctKeyCount(df, Seq("k1", "k2")) shouldBe 5
+    distinctKeyCount(df, Seq("k1")) shouldBe 3
+    uniqueness(df, Seq("k1", "k2")) shouldBe ((7L - 5L, 7L))
+    uniqueness(df, Seq("k1")) shouldBe ((7L - 3L, 7L))
   }
 
   test("duplicateRows returns full violating rows") {
@@ -300,9 +321,11 @@ class ChecksSpec extends SparkSpec {
 
   test("verdicts are invariant under repartitioning (property)") {
     val t = Transcripts.turns(spark, TranscriptConfig(numConvs = 100L))
-    val r1 = Checks.distinctKeyCount(t, Seq("conv_id", "turn_idx"))
-    val r2 = Checks.distinctKeyCount(t.repartition(17), Seq("conv_id", "turn_idx"))
+    val r1 = distinctKeyCount(t, Seq("conv_id", "turn_idx"))
+    val r2 = distinctKeyCount(t.repartition(17), Seq("conv_id", "turn_idx"))
     r1 shouldBe r2
+    val rows = t.count()
+    uniqueness(t.repartition(17), Seq("conv_id", "turn_idx")) shouldBe ((rows - r1, rows))
     // the group-unit families carry the same contract: group stats and the
     // derived verdicts cannot depend on physical layout
     def seqStats(df: org.apache.spark.sql.DataFrame) =

@@ -1,17 +1,21 @@
 package graft
 
 import graft.engine.{Checks, GroupWalk, Validator}
+import graft.streaming.StreamValidator
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The partitioned uniqueness, sequence, monotonic and transition rules
-  * share one grouped walk per key: every (partition, rule) verdict and
-  * every promoted global verdict must equal the per-family reference
+/** The uniqueness, sequence, monotonic and transition rules share one
+  * grouped walk per key on every entry path: every (partition, rule)
+  * verdict and every global verdict must equal the per-family reference
   * pipelines run on their own. */
 class GroupWalkSpec extends SparkSpec {
   import spark.implicits._
 
-  private def turns: DataFrame = Seq[(Option[String], String, Option[Int], Option[Long], Option[String])](
+  private type Turn = (Option[String], String, Option[Int], Option[Long], Option[String])
+  private val columns = Seq("conv_id", "sub", "turn_idx", "ts", "role")
+
+  private val turnRows: Seq[Turn] = Seq(
     // a: clean walk ending on assistant
     (Some("a"), "x", Some(0), Some(1L), Some("user")),
     (Some("a"), "x", Some(1), Some(2L), Some("assistant")),
@@ -50,7 +54,9 @@ class GroupWalkSpec extends SparkSpec {
     // z: a partition whose rows every walk family but uniqueness excludes
     (Some("z"), "x", None, Some(1L), Some("user")),
     (Some("z"), "y", None, Some(2L), Some("user"))
-  ).toDF("conv_id", "sub", "turn_idx", "ts", "role")
+  )
+
+  private def turns: DataFrame = turnRows.toDF(columns: _*)
 
   private def part: Column =
     when(col("conv_id").isNull, lit(null).cast("long"))
@@ -112,27 +118,64 @@ class GroupWalkSpec extends SparkSpec {
         sum("count") - count(lit(1)), lit(0L))
       totals.toSeq.map { case (p, n) => verdict(p, dups.get(p).map(_._1).getOrElse(0L), n) }
     } else {
-      val (groups, viol) = r.ruleType match {
-        case RuleType.Sequence =>
-          (Checks.sequenceGroups(dp, keys, r.param("index").get),
-            Checks.sequenceViolationCond(r.param("start").map(_.toLong)))
-        case RuleType.Monotonic =>
-          (Checks.monotonicGroups(dp, keys, "turn_idx", r.param("value").get,
-            r.paramBool("strict"), r.param("direction").contains("desc")),
-            col("inversions") > 0L)
-        case _ =>
-          val states = (k: String) => r.param(k).map(_.split(",").toSeq)
-          (Checks.transitionGroups(dp, keys, "turn_idx", r.param("value").get,
-            r.param("pairs").get.split(",").toSeq.map { e =>
-              val Array(f, t) = e.split("->"); (f, t)
-            }, states("first"), states("last")),
-            col("bad_rows") > 0L)
-      }
+      val (groups, viol) = familyGroups(dp, keys, r)
       val present = byPart(groups, count(lit(1)), sum(when(viol, 1L).otherwise(0L)))
       totals.keys.toSeq.map { p =>
         present.get(p).map { case (g, f) => verdict(p, f, g) }.getOrElse(verdict(p, 0L, 0L))
       }
     }
+  }
+
+  /** A group-unit rule's own per-group pipeline over `keys`, and its
+    * violation predicate. */
+  private def familyGroups(df: DataFrame, keys: Seq[String],
+      r: ValidationRule): (DataFrame, Column) = r.ruleType match {
+    case RuleType.Sequence =>
+      (Checks.sequenceGroups(df, keys, r.param("index").get),
+        Checks.sequenceViolationCond(r.param("start").map(_.toLong)))
+    case RuleType.Monotonic =>
+      (Checks.monotonicGroups(df, keys, "turn_idx", r.param("value").get,
+        r.paramBool("strict"), r.param("direction").contains("desc")),
+        col("inversions") > 0L)
+    case _ =>
+      val states = (k: String) => r.param(k).map(_.split(",").toSeq)
+      (Checks.transitionGroups(df, keys, "turn_idx", r.param("value").get,
+        r.param("pairs").get.split(",").toSeq.map { e =>
+          val Array(f, t) = e.split("->"); (f, t)
+        }, states("first"), states("last")),
+        col("bad_rows") > 0L)
+  }
+
+  /** Reference GLOBAL result of one rule over the whole table: the
+    * two-phase uniqueness count (rows − distinct keys over rows) or the
+    * family's own pipeline (violating groups over groups). `promoted`: the
+    * metadata of a `partition_covers_key` roll-up instead of the rule's
+    * own. */
+  private def globalReference(df: DataFrame, r: ValidationRule,
+      promoted: Boolean): ValidationResult = {
+    val keys = if (r.columns.nonEmpty) r.columns else Seq(r.column)
+    def counts(d: DataFrame, total: Column, failed: Column) = {
+      val row = d.agg(total, failed).head()
+      (if (row.isNullAt(1)) 0L else row.getLong(1), if (row.isNullAt(0)) 0L else row.getLong(0))
+    }
+    val (failed, total) =
+      if (r.ruleType == RuleType.Uniqueness)
+        counts(df.groupBy(keys.map(col): _*).count(), sum("count"), sum("count") - count(lit(1)))
+      else {
+        val (groups, viol) = familyGroups(df, keys, r)
+        counts(groups, count(lit(1)), sum(when(viol, 1L).otherwise(0L)))
+      }
+    val unit = if (r.ruleType == RuleType.Uniqueness) Map.empty[String, String]
+      else Map("unit" -> "groups")
+    val walk = Map("order_by" -> "turn_idx", "value" -> r.param("value").getOrElse(""))
+    val own = r.ruleType match {
+      case RuleType.Uniqueness => Map.empty[String, String]
+      case RuleType.Sequence => Map("index" -> r.param("index").get)
+      case RuleType.Monotonic => walk
+      case _ => walk + ("edges" -> r.param("pairs").get)
+    }
+    ValidationResult.verdict(r, failed, total, 0.0, Map("keys" -> keys.mkString(",")) ++ unit ++
+      (if (promoted) Map("partitioned" -> "true") else own))
   }
 
   private def timeless(r: ValidationResult) = r.copy(execution_time_ms = 0.0)
@@ -181,19 +224,23 @@ class GroupWalkSpec extends SparkSpec {
       parameters = Map("order_by" -> "turn_idx", "value" -> "role",
         "pairs" -> "user=>assistant", "partition_covers_key" -> "true"))
     val v = new Validator(spark, ValidationConfig())
-    val (s0, v0) = v.executeRulesPartitioned(df, good, "t", Some(part))
-    val (s1, v1) = v.executeRulesPartitioned(df,
-      good.take(7) ++ Seq(missingValue) ++ good.drop(7) ++ Seq(badPairs), "t", Some(part))
-    val res = s1.results.map(r => r.rule_name -> r).toMap
-    res("mono_bad").failed_count shouldBe -1L
-    res("mono_bad").message should include("no_such_col")
-    res("grammar_bad").failed_count shouldBe -1L
-    res("grammar_bad").message should include("user=>assistant")
-    v1.filter(x => x.rule_name.endsWith("_bad")) shouldBe empty
-    good.foreach { r =>
-      withClue(r.name) {
-        timeless(res(r.name)) shouldBe timeless(s0.results.find(_.rule_name == r.name).get)
-        v1.filter(_.rule_name == r.name).toSet shouldBe v0.filter(_.rule_name == r.name).toSet
+    // the partitioned pass, and the unpartitioned one (the flags unread)
+    Seq(Some(part), None).foreach { p =>
+      val (s0, v0) = v.executeRulesPartitioned(df, good, "t", p)
+      val (s1, v1) = v.executeRulesPartitioned(df,
+        good.take(7) ++ Seq(missingValue) ++ good.drop(7) ++ Seq(badPairs), "t", p)
+      val res = s1.results.map(r => r.rule_name -> r).toMap
+      res("mono_bad").failed_count shouldBe -1L
+      res("mono_bad").message should include("no_such_col")
+      res("grammar_bad").failed_count shouldBe -1L
+      res("grammar_bad").message should include("user=>assistant")
+      v1.filter(x => x.rule_name.endsWith("_bad")) shouldBe empty
+      good.foreach { r =>
+        withClue(s"${r.name} partitioned=${p.isDefined}") {
+          res(r.name).failed_count should be >= 0L
+          timeless(res(r.name)) shouldBe timeless(s0.results.find(_.rule_name == r.name).get)
+          v1.filter(_.rule_name == r.name).toSet shouldBe v0.filter(_.rule_name == r.name).toSet
+        }
       }
     }
   }
@@ -209,18 +256,74 @@ class GroupWalkSpec extends SparkSpec {
     val overflow = ValidationRule("seq_overflow", RuleType.Sequence, Seq("conv_id"),
       parameters = Map("index" -> "turn_idx", "partition_covers_key" -> "true"))
     val v = new Validator(spark, ValidationConfig())
-    val (alone, _) = v.executeRulesPartitioned(df, Seq(overflow), "t", Some(part))
-    val (s0, v0) = v.executeRulesPartitioned(df, rules, "t", Some(part))
-    val (s1, v1) = v.executeRulesPartitioned(df, rules :+ overflow, "t", Some(part))
-    Seq(alone.results.head, s1.results.find(_.rule_name == "seq_overflow").get).foreach { r =>
-      r.failed_count shouldBe -1L
-      r.message.toLowerCase should include("overflow")
+    // the partitioned pass, and the unpartitioned one (the flags unread)
+    Seq(Some(part), None).foreach { p =>
+      val (alone, _) = v.executeRulesPartitioned(df, Seq(overflow), "t", p)
+      val (s0, v0) = v.executeRulesPartitioned(df, rules, "t", p)
+      val (s1, v1) = v.executeRulesPartitioned(df, rules :+ overflow, "t", p)
+      Seq(alone.results.head, s1.results.find(_.rule_name == "seq_overflow").get).foreach { r =>
+        r.failed_count shouldBe -1L
+        r.message.toLowerCase should include("overflow")
+      }
+      rules.foreach { r =>
+        withClue(s"${r.name} partitioned=${p.isDefined}") {
+          s1.results.find(_.rule_name == r.name).get.failed_count should be >= 0L
+          timeless(s1.results.find(_.rule_name == r.name).get) shouldBe
+            timeless(s0.results.find(_.rule_name == r.name).get)
+          v1.filter(_.rule_name == r.name).toSet shouldBe v0.filter(_.rule_name == r.name).toSet
+        }
+      }
     }
-    rules.foreach { r =>
-      withClue(r.name) {
-        timeless(s1.results.find(_.rule_name == r.name).get) shouldBe
-          timeless(s0.results.find(_.rule_name == r.name).get)
-        v1.filter(_.rule_name == r.name).toSet shouldBe v0.filter(_.rule_name == r.name).toSet
+  }
+
+  test("every entry path gives the walk families' global verdicts of the reference pipelines") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val rules = suite(covers = false) ++ suite(covers = true)
+    val config = ValidationConfig(tables = Seq(TableConfig("t", rules)))
+    val v = new Validator(spark, config)
+    def byName(s: ValidationSummary) = s.results.map(r => r.rule_name -> timeless(r)).toMap
+    /** One micro-batch of `data` through StreamValidator's per-batch path. */
+    def streamed(data: Seq[Turn]): ValidationSummary = {
+      val stream = MemoryStream[Turn]
+      val out = new java.util.concurrent.ConcurrentLinkedQueue[ValidationSummary]()
+      val query = StreamValidator.start(spark, stream.toDF().toDF(columns: _*), config, "t",
+        checkpointDir = java.nio.file.Files.createTempDirectory("walk_stream").toString,
+        triggerMs = 100L, onResult = o => out.add(o.summary))
+      try {
+        stream.addData(data)
+        query.processAllAvailable()
+      } finally query.stop()
+      out.size shouldBe 1
+      out.peek()
+    }
+    val tables = Seq(
+      "adversarial" -> turnRows,
+      "empty" -> Seq.empty[Turn],
+      "all-NULL keys" -> turnRows.map(_.copy(_1 = None)))
+    tables.foreach { case (name, data) =>
+      val df = data.toDF(columns: _*)
+      val nonEmpty = data.nonEmpty
+      // the delta is the table: every affected-groups frame is the whole
+      // table, and the frame tags each walk result
+      val incremental = v.validateTableIncremental(df, df, "t")
+      incremental.results.foreach(_.metadata.get("incremental") shouldBe Some("affected_groups"))
+      val paths = Seq(
+        "executeRules" -> byName(v.executeRules(df, rules, "t")),
+        "executeRulesPartitioned" -> byName(v.executeRulesPartitioned(df, rules, "t", Some(part))._1),
+        "validateTableIncremental" -> byName(incremental).map {
+          case (n, r) => n -> r.copy(metadata = r.metadata - "incremental")
+        },
+        "StreamValidator" -> byName(streamed(data)))
+      rules.foreach { r =>
+        val expected = globalReference(df, r, promoted = false)
+        val promoted = globalReference(df, r,
+          promoted = nonEmpty && r.paramBool("partition_covers_key"))
+        paths.foreach { case (path, results) =>
+          withClue(s"$name / $path / ${r.name}") {
+            results(r.name) shouldBe (if (path == "executeRulesPartitioned") promoted else expected)
+          }
+        }
       }
     }
   }

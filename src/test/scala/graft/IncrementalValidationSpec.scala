@@ -107,14 +107,15 @@ class IncrementalValidationSpec extends SparkSpec {
 
     // the hook contract: any SUPERSET of the delta-key rows — here the
     // storage layer "pruned" conversation groups the delta can't touch
-    var calls = 0
+    // (atomic: the frames are built concurrently, one per key set)
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
     val pruned = v.validateTableIncremental(full, delta, "t",
       tableFrameForKeys = Some { keys =>
-        calls += 1
+        calls.incrementAndGet()
         full.filter(col("conv_id").isin("a", "b", "c"))
       }).results.map(r => r.rule_name -> (r.failed_count, r.total_count)).toMap
     pruned shouldBe base
-    calls shouldBe 2 // one frame per distinct key set
+    calls.get shouldBe 2 // one frame per distinct key set
 
     // a hook that throws must not abort the table: the frame falls back to
     // the FULL table — correct but unpruned (larger totals, same failures)

@@ -469,4 +469,51 @@ class SnapTableSpec extends SparkSpec {
     delta.count() shouldBe 400L
     delta.agg(min("id")).as[Long].head() shouldBe 600L
   }
+
+  test("appendMany's writes carry the calling thread's job group") {
+    // thread A warms the shared pool (its threads inherit A's local
+    // properties); thread B's writes must still carry B's own group
+    def onThread(group: String): Unit = {
+      var failure: Option[Throwable] = None
+      val t = new Thread(() => {
+        try {
+          spark.sparkContext.setJobGroup(group, s"append $group")
+          val dir = freshDir(s"many-$group")
+          SnapTable.create(spark, dir, rows(0, 10))
+          SnapTable.appendMany(spark, dir, (1 to 6).map(i => rows(i * 10, i * 10 + 10)))
+          ()
+        } catch { case e: Throwable => failure = Some(e) }
+      })
+      t.start()
+      t.join()
+      failure.foreach(e => throw e)
+    }
+    def groups(jobs: Seq[(String, String, String)]) =
+      jobs.filterNot(j => j._1 != null && j._1.startsWith("listener-marker")).map(_._2).distinct
+    groups(jobsDuring(onThread("g1"))) shouldBe Seq("g1")
+    groups(jobsDuring(onThread("g2"))) shouldBe Seq("g2")
+  }
+
+  test("appendMany rethrows a failing write only after every other write finished") {
+    val dir = freshDir("many-fail")
+    SnapTable.create(spark, dir, rows(0, 10))
+    AppendGate.slowDone = false
+    val failing = rows(10, 11).select(udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("write failed"); id
+    }.apply(col("id")).as("id"))
+    val slow = rows(20, 21).select(udf { (id: Long) =>
+      Thread.sleep(1500); AppendGate.slowDone = true; id
+    }.apply(col("id")).as("id"))
+    val e = intercept[Throwable](SnapTable.appendMany(spark, dir, Seq(failing, slow)))
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("write failed")) shouldBe true
+    AppendGate.slowDone shouldBe true
+    // nothing was committed: the failing frame comes first
+    SnapTable.read(spark, dir).count() shouldBe 10L
+  }
+}
+
+/** Set by the slow write of the appendMany failure test when it ends. */
+object AppendGate {
+  @volatile var slowDone = false
 }

@@ -1427,15 +1427,28 @@ class ValidatorSpec extends SparkSpec {
     val turns = Transcripts.turns(spark, TranscriptConfig(numConvs = 200L))
     val rules = graft.bench.TranscriptSuite.rules.filter(r => walkRuleNames.contains(r.name))
     rules.map(_.name) shouldBe walkRuleNames
-    var summary: ValidationSummary = null
-    val jobs = jobsDuring {
-      summary = new Validator(spark, ValidationConfig())
-        .executeRulesPartitioned(turns, rules, "walkjobs",
-          Some(pmod(xxhash64(col("conv_id")), lit(8))))._1
-    }.map(_._1).filter(d => d != null && d.startsWith("walkjobs "))
-    summary.results.map(_.failed_count).foreach(_ should be >= 0L)
-    jobs should contain("walkjobs group-walk")
-    walkRuleNames.foreach(n => jobs should not contain s"walkjobs rule:$n")
+    rules.foreach(_.paramBool("partition_covers_key") shouldBe true)
+    val uncovered = rules.map(r => r.copy(parameters = r.parameters - "partition_covers_key"))
+    val bucket = pmod(xxhash64(col("conv_id")), lit(8))
+    // the four rules share one walk key: one SQL execution per walk level
+    Seq(
+      ("covered", rules, Some(bucket), Map("group-walk" -> 1)),
+      ("unpartitioned", rules, None, Map("group-walk global" -> 1)),
+      ("uncovered", uncovered, Some(bucket), Map("group-walk" -> 1, "group-walk global" -> 1))
+    ).foreach { case (name, rs, p, levels) =>
+      var summary: ValidationSummary = null
+      val jobs = jobsDuring {
+        summary = new Validator(spark, ValidationConfig())
+          .executeRulesPartitioned(turns, rs, "walkjobs", p)._1
+      }.filter(j => j._1 != null && j._1.startsWith("walkjobs "))
+      withClue(name) {
+        summary.results.map(_.failed_count).foreach(_ should be >= 0L)
+        jobs.filter(_._1.contains("group-walk")).groupBy(_._1).map { case (d, js) =>
+          d.stripPrefix("walkjobs ") -> js.map(_._3).distinct.size
+        } shouldBe levels
+        walkRuleNames.foreach(n => jobs.map(_._1) should not contain s"walkjobs rule:$n")
+      }
+    }
   }
 
   test("pooled validation jobs carry the submitting thread's job group") {
