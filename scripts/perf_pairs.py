@@ -2,7 +2,7 @@
 """Alternating parent/change pairs of one or more perfbench workloads.
 
     python3 scripts/perf_pairs.py --workload bulk_suite [--workload ...]
-        --parent REV [--seeds 11-20] [--out FILE]
+        --parent REV [--seeds 11-20] [--out FILE] [--layers a,b,...]
 
 For each workload and seed, runs `perfbench/run.py --trace 0` once in a
 checkout of the parent revision and once in the working tree, alternating
@@ -18,8 +18,12 @@ prints each side's median and quartiles, the change/parent ratio of the
 medians, and how many pairs the change won (ties count for neither side).
 A metric is marked `unresolved` when the parent's IQR/median exceeds the
 metric's bound, and `claimable` when the change won at least 9 of 10 pairs
-and its median beats the parent's by more than the parent's IQR. Exits
-non-zero if any run failed.
+and its median beats the parent's by more than the parent's IQR.
+
+`--layers` names per-layer metrics (e.g. validator.jobs,spark.read_mb.hi):
+after the pairs of a workload, one `--trace 1` run per side on the first
+seed prints those metrics side by side, so the layer a change should move
+is read from the same command. Exits non-zero if any run failed.
 """
 import argparse
 import json
@@ -44,9 +48,9 @@ def quartiles(xs):
     return q1, q2, q3
 
 
-def run(checkout, workload, seed, seconds):
+def run(checkout, workload, seed, seconds, trace=0):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
                        text=True)
     lines = p.stdout.strip().splitlines()
@@ -67,7 +71,10 @@ def main():
     ap.add_argument("--seeds", default="11-20", help="inclusive range, e.g. 11-20 (≥10 seeds)")
     ap.add_argument("--parent", required=True, help="parent revision, e.g. HEAD~1")
     ap.add_argument("--out", help="append every run's result as a JSON line here")
+    ap.add_argument("--layers", help="comma-separated per-layer metrics to print from one "
+                    "traced run per side on the first seed")
     args = ap.parse_args()
+    layers = [x for x in (args.layers or "").split(",") if x]
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         spec = json.load(fh)
@@ -85,14 +92,20 @@ def main():
     results = []
     try:
         for workload in args.workload:
-            results.append((workload,) + pairs(workload, seeds, parent, seconds, metrics,
-                                               args.out))
+            runs, failed = pairs(workload, seeds, parent, seconds, metrics, args.out)
+            traced = {side: run(checkout, workload, seeds[0], seconds, trace=1)
+                      for side, checkout in (("parent", parent), ("change", ROOT))} \
+                if layers else {}
+            failed += sum(1 for r in traced.values() if r is None)
+            results.append((workload, runs, failed, traced))
     finally:
         subprocess.run(["git", "worktree", "remove", "--force", parent], cwd=ROOT,
                        stdout=subprocess.DEVNULL)
-    for workload, runs, failed in results:
+    for workload, runs, failed, traced in results:
         report(workload, runs, failed, seconds, metrics)
-    sys.exit(1 if any(failed for _, _, failed in results) else 0)
+        if layers:
+            report_layers(workload, seeds[0], traced, layers)
+    sys.exit(1 if any(failed for _, _, failed, _ in results) else 0)
 
 
 def pairs(workload, seeds, parent, seconds, metrics, out):
@@ -150,6 +163,18 @@ def report(workload, runs, failed, seconds, metrics):
         fmt = lambda q: "/".join(f"{x:.4g}" for x in q)
         print(f"{name:<14}{fmt(pq):>30}{fmt(cq):>30}{ratio:>8.3f}{f'{wins}/{n}':>8}  "
               + ("; ".join(verdict) or "within bound"))
+
+
+def report_layers(workload, seed, traced, layers):
+    print(f"\n{workload}: per-layer metrics, one --trace 1 run per side, seed {seed}")
+    print(f"{'metric':<32}{'parent':>14}{'change':>14}{'ratio':>8}")
+    p, c = traced["parent"], traced["change"]
+    for name in layers:
+        pv = p.get(name) if p else None
+        cv = c.get(name) if c else None
+        fmt = lambda r, v: "FAILED" if r is None else ("absent" if v is None else f"{v:.4g}")
+        ratio = f"{cv / pv:.3f}" if pv and cv is not None else "-"
+        print(f"{name:<32}{fmt(p, pv):>14}{fmt(c, cv):>14}{ratio:>8}")
 
 
 if __name__ == "__main__":

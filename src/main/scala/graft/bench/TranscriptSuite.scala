@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * pass": single-pass fused column stats (completeness / pattern / range /
   * type-conformance), composite-key uniqueness on (conv_id, turn_idx),
   * dense turn_idx sequence and monotone ts per conversation, referential
-  * integrity of
-  * conv_id against the conversation index (broadcast anti-join), the
+  * integrity of conv_id against the conversation index (riding the same
+  * walk: its per-conversation group rows joined to the index's keys), the
   * role-transition grammar per conversation, chi-square
   * drift on role and KS drift on text-length vs a drifted snapshot, and
   * per-partition verdicts over conv_id buckets.
@@ -75,10 +75,11 @@ object TranscriptSuite {
     ValidationRule("min_size", RuleType.RowCount, Seq(),
       parameters = Map("min_rows" -> "10", "min_partition_rows" -> "10"),
       severity = Severity.Warning),
+    // rides the conv_id walk above: one row per conversation, carrying its
+    // turn count, is joined to the index — no scan of its own.
     // broadcast=false: the conversation index is ~turns/18 rows (10^9-scale
     // dim at the design point) — a broadcast would serialize a driver-side
-    // hash build; shuffle join scales with the cluster and AQE can still
-    // downgrade to broadcast when the dim is genuinely small
+    // hash build; shuffle join scales with the cluster
     ValidationRule("conv_referential", RuleType.Referential, Seq("conv_id"),
       parameters = Map("ref_table" -> "conv_index", "broadcast" -> "false"),
       threshold = Some(0.98)),

@@ -23,7 +23,11 @@ import org.apache.spark.sql.types.StringType
   * density as the same count over non-NULL I; a monotonic or transition
   * member's predecessor is its last INCLUDED row before this one (NULL
   * order or value rows stay in the walk but are skipped, as the
-  * single-rule pipelines filter them out). */
+  * single-rule pipelines filter them out). A referential rule rides the
+  * walk grouped by its column alone (see [[walks]]): it left-joins the
+  * per-(partition, K) group rows, which carry their row count, against the
+  * dim's distinct keys — no window, no Sort — so the fact table is scanned
+  * once for every key rule. */
 private[graft] object GroupWalk {
 
   /** Group columns and walk index. The index is None only for a
@@ -38,16 +42,25 @@ private[graft] object GroupWalk {
     def values: Seq[String] = Nil
     /** The walk order the member's predecessor needs, if any. */
     def order: Option[Seq[Column]] = None
-    /** Metadata of the member's global verdict when no
-      * `partition_covers_key` roll-up promotes it. */
-    def metadata: Map[String, String] =
-      Map("keys" -> Validator.ruleKeys(rule).mkString(",")) ++ (this match {
-        case _: Unique => Map.empty
-        case _: Dense => Map("index" -> key.index.get, "unit" -> "groups")
-        case m: Monotone => Map("order_by" -> key.index.get, "value" -> m.value, "unit" -> "groups")
-        case g: Grammar => Map("order_by" -> key.index.get, "value" -> g.value,
+    /** Metadata of the member's global verdict when no partition roll-up
+      * promotes it. */
+    def metadata: Map[String, String] = {
+      def keys = Map("keys" -> Validator.ruleKeys(rule).mkString(","))
+      this match {
+        case _: Unique => keys
+        case _: Dense => keys ++ Map("index" -> key.index.get, "unit" -> "groups")
+        case m: Monotone =>
+          keys ++ Map("order_by" -> key.index.get, "value" -> m.value, "unit" -> "groups")
+        case g: Grammar => keys ++ Map("order_by" -> key.index.get, "value" -> g.value,
           "edges" -> g.pairs.map { case (f, t) => s"$f->$t" }.mkString(","), "unit" -> "groups")
-      })
+        case o: Orphan => Map("ref_table" -> o.refTable, "ref_column" -> o.refColumn)
+      }
+    }
+    /** Metadata of the member's global verdict promoted from the partition
+      * roll-up. */
+    def promotedMetadata: Map[String, String] =
+      metadata.filter(kv => Set("keys", "unit", "ref_table", "ref_column")(kv._1)) +
+        ("partitioned" -> "true")
   }
   final case class Unique(rule: ValidationRule, key: Key) extends Member
   final case class Dense(rule: ValidationRule, key: Key, start: Option[Long]) extends Member
@@ -65,12 +78,29 @@ private[graft] object GroupWalk {
       Some(Seq(col(key.index.get), col(value).cast(StringType)))
   }
 
-  val families: Set[String] = Set(RuleType.Uniqueness, RuleType.Sequence,
-    RuleType.Monotonic, RuleType.Transition)
+  /** A referential rule: the rows whose non-NULL key has no match among
+    * the dim's non-NULL `refColumn` values. Its key is its column alone;
+    * orphanhood depends on nothing else, so it may ride any walk grouped by
+    * that column. `g` counts every row, `f` the orphan rows. */
+  final case class Orphan(rule: ValidationRule, key: Key, dim: DataFrame, refTable: String,
+      refColumn: String, broadcastDim: Boolean) extends Member {
+    /** The dim's distinct non-NULL keys as column `name`: broadcast when
+      * the rule asks for it, else hinted to a shuffled hash join (the dim
+      * may be large). */
+    def dimKeys(name: String): DataFrame = {
+      val d = dim.select(col(refColumn).as(name)).where(col(name).isNotNull).distinct()
+      if (broadcastDim) broadcast(d) else d.hint("shuffle_hash")
+    }
+  }
 
-  /** Parse `rule`'s parameters and resolve its columns against `df`.
-    * Left: the error the rule reports as its own result. */
-  def member(df: DataFrame, rule: ValidationRule): Either[Throwable, Member] =
+  val families: Set[String] = Set(RuleType.Uniqueness, RuleType.Sequence,
+    RuleType.Monotonic, RuleType.Transition, RuleType.Referential)
+
+  /** Parse `rule`'s parameters and resolve its columns against `df` (and a
+    * referential rule's dim, named through `resolve`). Left: the error the
+    * rule reports as its own result. */
+  def member(df: DataFrame, rule: ValidationRule,
+      resolve: String => Option[DataFrame]): Either[Throwable, Member] =
     try {
       val keys = Validator.ruleKeys(rule)
       val m = rule.ruleType match {
@@ -83,20 +113,48 @@ private[graft] object GroupWalk {
         case RuleType.Monotonic =>
           val (orderCol, valueCol, strict, desc) = RulePlanner.monotonicParams(rule)
           Monotone(rule, Key(keys, Some(orderCol)), valueCol, strict, desc)
+        case RuleType.Referential =>
+          val refTable = rule.param("ref_table").getOrElse(throw new IllegalArgumentException(
+            s"referential rule '${rule.name}' needs ref_table"))
+          val dim = resolve(refTable).getOrElse(
+            throw new IllegalArgumentException(s"unknown ref_table '$refTable'"))
+          Orphan(rule, Key(Seq(rule.column), None), dim, refTable,
+            rule.param("ref_column").getOrElse(rule.column), rule.paramBool("broadcast"))
         case _ =>
           val (orderCol, valueCol, pairs, first, last) = RulePlanner.transitionParams(rule)
           Grammar(rule, Key(keys, Some(orderCol)), valueCol, pairs, first, last)
       }
-      // analysis is eager: a missing column raises here, before planning
-      df.select((m.key.groups ++ m.key.index ++ m.values).map(col): _*)
+      // analysis is eager: a missing column (or, for a referential rule, a
+      // missing dim column or incomparable key types) raises here
+      val cols = df.select((m.key.groups ++ m.key.index ++ m.values).map(col): _*)
+      m match {
+        case o: Orphan =>
+          cols.join(o.dimKeys("__d"), col(o.key.groups.head) === col("__d"), "left_semi")
+        case _ => ()
+      }
       Right(m)
     } catch { case e: Throwable => Left(e) }
+
+  /** The walks of `members`: one per distinct key, each with the members
+    * sharing it. A referential member joins the first walk grouped by its
+    * column alone, whatever that walk's index; with none, it walks alone
+    * (no order, so no Sort). */
+  def walks(members: Seq[Member]): Seq[(Key, Seq[Member])] = {
+    val (orphans, walkers) = members.partition(_.isInstanceOf[Orphan])
+    val keys = walkers.map(_.key).distinct
+    def host(o: Member) = keys.find(_.groups.map(_.toLowerCase) == o.key.groups.map(_.toLowerCase))
+      .getOrElse(o.key)
+    (keys ++ orphans.map(host)).distinct.map(k =>
+      k -> (walkers.filter(_.key == k) ++ orphans.filter(host(_) == k)))
+  }
 
   /** The walk's roll-up: one row per partition — `__part`, then `g<j>`
     * and `f<j>` (longs) for member j. For a uniqueness member `g` is the
     * partition's rows and `f` its duplicate rows (rows − distinct keys);
-    * for the group-unit families `g` counts the member's key groups and
-    * `f` the violating ones. All members share `key`. An empty `df` has no
+    * for a referential member `g` is the partition's rows and `f` its
+    * orphan rows; for the group-unit families `g` counts the member's key
+    * groups and `f` the violating ones. Every member's key is `key`, or
+    * for a referential member `key`'s group columns. An empty `df` has no
     * row. */
   def frame(df: DataFrame, key: Key, members: Seq[Member], part: Column): DataFrame = {
     val partKey = Checks.partGroupCol(df, part)
@@ -105,10 +163,13 @@ private[graft] object GroupWalk {
     val byKey = col("__part") +: key.groups.indices.map(i => col(s"__k$i"))
     val dense = members.exists(_.isInstanceOf[Dense])
     val uniques = members.exists(_.isInstanceOf[Unique])
+    val orphans = members.exists(_.isInstanceOf[Orphan])
+    // `__rows` per group: uniqueness and referential members count rows
+    val counted = uniques || orphans
     val orders = members.flatMap(_.order).distinctBy(_.map(_.toString))
     def aggregate(d: DataFrame, aggs: Seq[Column]) = d.groupBy(byKey: _*).agg(aggs.head, aggs.tail: _*)
 
-    // per-(partition, K) stats: `__rows`/`__dups` for uniqueness, the sequence
+    // per-(partition, K) stats: `__rows`, `__dups` for uniqueness, the sequence
     // family's (n_distinct, min_idx, max_idx), `__n<j>`/`__b<j>` (included
     // rows, violating rows) and the accept flag `__e<j>` of the rest
     val stats = if (orders.isEmpty) {
@@ -117,8 +178,8 @@ private[graft] object GroupWalk {
         .agg(count(lit(1)).as("__rows"))
       if (!dense) g1.withColumn("__dups", col("__rows") - 1L)
       else aggregate(g1,
-        (if (uniques) Seq(sum("__rows").as("__rows"),
-          (sum("__rows") - count(lit(1))).as("__dups")) else Nil) ++
+        (if (counted) Seq(sum("__rows").as("__rows")) else Nil) ++
+          (if (uniques) Seq((sum("__rows") - count(lit(1))).as("__dups")) else Nil) ++
           Seq(count(col("__i")).as("n_distinct"),
             min(col("__i")).as("min_idx"), max(col("__i")).as("max_idx")))
     } else {
@@ -161,19 +222,31 @@ private[graft] object GroupWalk {
         case _ => Nil
       }
       aggregate(df.select(keyOut ++ newIndex ++ flags: _*),
-        (if (uniques) Seq(count(lit(1)).as("__rows"),
-          (count(lit(1)) - count(when(col("__new"), 1))).as("__dups")) else Nil) ++
+        (if (counted) Seq(count(lit(1)).as("__rows")) else Nil) ++
+          (if (uniques) Seq((count(lit(1)) - count(when(col("__new"), 1))).as("__dups")) else Nil) ++
           (if (dense) Seq(count(when(col("__i").isNotNull && col("__new"), 1)).as("n_distinct"),
             min(col("__i")).as("min_idx"), max(col("__i")).as("max_idx")) else Nil) ++
           memberAggs)
     }
 
+    // referential member j: `__d<j>` is the matching dim key, NULL for an
+    // orphan group (the dim keys are distinct, so no group row repeats).
+    // The group rows cross an exchange on K first: adaptive execution runs
+    // a stage only once its input stages are done, so a join inside the
+    // walk's scan stage would hold the scan until the dim's stages end
+    val joined = members.zipWithIndex.foldLeft(
+        if (orphans) stats.repartition(col("__k0")) else stats) {
+      case (s, (o: Orphan, j)) => s.join(o.dimKeys(s"__d$j"), col("__k0") === col(s"__d$j"), "left")
+      case (s, _) => s
+    }
     val perGroup = members.zipWithIndex.flatMap { case (m, j) =>
       def unit(exists: Column, violating: Column) = Seq(
         when(exists, 1L).otherwise(0L).as(s"g$j"),
         when(exists && violating, 1L).otherwise(0L).as(s"f$j"))
       m match {
         case _: Unique => Seq(col("__rows").as(s"g$j"), col("__dups").as(s"f$j"))
+        case _: Orphan => Seq(col("__rows").as(s"g$j"),
+          when(col("__k0").isNotNull && col(s"__d$j").isNull, col("__rows")).otherwise(0L).as(s"f$j"))
         case d: Dense => unit(col("n_distinct") > 0L, Checks.sequenceViolationCond(d.start))
         case _: Monotone => unit(col(s"__n$j") > 0L, col(s"__b$j") > 0L)
         case g: Grammar => unit(col(s"__n$j") > 0L, col(s"__b$j") > 0L ||
@@ -181,7 +254,7 @@ private[graft] object GroupWalk {
       }
     }
     val sums = members.indices.flatMap(j => Seq(sum(s"g$j").as(s"g$j"), sum(s"f$j").as(s"f$j")))
-    stats.select(col("__part") +: perGroup: _*)
+    joined.select(col("__part") +: perGroup: _*)
       .groupBy(col("__part")).agg(sums.head, sums.tail: _*)
   }
 }

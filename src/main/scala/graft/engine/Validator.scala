@@ -35,10 +35,10 @@ class Validator(
     * unpartitioned case of [[executeRulesPartitioned]], with the same plan.
     * Fusible rules share ONE aggregate job; all drift rules share one
     * multi-histogram scan per table side; uniqueness, sequence, monotonic
-    * and transition rules share one group-walk job per walk key (see
-    * [[GroupWalk]]); each referential rule and each custom SQL rule is its
-    * own job. Result order matches rule order (globals first — observable
-    * contract). */
+    * and transition rules share one group-walk job per walk key, and a
+    * referential rule rides the walk grouped by its column (see
+    * [[GroupWalk]]); each custom SQL rule is its own job. Result order
+    * matches rule order (globals first — observable contract). */
   def executeRules(df: DataFrame, rules: Seq[ValidationRule], tableName: String): ValidationSummary =
     executeRulesPartitioned(df, rules, tableName, None)._1
 
@@ -63,9 +63,12 @@ class Validator(
     *    takes its global verdict from that walk's roll-up; every other rule
     *    gets it from a second walk per key over one constant partition,
     *    which is also the only walk of an unpartitioned pass;
-    *  - referential: the violation rows are counted grouped by the
-    *    expression, and the global verdict is their roll-up — one anti-join
-    *    job serves both levels. */
+    *  - referential: a member of the partition-level walk grouped by its
+    *    column (or of its own hash walk); orphan rows per partition, and
+    *    the global verdict is their roll-up (orphanhood is per row);
+    *  - drift: the histogram scan groups by (partition, bucket), started
+    *    with the pass — its totals are histogram sums, never the fused
+    *    job's. */
   def executeRulesPartitioned(
       df: DataFrame, rules: Seq[ValidationRule], tableName: String,
       partitionExpr: Option[org.apache.spark.sql.Column]): (ValidationSummary, Seq[PartitionVerdict]) = {
@@ -161,55 +164,42 @@ class Validator(
     }
     lazy val totalCount: Option[Long] = fusedOutcome.toOption.map(_._1)
 
-    // 2. all drift rules batched: one multi-histogram job over df + one per
-    // distinct baseline table (instead of 2 jobs per rule). With a partition
-    // expression the SAME scan groups by (partition, bucket), so global AND
-    // per-partition drift verdicts cost one pass.
-    //
-    // Sections 2 (drift) and 2b (uniqueness + referential) are INDEPENDENT
-    // given the fused pass's partition totals, so their Spark jobs are
-    // submitted CONCURRENTLY (Validator.sectionPool): sequential submission
-    // left each job's ramp-up/tail idling the rest of the cluster — the
-    // bench instrumentation measured only ~60% average core-busy at 32
-    // threads. Overlapping independent jobs is the same move a multi-tenant
-    // cluster scheduler makes; results are assembled by rule name, so
-    // ordering semantics are unchanged. Each section still catches its own
-    // errors into per-rule failure results.
+    // The sections below are INDEPENDENT Spark jobs submitted CONCURRENTLY
+    // on Validator.sectionPool, all before any section result is awaited,
+    // so each job's ramp-up and tail overlaps the others. Results are
+    // assembled by rule name, so ordering semantics are unchanged; each
+    // section catches its own errors into per-rule failure results.
     // the fused pass's partition totals — forcing this AWAITS the fused job
     // (sections do it after their own Spark jobs have been submitted/run)
-    lazy val partTotalsEarly: Map[String, Long] = fusedOutcome.toOption.map(_._4).getOrElse(Map.empty)
+    lazy val partTotals: Map[String, Long] = fusedOutcome.toOption.map(_._4).getOrElse(Map.empty)
     implicit val ec: scala.concurrent.ExecutionContext = Validator.sectionPool
-    // drift/outlier need the fused totals BEFORE their scan (the grouping
-    // decision and cached total feed the scan shape), so they await inside
-    // their futures — serialized after fused like before, but overlapping
-    // every other section
-    val driftF: Future[(Map[String, ValidationResult], Seq[PartitionVerdict])] = SparkFuture(sc) {
-      sc.setJobDescription(s"$tableName drift-batch")
-      executeDriftBatch(df, rules.filter(_.ruleType == RuleType.drift), totalCount,
-        partitionExpr.filter(_ => partTotalsEarly.nonEmpty), partTotalsEarly)
-    }
+    // 2. all drift rules batched: one multi-histogram scan over df, grouped
+    // by the partition expression when one is given, and one per distinct
+    // baseline table — submitted now, since drift takes its totals from its
+    // own histograms, never from the fused job
+    val drift = submitDriftBatch(df, rules.filter(_.ruleType == RuleType.drift),
+      partitionExpr, tableName)
     // 2c. all outlier rules batched: one fused moments job + one (optionally
-    // partition-grouped) counting job for every outlier rule together —
-    // overlaps the drift scan and the uniqueness/referential jobs. Rules
-    // referencing missing columns fall through to executeSingle, which
-    // surfaces the real analysis error per rule.
-    val outlierF: Future[(Map[String, ValidationResult], Seq[PartitionVerdict])] = SparkFuture(sc) {
-      sc.setJobDescription(s"$tableName outlier-batch")
-      executeOutlierBatch(df,
-        rules.filter(r => r.ruleType == RuleType.Outlier &&
-          r.columns.forall(c => schema.fieldNames.exists(_.equalsIgnoreCase(c)))),
-        totalCount, partitionExpr.filter(_ => partTotalsEarly.nonEmpty), partTotalsEarly)
-    }
+    // partition-grouped) counting job for every outlier rule together. It
+    // awaits the fused totals inside its future, so a pass without outlier
+    // rules submits none. Rules referencing missing columns fall through to
+    // executeSingle, which surfaces the real analysis error per rule.
+    val outlierRules = rules.filter(r => r.ruleType == RuleType.Outlier &&
+      r.columns.forall(c => schema.fieldNames.exists(_.equalsIgnoreCase(c))))
+    val outlierF: Future[(Map[String, ValidationResult], Seq[PartitionVerdict])] =
+      if (outlierRules.isEmpty) Future.successful((Map.empty, Nil))
+      else SparkFuture(sc) {
+        sc.setJobDescription(s"$tableName outlier-batch")
+        executeOutlierBatch(df, outlierRules, totalCount,
+          partitionExpr.filter(_ => partTotals.nonEmpty), partTotals)
+      }
 
-    // 2b. partitioned referential + the grouped per-key families:
-    // per-partition verdicts, and for referential the global verdict rides
-    // the same grouped job. A grouped rule declaring
-    // `partition_covers_key=true` (the partition expression is a function
-    // of a subset of its key columns, so equal keys are always
-    // co-partitioned) also gets its GLOBAL verdict from the roll-up — the
-    // table-wide job disappears. The walk families are served on every
-    // path, partitioned or not.
-    def partTotals: Map[String, Long] = partTotalsEarly
+    // 2b. the grouped per-key families: per-partition verdicts, and a
+    // grouped rule declaring `partition_covers_key=true` (the partition
+    // expression is a function of a subset of its key columns, so equal
+    // keys are always co-partitioned) also gets its GLOBAL verdict from the
+    // roll-up — the table-wide job disappears. The walk families are
+    // served on every path, partitioned or not.
     type Grouped = (String, Option[ValidationResult], Seq[PartitionVerdict])
     // one grouped job per rule (functional_dependency, diff and the binary
     // families below), FLAT (no nested awaits on the bounded pool). On
@@ -235,41 +225,28 @@ class Validator(
             verdicts)
         } catch { case e: Throwable => (r.name, Some(ValidationResult.failure(r, e, ms)), Nil) }
       }
-    // OPTIMISTIC submission: grouped jobs no longer wait for the fused scan
-    // (they consume partTotals by-name, after their own collect). When the
-    // fused pass yields NO totals (empty table or fused failure) their
-    // results are DISCARDED at assembly below, reproducing the old gate's
-    // observable behavior on those paths.
-    val refFs = partitionExpr match {
-      case Some(p) =>
-        rules.filter(_.ruleType == RuleType.Referential).map { r =>
-          r.name -> SparkFuture(sc) {
-            sc.setJobDescription(s"$tableName rule:${r.name}")
-            referentialPartitioned(df, r, p, partTotals, totalCount)
-          }
-        }
-      case _ => Nil
-    }
-    // uniqueness + sequence + monotonic + transition: every verdict comes
-    // from a group walk (see [[GroupWalk]]), ONE future per walk key and
-    // level. The partition level (partitioned pass only) gives every
-    // member's per-partition verdicts and, for a member declaring
-    // `partition_covers_key=true`, its global verdict; the global level
-    // walks every other member over one constant partition, since a group
-    // that straddles partitions is walked in pieces. Global verdicts take
-    // their totals from the walk itself, never from the fused job. A rule
-    // whose parameters or columns do not resolve reports its own error; a
-    // walk failing at runtime re-runs its members one at a time — unless
-    // the failure is one no member can cause (a cancelled job or job
+    // uniqueness + sequence + monotonic + transition + referential: every
+    // verdict comes from a group walk (see [[GroupWalk]]), ONE future per
+    // walk and level. The partition level (partitioned pass only) gives
+    // every member's per-partition verdicts and the global verdict of a
+    // referential member (orphanhood is per row, so partition counts always
+    // sum to the global one) or of a member declaring
+    // `partition_covers_key=true`; the global level walks every other
+    // member over one constant partition, since a group that straddles
+    // partitions is walked in pieces. Global verdicts take their totals
+    // from the walk itself, never from the fused job. A rule whose
+    // parameters, columns or ref_table do not resolve reports its own
+    // error; a walk failing at runtime re-runs its members one at a time —
+    // unless the failure is one no member can cause (a cancelled job or job
     // group, an interrupt, a stopped context), which every member reports.
     val walkFs: Seq[Future[Seq[Grouped]]] = {
       val prepared = rules.filter(r => GroupWalk.families(r.ruleType)).map(r => r -> (for {
-        m <- GroupWalk.member(df, r)
-        covers <- scala.util.Try(partitionExpr.isDefined && r.paramBool("partition_covers_key")).toEither
+        m <- GroupWalk.member(df, r, tableResolver)
+        covers <- scala.util.Try(partitionExpr.isDefined && (m.isInstanceOf[GroupWalk.Orphan] ||
+          r.paramBool("partition_covers_key"))).toEither
       } yield m -> covers))
       val members = prepared.collect { case (_, Right(mc)) => mc }
       val covers = members.collect { case (m, true) => m.rule.name }.toSet
-      def byKey(ms: Seq[GroupWalk.Member]) = ms.map(_.key).distinct.map(k => ms.filter(_.key == k))
       def failed(r: ValidationRule, tu: Long, e: Throwable): Grouped =
         (r.name, Some(ValidationResult.failure(r, e, (System.nanoTime() - tu) / 1e6)), Nil)
       // the `j`-th member's global verdict: its (g, f) sums over the rows
@@ -277,32 +254,31 @@ class Validator(
           promoted: Boolean) =
         ValidationResult.verdict(m.rule, rows.map(_.getLong(2 + 2 * j)).sum,
           rows.map(_.getLong(1 + 2 * j)).sum, (System.nanoTime() - tu) / 1e6,
-          if (!promoted) m.metadata
-          else m.metadata.filter(kv => kv._1 == "keys" || kv._1 == "unit") + ("partitioned" -> "true"))
-      def walk(level: String, p: Option[Column])(ms: Seq[GroupWalk.Member])(
+          if (promoted) m.promotedMetadata else m.metadata)
+      def walk(level: String, p: Option[Column])(w: (GroupWalk.Key, Seq[GroupWalk.Member]))(
           outcome: (GroupWalk.Member, Int, Array[org.apache.spark.sql.Row], Long) => Grouped) =
         SparkFuture(sc) {
           val tu = System.nanoTime()
           sc.setJobDescription(s"$tableName $level")
-          def run(ms: Seq[GroupWalk.Member]): Seq[Grouped] =
-            (try Right(walkRows(df, ms, p))
+          def run(key: GroupWalk.Key, ms: Seq[GroupWalk.Member]): Seq[Grouped] =
+            (try Right(walkRows(df, key, ms, p))
              catch { case e: Throwable => Left(e) }) match {
               case Right(rows) => ms.zipWithIndex.map { case (m, j) =>
                 try outcome(m, j, rows, tu) catch { case e: Throwable => failed(m.rule, tu, e) }
               }
               case Left(e) if ms.size > 1 && !Validator.cancelled(sc, e) =>
-                ms.flatMap(m => run(Seq(m)))
+                ms.flatMap(m => run(m.key, Seq(m)))
               case Left(e) => ms.map(m => failed(m.rule, tu, e))
             }
-          run(ms)
+          run(w._1, w._2)
         }
       prepared.collect { case (r, Left(e)) => Future.successful(Seq(failed(r, System.nanoTime(), e))) } ++
-        partitionExpr.toSeq.flatMap(p => byKey(members.map(_._1)).map(walk("group-walk", Some(p))(_) {
+        partitionExpr.toSeq.flatMap(p => GroupWalk.walks(members.map(_._1)).map(walk("group-walk", Some(p))(_) {
           // an empty table has nothing to promote
           (m, j, rows, tu) => (m.rule.name, Option.when(covers(m.rule.name))(
             rollup(m, j, rows, tu, promoted = rows.nonEmpty)), walkMemberVerdicts(m, j, rows, partTotals))
         })) ++
-        byKey(members.collect { case (m, false) => m }).map(walk("group-walk global", None)(_) {
+        GroupWalk.walks(members.collect { case (m, false) => m }).map(walk("group-walk global", None)(_) {
           (m, j, rows, tu) => (m.rule.name, Some(rollup(m, j, rows, tu, promoted = false)), Nil)
         })
     }
@@ -372,24 +348,24 @@ class Validator(
           } catch { case _: Throwable => Nil }
         }
       else Nil
-    // 3. remaining rules (referential, functional_dependency and diff on
-    // the UNPARTITIONED path, custom SQL, stragglers) — each is an
+    // 3. remaining rules (functional_dependency and diff on the
+    // UNPARTITIONED path, custom SQL, stragglers) — each is an
     // independent Spark job, submitted HERE, BEFORE any section await, so
     // single-rule jobs overlap the drift and grouped sections instead of
     // starting after the last of them completed. Which rules end up
     // uncovered is exactly predictable from the section routing above: the
     // fused map (already resolved), drift/outlier by type, the walk
     // families always, and — when the grouped sections are active —
-    // referential plus functional_dependency and diff rules that promote
-    // their roll-up via partition_covers_key. The results list still
+    // functional_dependency and diff rules that promote their roll-up via
+    // partition_covers_key. The results list still
     // preserves overall rule order (assembled by name), and per-rule error
     // isolation is unchanged: executeSingle catches into a failure result,
     // so a Future here never fails.
     // prediction must not force the fused future: fusible coverage comes
     // from the (driver-side) admission list, grouped coverage optimistically
     // from the partition expression alone. A misprediction — the fused job
-    // failed, or it yielded no totals and the referential/FD/diff results
-    // get discarded below — lands in the assembly safety net (inline
+    // failed, or it yielded no totals and the FD/diff results get
+    // discarded below — lands in the assembly safety net (inline
     // executeSingle).
     val fusibleNames = wellFormedFusible.map(_.name).toSet
     val groupedActive = partitionExpr.isDefined
@@ -400,11 +376,10 @@ class Validator(
         r.ruleType == RuleType.drift ||
         (r.ruleType == RuleType.Outlier &&
           r.columns.forall(c => schema.fieldNames.exists(_.equalsIgnoreCase(c)))) ||
-        (groupedActive && (r.ruleType == RuleType.Referential ||
-          (groupedFamilies(r.ruleType) &&
-            // any flag but `false` is covered: the grouped future owns the
-            // result, and a malformed flag's parse error surfaces there
-            r.parameters.get("partition_covers_key").exists(_ != "false"))))
+        (groupedActive && groupedFamilies(r.ruleType) &&
+          // any flag but `false` is covered: the grouped future owns the
+          // result, and a malformed flag's parse error surfaces there
+          r.parameters.get("partition_covers_key").exists(_ != "false"))
     val singleFs: Map[String, Future[ValidationResult]] = rules
       .filterNot(coveredPredicted)
       .map(r => r.name -> SparkFuture(sc) {
@@ -412,19 +387,18 @@ class Validator(
         executeSingle(df, r, tableName, totalCount)
       }).toMap
 
-    val (driftResults, driftVerdicts) = Await.result(driftF, Duration.Inf)
+    val (driftResults, driftVerdicts) = drift()
     val (outlierResults, outlierVerdicts) = Await.result(outlierF, Duration.Inf)
-    val refPairsAll = refFs.map { case (n, f) => n -> Await.result(f, Duration.Inf) }
     val walked = walkFs.flatMap(f => Await.result(f, Duration.Inf))
     val groupedAll = fdDiffFs.map(f => Await.result(f, Duration.Inf)) ++
       cardFs.map(f => Await.result(f, Duration.Inf))
     // discard the optimistically-run grouped results and every per-partition
     // verdict when the fused pass yielded no partition totals (empty table
     // or fused failure) — the old submission gate's observable behavior on
-    // those paths: the affected non-walk rules fall through to isolated
-    // single jobs in the assembly below. Walk results never depend on it.
+    // those paths: the affected FD/diff rules fall through to isolated
+    // single jobs in the assembly below. Walk and drift global verdicts
+    // never depend on it.
     val keepGrouped = partTotals.nonEmpty
-    val refPairs = if (keepGrouped) refPairsAll else Nil
     val grouped = if (keepGrouped) groupedAll else Nil
     // a walk rule has one result per level it joined: a failure (the −1
     // sentinel) at either level is the rule's result
@@ -432,9 +406,8 @@ class Validator(
       n -> outs.flatMap(_._2).minBy(_.failed_count)
     }
     val (specialResults, specialVerdicts): (Map[String, ValidationResult], Seq[PartitionVerdict]) =
-      (refPairs.map { case (n, (res, _)) => n -> res }.toMap ++
-        grouped.collect { case (n, Some(res), _) => n -> res }.toMap ++ walkResults,
-        refPairs.flatMap(_._2._2) ++ grouped.flatMap(_._3) ++
+      (grouped.collect { case (n, Some(res), _) => n -> res }.toMap ++ walkResults,
+        grouped.flatMap(_._3) ++
           (if (keepGrouped) walked.flatMap(_._3) else Nil) ++ rowCountVerdicts)
 
     val results: Seq[ValidationResult] = rules.map { r =>
@@ -447,9 +420,9 @@ class Validator(
                 // misprediction safety net (a section dropped a rule it was
                 // expected to own): run the isolated job now — correctness
                 // over latency. Reached by fusible rules after a failed
-                // fused job, and by referential, functional_dependency and
-                // diff rules of a partitioned pass on an empty table or
-                // after a failed fused job
+                // fused job, and by functional_dependency and diff rules of
+                // a partitioned pass on an empty table or after a failed
+                // fused job
                 .getOrElse(executeSingle(df, r, tableName, totalCount))))))
     }
 
@@ -507,7 +480,7 @@ class Validator(
 
     val summary = ValidationSummary.from(tableName, withExamples, (System.nanoTime() - t0) / 1e6)
     (summary, fusedOutcome.toOption.map(_._3).getOrElse(Nil) ++ specialVerdicts ++
-      driftVerdicts ++ outlierVerdicts)
+      (if (keepGrouped) driftVerdicts else Nil) ++ outlierVerdicts)
   }
 
   /** Per-partition verdicts from one (partition, rule) failure-count map +
@@ -522,35 +495,6 @@ class Validator(
         ValidationResult.passedOf(rule.threshold, failed, rate), failed, ptotal, rate)
     }
 
-  /** Referential rule with per-partition verdicts: ONE job — the violation
-    * rows (anti-join) counted grouped by the partition expression; the
-    * global failed count is the exact roll-up (orphanhood is row-level, so
-    * partition counts always sum to the global). */
-  private def referentialPartitioned(
-      df: DataFrame, rule: ValidationRule, p: org.apache.spark.sql.Column,
-      partTotals: => Map[String, Long],
-      cachedTotal: => Option[Long]): (ValidationResult, Seq[PartitionVerdict]) = {
-    val t0 = System.nanoTime()
-    def ms = (System.nanoTime() - t0) / 1e6
-    try {
-      val v = violations(df, rule)
-      val rows = v
-        .groupBy(Checks.partGroupCol(v, p).as("__part"))
-        .agg(count(lit(1)).as("__failed"))
-        .collect()
-      val failedByPart = rows.map(r => Checks.partKeyString(r.get(0)) -> r.getLong(1)).toMap
-      val failed = failedByPart.values.sum
-      val total = totalOf(df, cachedTotal)
-      val result = ValidationResult.verdict(rule, failed, total, ms,
-        Map("ref_table" -> rule.param("ref_table").getOrElse(""),
-          "ref_column" -> rule.param("ref_column").getOrElse(rule.column),
-          "partitioned" -> "true"))
-      (result, verdictsFrom(rule, failedByPart, partTotals))
-    } catch {
-      case e: Throwable => (ValidationResult.failure(rule, e, ms), Nil)
-    }
-  }
-
   /** The roll-up rows of one walk's members from ONE job
     * ([[GroupWalk.frame]]): per partition of `p` (one constant partition
     * when None), each member's (groups, failed) pair. With a partition
@@ -559,17 +503,18 @@ class Validator(
     * The constant partition yields at most one row and skips the limit:
     * a limit's incremental take runs a chain of jobs until it has scanned
     * every partition. */
-  private def walkRows(df: DataFrame, members: Seq[GroupWalk.Member],
+  private def walkRows(df: DataFrame, key: GroupWalk.Key, members: Seq[GroupWalk.Member],
       p: Option[org.apache.spark.sql.Column]): Array[org.apache.spark.sql.Row] = {
-    val rows = GroupWalk.frame(df, members.head.key, members, p.getOrElse(lit(0)))
+    val rows = GroupWalk.frame(df, key, members, p.getOrElse(lit(0)))
     p.fold(rows)(_ => rows.limit(maxPartitionBuckets + 1)).collect()
   }
 
   /** Per-partition verdicts of the `j`-th member of a walk from its
     * [[walkRows]]. Uniqueness: duplicates WITHIN each partition ((rows −
-    * distinct keys) per partition) over the fused pass's row totals. The
-    * group-unit families: groups and violating groups per partition. The
-    * global verdict comes from the one-partition walk unless
+    * distinct keys) per partition) over the fused pass's row totals;
+    * referential: orphan rows per partition over the same totals. The
+    * group-unit families: groups and violating groups per partition. A
+    * walk-family global verdict comes from the one-partition walk unless
     * `partition_covers_key` promotes the roll-up (cross-partition
     * duplicates are invisible inside partitions); when the partition
     * expression derives from the key — the recommended layout — the two
@@ -582,8 +527,8 @@ class Validator(
     val perPart = rows.toSeq.map(r =>
       (Checks.partKeyString(r.get(0)), r.getLong(1 + 2 * j), r.getLong(2 + 2 * j)))
     m match {
-      case _: GroupWalk.Unique =>
-        verdictsFrom(m.rule, perPart.map { case (part, _, dups) => part -> dups }.toMap, partTotals)
+      case _: GroupWalk.Unique | _: GroupWalk.Orphan =>
+        verdictsFrom(m.rule, perPart.map { case (part, _, failed) => part -> failed }.toMap, partTotals)
       case _ => unitVerdicts(m.rule, perPart.filter(_._2 > 0L), partTotals)
     }
   }
@@ -1169,228 +1114,270 @@ class Validator(
       vs
     }
 
-  /** All drift rules in one scan per table side. With `partitionExpr`, the
-    * current-side scan groups by (partition, bucket): the GLOBAL histogram
-    * is the exact roll-up and each partition's histogram is tested against
-    * the (global) baseline — drifted partitions surface individually even
-    * when the table-wide mixture looks clean, PROVIDED the partition's
-    * drift clears the rule's critical at the partition's own sample size:
-    * the chi-square statistic scales with rows, so at the same absolute
-    * critical a partition holding N/P rows needs ~P× the per-row drift
-    * intensity (significance tests have less evidence from fewer rows).
-    * For size-invariant partition sensitivity use `method: tvd`,
-    * whose critical is an effect-size threshold in [0,1]. KS is a CDF
-    * distance — already size-invariant. Contingency math is total-agnostic, so
-    * partition-vs-baseline sizes needn't match. */
-  private def executeDriftBatch(
+  /** All drift rules in one scan per table side, submitted NOW as flat
+    * futures on the section pool: the current-side scan and one scan per
+    * distinct `ref_table` baseline. Nothing waits for the fused job: every
+    * row lands in exactly one bucket per rule (NULLs in "__NULL__"), so a
+    * rule's histogram sums to the table's rows and a partition's histogram
+    * to the partition's. Returns the assembly, which awaits the scans on
+    * the caller's thread.
+    *
+    * With `partitionExpr`, the current-side scan groups by (partition,
+    * bucket): the GLOBAL histogram is the exact roll-up and each
+    * partition's histogram is tested against the (global) baseline —
+    * drifted partitions surface individually even when the table-wide
+    * mixture looks clean, PROVIDED the partition's drift clears the rule's
+    * critical at the partition's own sample size: the chi-square statistic
+    * scales with rows, so at the same absolute critical a partition holding
+    * N/P rows needs ~P× the per-row drift intensity (significance tests
+    * have less evidence from fewer rows). For size-invariant partition
+    * sensitivity use `method: tvd`, whose critical is an effect-size
+    * threshold in [0,1]. KS is a CDF distance — already size-invariant.
+    * Contingency math is total-agnostic, so partition-vs-baseline sizes
+    * needn't match. */
+  private def submitDriftBatch(
       df: DataFrame, driftRules: Seq[ValidationRule],
-      cachedTotal: Option[Long],
-      partitionExpr: Option[org.apache.spark.sql.Column] = None,
-      partTotals: Map[String, Long] = Map.empty): (Map[String, ValidationResult], Seq[PartitionVerdict]) = {
-    if (driftRules.isEmpty) return (Map.empty, Nil)
+      partitionExpr: Option[org.apache.spark.sql.Column], tableName: String)(
+      implicit ec: scala.concurrent.ExecutionContext)
+      : () => (Map[String, ValidationResult], Seq[PartitionVerdict]) = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    if (driftRules.isEmpty) return () => (Map.empty, Nil)
     val t0 = System.nanoTime()
     def ms = (System.nanoTime() - t0) / 1e6
-    try {
-      val total = totalOf(df, cachedTotal)
-      // ONE scan for all rules; grouped by partition when requested.
-      // Per-rule blast-radius isolation: a rule whose histogram overflows
-      // the bucket cap (typed, NAMED by Checks.HistogramBucketOverflow)
-      // fails individually and the healthy rest re-run without it — the
-      // retry costs one extra scan per offender, on the error path only
-      // (the outlier batch's excluded-column pattern).
-      var overflowFailures = Map.empty[String, ValidationResult]
-      // per-rule param validation BEFORE the shared scan: a malformed
-      // bucket spec (bad values list, values on ks/emd or a timestamp
-      // column) fails only ITS rule — without this, the spec-building
-      // throw would land in the outer catch and take the whole batch down
-      var active = driftRules.flatMap { r =>
-        try { driftBucket(df.schema, r); Some(r) }
-        catch {
-          case e: Throwable =>
-            overflowFailures += r.name -> ValidationResult.failure(r, e, ms); None
-        }
+    val sc = spark.sparkContext
+    type Hist = Map[String, Map[String, Long]]
+    // per-rule param validation BEFORE the shared scan: a malformed bucket
+    // spec (bad values list, values on ks/emd or a timestamp column) fails
+    // only ITS rule instead of taking the whole batch down
+    val (malformed, wellFormed) = driftRules.map(r => r -> scala.util.Try(driftBucket(df.schema, r)))
+      .partition(_._2.isFailure)
+    val specified = wellFormed.map(_._1)
+    // Per-rule blast-radius isolation: a rule whose histogram overflows the
+    // bucket cap (typed, NAMED by Checks.HistogramBucketOverflow) is dropped
+    // and the healthy rest re-run without it — the retry costs one extra
+    // scan per offender, on the error path only (the outlier batch's
+    // excluded-column pattern). None when every rule overflowed.
+    def withoutOverflows[A](rs: Seq[ValidationRule], schema: org.apache.spark.sql.types.StructType)(
+        histograms: Seq[(String, Column)] => A): (Option[A], Seq[(ValidationRule, Throwable)]) =
+      if (rs.isEmpty) (None, Nil)
+      else try (Some(histograms(rs.map(r => r.name -> driftBucket(schema, r)))), Nil)
+      catch {
+        case e: Checks.HistogramBucketOverflow if rs.exists(_.name == e.kind) =>
+          val (res, over) = withoutOverflows(rs.filterNot(_.name == e.kind), schema)(histograms)
+          (res, (rs.find(_.name == e.kind).get -> e) +: over)
       }
-      var scanned: Option[(Map[String, Map[String, Long]], Map[String, Map[String, Map[String, Long]]])] = None
-      while (scanned.isEmpty && active.nonEmpty) {
-        val specs = active.map(r => r.name -> driftBucket(df.schema, r))
-        try {
-          scanned = Some(partitionExpr match {
-            case Some(p) =>
-              val byPart = Checks.multiHistogramByPartition(df, specs, p)
-              val global = byPart.map { case (kind, parts) =>
-                kind -> parts.values.foldLeft(Map.empty[String, Long]) { (acc, h) =>
-                  h.foldLeft(acc) { case (a, (b, c)) => a + (b -> (a.getOrElse(b, 0L) + c)) }
-                }
-              }
-              (global, byPart)
-            case None => (Checks.multiHistogram(df, specs), Map.empty)
-          })
-        } catch {
-          case e: Checks.HistogramBucketOverflow if active.exists(_.name == e.kind) =>
-            val offender = active.find(_.name == e.kind).get
-            overflowFailures += e.kind -> ValidationResult.failure(offender, e, ms)
-            active = active.filterNot(_.name == e.kind)
-        }
-      }
-      if (active.isEmpty) return (overflowFailures, Nil)
-      val driftRulesActive = active
-      val (curHists, partHists) = scanned.get
-      // baseline per group: a ref_table is scanned ONCE for all its rules;
-      // a ref_state (persisted Profiler state) is read driver-side — ZERO
-      // baseline scan, the incremental-profiling face of drift: compare
-      // today's table against yesterday's persisted sketch state without
-      // re-reading yesterday's rows. ref_state baselines are exact value
-      // histograms (Profiler.columnHistogram raises on a purged sketch),
-      // so the binned-numeric ks method is rejected — its current side
-      // buckets by bin index, which a value histogram can never match.
-      val outcomes = driftRulesActive.groupBy(r => (r.param("ref_table"), r.param("ref_state")))
-          .toSeq.map { case ((refOpt, stateOpt), group) =>
-        try {
-          val baseHists: Map[String, Map[String, Long]] = (refOpt, stateOpt) match {
-            case (Some(_), Some(_)) => throw new IllegalArgumentException(
-              "drift rule takes ref_table OR ref_state, not both")
-            case (None, None) => throw new IllegalArgumentException(
-              "drift rule needs ref_table or ref_state")
-            case (None, Some(path)) =>
-              val st = Profiler.readState(path)
-              group.map { r =>
-                if (Set("ks", "emd")(r.param("method").getOrElse("chi_square"))) {
-                  // numeric incremental drift: the baseline CDF comes from
-                  // the state's mergeable KLL quantile sketch, binned to
-                  // the SAME bucket grid the current scan uses — drift vs
-                  // yesterday's numbers at zero baseline scan. The sketch
-                  // is approximate (normalized rank error, ~1.65% at
-                  // default k), so the gate must be coarser than the
-                  // baseline's own error: critical ≤ 2×error is rejected —
-                  // an approximate baseline must never decide a verdict
-                  // finer than it can see.
-                  val err = Profiler.kllRankError(st, r.column)
-                  val crit = r.paramDouble("critical").getOrElse(
-                    throw new IllegalArgumentException(
-                      s"drift rule '${r.name}' needs critical"))
-                  require(crit > 2 * err, f"drift rule '${r.name}': cdf-drift critical " +
-                    f"$crit%s is within the persisted sketch's rank error " +
-                    f"(±$err%.4f) — raise critical above ${2 * err}%.4f or use ref_table")
-                  r.name -> Profiler.columnCdfHistogram(st, r.column,
-                    r.paramDouble("lo").getOrElse(0.0),
-                    r.paramDouble("hi").getOrElse(1000.0),
-                    r.param("bins").map(_.toInt).getOrElse(64))
-                } else {
-                  // the state's sketch keys values by their JVM string form,
-                  // the current side by SQL cast-to-string — identical for
-                  // string/integral/boolean; timestamps canonicalize BOTH
-                  // faces to epoch micros (driftBucket live-side,
-                  // columnHistogram sketch-side); floats stay rejected
-                  // (NaN/"-0.0" spellings diverge between the faces)
-                  df.schema(r.column).dataType match {
-                    case org.apache.spark.sql.types.StringType
-                       | org.apache.spark.sql.types.BooleanType
-                       | org.apache.spark.sql.types.ByteType
-                       | org.apache.spark.sql.types.ShortType
-                       | org.apache.spark.sql.types.IntegerType
-                       | org.apache.spark.sql.types.LongType
-                       | org.apache.spark.sql.types.TimestampType
-                       | org.apache.spark.sql.types.TimestampNTZType => ()
-                    case other => throw new IllegalArgumentException(
-                      s"drift rule '${r.name}': ref_state baselines compare values " +
-                        s"by string form and support string/integral/boolean/timestamp " +
-                        s"columns; '${r.column}' is ${other.simpleString} — use ref_table")
-                  }
-                  // bounded-categorical projection applied to the sketch's
-                  // value keys too (driver-side fold) — both faces must
-                  // bucket identically or member/other mass would misread
-                  // as drift
-                  r.name -> Checks.projectHistogram(
-                    Profiler.columnHistogram(st, r.column,
-                      java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))),
-                    driftValues(r))
-                }
-              }.toMap
-            case (Some(refTable), None) =>
-              val baseline = tableResolver(refTable).getOrElse(
-                throw new IllegalArgumentException(s"unknown ref_table '$refTable'"))
-              // bucket by the BASELINE's own schema: each side canonicalizes
-              // its own timestamp columns; a cross-type pairing (ts vs
-              // string) surfaces as loud drift, never a silent match —
-              // type changes are the schema rule's jurisdiction
-              Checks.multiHistogram(baseline,
-                group.map(r => r.name -> driftBucket(baseline.schema, r)))
-          }
-          val perRule = group.map { rule =>
-            val critical = rule.paramDouble("critical").getOrElse(
-              throw new IllegalArgumentException(s"drift rule '${rule.name}' needs critical"))
-            val method = rule.param("method").getOrElse("chi_square")
-            val hb = baseHists.getOrElse(rule.name, Map.empty)
-            def statOf(ha: Map[String, Long]): (Double, Map[String, String]) = method match {
-              case "chi_square" =>
-                val (s, dof) = Checks.chiSquareStat(ha, hb); (s, Map("dof" -> dof.toString))
-              // effect size, not significance: total variation distance
-              // between the two NORMALIZED distributions — size-INVARIANT,
-              // so per-partition verdicts at N/P rows fire at the same drift
-              // intensity as the global one. Plain chi_square scales with
-              // rows (a partition needs ~P× the intensity to clear the same
-              // absolute critical), and even Cramér's V dilutes when one
-              // sample dwarfs the other (χ² saturates at the smaller total
-              // while grand is the larger). TVD is pure frequency distance:
-              // critical is a fraction-of-mass-moved threshold in [0,1]
-              // (e.g. 0.2), identical at any sample size.
-              case "tvd" =>
-                (Checks.totalVariationDistance(ha, hb), Map.empty[String, String])
-              // alias-grade: the familiar effect size, for configs that ask
-              // for it by name — but V dilutes under unbalanced totals, so
-              // tvd stays the recommended partition-sensitive method
-              case "cramers_v" =>
-                (Checks.cramersV(ha, hb), Map.empty[String, String])
-              // size-invariant like tvd but log-weighted: catches tail
-              // categories collapsing (2% → 0.02%) that barely move TVD;
-              // the epsilon zero-share floor is part of the contract and
-              // configurable per rule (industry gates: 0.1 / 0.25)
-              case "psi" =>
-                val eps = rule.paramDouble("epsilon").getOrElse(1e-6)
-                (Checks.psi(ha, hb, eps), Map("epsilon" -> eps.toString))
-              // symmetric, size-invariant AND bounded ([0, ln 2]) — no
-              // epsilon in the contract (zero-share buckets are finite
-              // through the mixture), so the gate is a fraction of a known
-              // maximum; the choice when psi's epsilon sensitivity is
-              // unwanted
-              case "js" =>
-                (Checks.jensenShannon(ha, hb), Map.empty[String, String])
-              case "ks"  => (Checks.ksStat(ha, hb), Map.empty[String, String])
-              // earth mover's: the INTEGRAL of the CDF gap where ks is its
-              // MAXIMUM — transport-distance-weighted, so the same mass
-              // moved across the range outweighs the same mass wobbling
-              // one bucket over (identical in ks); normalized by the
-              // observed span → critical in [0,1]. Same numeric-bucket
-              // face and ref_state KLL path as ks.
-              case "emd" => (Checks.emdStat(ha, hb), Map.empty[String, String])
-              case other => throw new IllegalArgumentException(s"unknown drift method: $other")
-            }
-            val (stat, detail) = statOf(curHists.getOrElse(rule.name, Map.empty))
-            val failed = if (stat > critical) total else 0L
-            val result = rule.name -> ValidationResult.verdict(rule, failed, total, ms,
-              detail ++ Map("method" -> method, "statistic" -> stat.toString,
-                "critical" -> critical.toString))
-            val verdicts = partHists.getOrElse(rule.name, Map.empty).toSeq.map { case (part, ha) =>
-              val (pstat, _) = statOf(ha)
-              val ptotal = partTotals.getOrElse(part, ha.values.sum)
-              val pfailed = if (pstat > critical) ptotal else 0L
-              val rate = if (ptotal == 0) 1.0 else (ptotal - pfailed).toDouble / ptotal
-              PartitionVerdict(part, rule.name,
-                ValidationResult.passedOf(rule.threshold, pfailed, rate), pfailed, ptotal, rate)
-            }
-            (result, verdicts)
-          }
-          (perRule.map(_._1), perRule.flatMap(_._2))
-        } catch {
-          case e: Throwable =>
-            (group.map(r => r.name -> ValidationResult.failure(r, e, ms)), Nil)
-        }
-      }
-      (overflowFailures ++ outcomes.flatMap(_._1).toMap, outcomes.flatMap(_._2))
-    } catch {
-      case e: Throwable =>
-        (driftRules.map(r => r.name -> ValidationResult.failure(r, e, ms)).toMap, Nil)
+    def scan[A](body: => A): Future[Either[Throwable, A]] = SparkFuture(sc) {
+      sc.setJobDescription(s"$tableName drift-batch")
+      try Right(body) catch { case e: Throwable => Left(e) }
     }
+    val current = scan(withoutOverflows(specified, df.schema) { specs =>
+      partitionExpr match {
+        case Some(p) =>
+          val byPart = Checks.multiHistogramByPartition(df, specs, p)
+          val global: Hist = byPart.map { case (kind, parts) =>
+            kind -> parts.values.foldLeft(Map.empty[String, Long]) { (acc, h) =>
+              h.foldLeft(acc) { case (a, (b, c)) => a + (b -> (a.getOrElse(b, 0L) + c)) }
+            }
+          }
+          (global, byPart)
+        case None => (Checks.multiHistogram(df, specs), Map.empty[String, Hist])
+      }
+    })
+    // a ref_table is scanned ONCE for all its rules, bucketed by the
+    // BASELINE's own schema: each side canonicalizes its own timestamp
+    // columns; a cross-type pairing (ts vs string) surfaces as loud drift,
+    // never a silent match — type changes are the schema rule's jurisdiction
+    val baselines = specified.filter(_.param("ref_state").isEmpty)
+      .flatMap(r => r.param("ref_table").map(_ -> r)).groupBy(_._1).map { case (refTable, rs) =>
+        refTable -> scan {
+          val baseline = tableResolver(refTable).getOrElse(
+            throw new IllegalArgumentException(s"unknown ref_table '$refTable'"))
+          withoutOverflows(rs.map(_._2), baseline.schema)(Checks.multiHistogram(baseline, _))
+        }
+      }
+
+    () => {
+      val cur = Await.result(current, Duration.Inf)
+      val bases = baselines.map { case (t, f) => t -> Await.result(f, Duration.Inf) }
+      val failures = malformed.collect { case (r, scala.util.Failure(e)) =>
+        r.name -> ValidationResult.failure(r, e, ms)
+      }
+      cur match {
+        case Left(e) => (driftRules.map(r => r.name -> ValidationResult.failure(r, e, ms)).toMap, Nil)
+        case Right((scanned, overflows)) =>
+          val overflowFailures = failures ++
+            overflows.map { case (r, e) => r.name -> ValidationResult.failure(r, e, ms) }
+          // no histograms only when every rule overflowed: none is active
+          val (curHists, partHists) = scanned.getOrElse((Map.empty: Hist, Map.empty[String, Hist]))
+          val driftRulesActive = specified.filterNot(r => overflows.exists(_._1.name == r.name))
+          val (results, verdicts) = driftOutcomes(df, driftRulesActive, curHists, partHists, bases, ms)
+          (overflowFailures.toMap ++ results, verdicts)
+      }
+    }
+  }
+
+  /** Verdicts of the active drift rules from their current-side
+    * histograms (`curHists`, per partition `partHists`) against their
+    * baselines: a `ref_table` baseline from its scan in `bases`, a
+    * `ref_state` one read driver-side. */
+  private def driftOutcomes(df: DataFrame, driftRulesActive: Seq[ValidationRule],
+      curHists: Map[String, Map[String, Long]],
+      partHists: Map[String, Map[String, Map[String, Long]]],
+      bases: Map[String, Either[Throwable,
+        (Option[Map[String, Map[String, Long]]], Seq[(ValidationRule, Throwable)])]],
+      ms: => Double): (Map[String, ValidationResult], Seq[PartitionVerdict]) = {
+    // baseline per group: a ref_table is scanned ONCE for all its rules;
+    // a ref_state (persisted Profiler state) is read driver-side — ZERO
+    // baseline scan, the incremental-profiling face of drift: compare
+    // today's table against yesterday's persisted sketch state without
+    // re-reading yesterday's rows. ref_state baselines are exact value
+    // histograms (Profiler.columnHistogram raises on a purged sketch),
+    // so the binned-numeric ks method is rejected — its current side
+    // buckets by bin index, which a value histogram can never match.
+    val outcomes = driftRulesActive.groupBy(r => (r.param("ref_table"), r.param("ref_state")))
+        .toSeq.map { case ((refOpt, stateOpt), group) =>
+      try {
+        val baseHists: Map[String, Map[String, Long]] = (refOpt, stateOpt) match {
+          case (Some(_), Some(_)) => throw new IllegalArgumentException(
+            "drift rule takes ref_table OR ref_state, not both")
+          case (None, None) => throw new IllegalArgumentException(
+            "drift rule needs ref_table or ref_state")
+          case (None, Some(path)) =>
+            val st = Profiler.readState(path)
+            group.map { r =>
+              if (Set("ks", "emd")(r.param("method").getOrElse("chi_square"))) {
+                // numeric incremental drift: the baseline CDF comes from
+                // the state's mergeable KLL quantile sketch, binned to
+                // the SAME bucket grid the current scan uses — drift vs
+                // yesterday's numbers at zero baseline scan. The sketch
+                // is approximate (normalized rank error, ~1.65% at
+                // default k), so the gate must be coarser than the
+                // baseline's own error: critical ≤ 2×error is rejected —
+                // an approximate baseline must never decide a verdict
+                // finer than it can see.
+                val err = Profiler.kllRankError(st, r.column)
+                val crit = r.paramDouble("critical").getOrElse(
+                  throw new IllegalArgumentException(
+                    s"drift rule '${r.name}' needs critical"))
+                require(crit > 2 * err, f"drift rule '${r.name}': cdf-drift critical " +
+                  f"$crit%s is within the persisted sketch's rank error " +
+                  f"(±$err%.4f) — raise critical above ${2 * err}%.4f or use ref_table")
+                r.name -> Profiler.columnCdfHistogram(st, r.column,
+                  r.paramDouble("lo").getOrElse(0.0),
+                  r.paramDouble("hi").getOrElse(1000.0),
+                  r.param("bins").map(_.toInt).getOrElse(64))
+              } else {
+                // the state's sketch keys values by their JVM string form,
+                // the current side by SQL cast-to-string — identical for
+                // string/integral/boolean; timestamps canonicalize BOTH
+                // faces to epoch micros (driftBucket live-side,
+                // columnHistogram sketch-side); floats stay rejected
+                // (NaN/"-0.0" spellings diverge between the faces)
+                df.schema(r.column).dataType match {
+                  case org.apache.spark.sql.types.StringType
+                     | org.apache.spark.sql.types.BooleanType
+                     | org.apache.spark.sql.types.ByteType
+                     | org.apache.spark.sql.types.ShortType
+                     | org.apache.spark.sql.types.IntegerType
+                     | org.apache.spark.sql.types.LongType
+                     | org.apache.spark.sql.types.TimestampType
+                     | org.apache.spark.sql.types.TimestampNTZType => ()
+                  case other => throw new IllegalArgumentException(
+                    s"drift rule '${r.name}': ref_state baselines compare values " +
+                      s"by string form and support string/integral/boolean/timestamp " +
+                      s"columns; '${r.column}' is ${other.simpleString} — use ref_table")
+                }
+                // bounded-categorical projection applied to the sketch's
+                // value keys too (driver-side fold) — both faces must
+                // bucket identically or member/other mass would misread
+                // as drift
+                r.name -> Checks.projectHistogram(
+                  Profiler.columnHistogram(st, r.column,
+                    java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))),
+                  driftValues(r))
+              }
+            }.toMap
+          case (Some(refTable), None) =>
+            // the baseline scan ran over every well-formed rule of the
+            // table: its overflow of a rule still active fails the group
+            val (hists, over) = bases(refTable).fold(e => throw e, identity)
+            over.find(o => group.exists(_.name == o._1.name)).foreach(o => throw o._2)
+            hists.getOrElse(Map.empty)
+        }
+        val perRule = group.map { rule =>
+          val critical = rule.paramDouble("critical").getOrElse(
+            throw new IllegalArgumentException(s"drift rule '${rule.name}' needs critical"))
+          val method = rule.param("method").getOrElse("chi_square")
+          val hb = baseHists.getOrElse(rule.name, Map.empty)
+          def statOf(ha: Map[String, Long]): (Double, Map[String, String]) = method match {
+            case "chi_square" =>
+              val (s, dof) = Checks.chiSquareStat(ha, hb); (s, Map("dof" -> dof.toString))
+            // effect size, not significance: total variation distance
+            // between the two NORMALIZED distributions — size-INVARIANT,
+            // so per-partition verdicts at N/P rows fire at the same drift
+            // intensity as the global one. Plain chi_square scales with
+            // rows (a partition needs ~P× the intensity to clear the same
+            // absolute critical), and even Cramér's V dilutes when one
+            // sample dwarfs the other (χ² saturates at the smaller total
+            // while grand is the larger). TVD is pure frequency distance:
+            // critical is a fraction-of-mass-moved threshold in [0,1]
+            // (e.g. 0.2), identical at any sample size.
+            case "tvd" =>
+              (Checks.totalVariationDistance(ha, hb), Map.empty[String, String])
+            // alias-grade: the familiar effect size, for configs that ask
+            // for it by name — but V dilutes under unbalanced totals, so
+            // tvd stays the recommended partition-sensitive method
+            case "cramers_v" =>
+              (Checks.cramersV(ha, hb), Map.empty[String, String])
+            // size-invariant like tvd but log-weighted: catches tail
+            // categories collapsing (2% → 0.02%) that barely move TVD;
+            // the epsilon zero-share floor is part of the contract and
+            // configurable per rule (industry gates: 0.1 / 0.25)
+            case "psi" =>
+              val eps = rule.paramDouble("epsilon").getOrElse(1e-6)
+              (Checks.psi(ha, hb, eps), Map("epsilon" -> eps.toString))
+            // symmetric, size-invariant AND bounded ([0, ln 2]) — no
+            // epsilon in the contract (zero-share buckets are finite
+            // through the mixture), so the gate is a fraction of a known
+            // maximum; the choice when psi's epsilon sensitivity is
+            // unwanted
+            case "js" =>
+              (Checks.jensenShannon(ha, hb), Map.empty[String, String])
+            case "ks"  => (Checks.ksStat(ha, hb), Map.empty[String, String])
+            // earth mover's: the INTEGRAL of the CDF gap where ks is its
+            // MAXIMUM — transport-distance-weighted, so the same mass
+            // moved across the range outweighs the same mass wobbling
+            // one bucket over (identical in ks); normalized by the
+            // observed span → critical in [0,1]. Same numeric-bucket
+            // face and ref_state KLL path as ks.
+            case "emd" => (Checks.emdStat(ha, hb), Map.empty[String, String])
+            case other => throw new IllegalArgumentException(s"unknown drift method: $other")
+          }
+          val ha = curHists.getOrElse(rule.name, Map.empty)
+          val (stat, detail) = statOf(ha)
+          val total = ha.values.sum
+          val failed = if (stat > critical) total else 0L
+          val result = rule.name -> ValidationResult.verdict(rule, failed, total, ms,
+            detail ++ Map("method" -> method, "statistic" -> stat.toString,
+              "critical" -> critical.toString))
+          val verdicts = partHists.getOrElse(rule.name, Map.empty).toSeq.map { case (part, ha) =>
+            val (pstat, _) = statOf(ha)
+            val ptotal = ha.values.sum
+            val pfailed = if (pstat > critical) ptotal else 0L
+            val rate = if (ptotal == 0) 1.0 else (ptotal - pfailed).toDouble / ptotal
+            PartitionVerdict(part, rule.name,
+              ValidationResult.passedOf(rule.threshold, pfailed, rate), pfailed, ptotal, rate)
+          }
+          (result, verdicts)
+        }
+        (perRule.map(_._1), perRule.flatMap(_._2))
+      } catch {
+        case e: Throwable =>
+          (group.map(r => r.name -> ValidationResult.failure(r, e, ms)), Nil)
+      }
+    }
+    (outcomes.flatMap(_._1).toMap, outcomes.flatMap(_._2))
   }
 
   /** All outlier rules in two jobs: one fused exact-moments aggregate over
@@ -1534,22 +1521,6 @@ class Validator(
           ValidationResult.verdict(rule, failed, 1L, ms,
             Map("quantile" -> v.toString, "q" -> q.toString,
               "column" -> rule.column))
-
-        case RuleType.Referential =>
-          val refTable = rule.param("ref_table").getOrElse(
-            throw new IllegalArgumentException(s"referential rule '${rule.name}' needs ref_table"))
-          val refColumn = rule.param("ref_column").getOrElse(rule.column)
-          val dim = tableResolver(refTable).getOrElse(
-            throw new IllegalArgumentException(s"unknown ref_table '$refTable'"))
-          val total = totalOf(df, cachedTotal)
-          // broadcast=true → anti-join against a broadcast dim (small dims);
-          // otherwise the sort-free union/hash-agg count (large dims)
-          val orphanCount =
-            if (rule.paramBool("broadcast"))
-              Checks.orphans(df, rule.column, dim, refColumn, broadcastDim = true).count()
-            else Checks.orphanCount(df, rule.column, dim, refColumn)
-          ValidationResult.verdict(rule, orphanCount, total, ms,
-            Map("ref_table" -> refTable, "ref_column" -> refColumn))
 
         case RuleType.Custom =>
           // pyspark convention: expression is full SQL with {table} placeholder;
@@ -1982,9 +1953,22 @@ class Validator(
     val fullF = runSet(absolute, full, "full")
     // one semi-join per distinct key set (rules on the same keys share it);
     // a rule whose key can't even be named (no columns) rides the full frame
-    val grpFs = grp.groupBy(r =>
-        scala.util.Try(Validator.ruleKeys(r).map(_.toLowerCase)).toOption)
-      .toSeq.map {
+    val byKeys = grp.groupBy(r =>
+        scala.util.Try(Validator.ruleKeys(r).map(_.toLowerCase)).toOption).toSeq
+    // the hook's table side for key set A serves every key set B ⊇ A (a row
+    // whose B-key is in the delta has its A-key there too), so the hook runs
+    // once per MINIMAL key set; lazy, so a throwing hook fails inside each
+    // frame's fallback, and thread-safe for the concurrent frames
+    val keySets = byKeys.collect { case (Some(ks), rs) => ks.toSet -> Validator.ruleKeys(rs.head) }.toMap
+    val hooked = tableFrameForKeys.map(hook => keySets.collect {
+      case (a, keys) if !keySets.keys.exists(b => b.size < a.size && b.subsetOf(a)) =>
+        lazy val table = hook(keys); a -> (() => table)
+    })
+    def tableFor(keys: Seq[String]): DataFrame = hooked.fold(full) { hs =>
+      val ks = keys.map(_.toLowerCase).toSet
+      hs.collectFirst { case (a, table) if a.subsetOf(ks) => table() }.get
+    }
+    val grpFs = byKeys.map {
         case (None, rs) => runSet(rs, full, "full")
         case (Some(_), rs) =>
           val keys = Validator.ruleKeys(rs.head)
@@ -1998,7 +1982,7 @@ class Validator(
             // few narrow columns of a few files instead of every byte. Any
             // unresolvable name → no pruning, and the rule raises its real
             // error inside executeRules
-            val table = tableFrameForKeys.map(_(keys)).getOrElse(full)
+            val table = tableFor(keys)
             val referenced = (keys ++ rs.flatMap(r =>
               Seq("index", "order_by", "value").flatMap(r.param) ++
                 r.param("dependent").toSeq.flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))))
@@ -2440,7 +2424,7 @@ object Validator {
   }
 
   /** Shared daemon pool for submitting independent rule-section Spark jobs
-    * concurrently (drift scan ∥ per-rule uniqueness ∥ referential). Sized
+    * concurrently (drift scans ∥ group walks ∥ per-rule jobs). Sized
     * for SECTION fan-out, not task parallelism — Spark's scheduler owns the
     * cores; these threads only build plans and block on job results. Flat
     * future graph only (no future awaits another on this pool). */

@@ -75,7 +75,7 @@ class BucketingSpec extends SparkSpec {
       val turns = TranscriptSuite.openTurns(spark, dir)
       val names = Set("key_uniqueness", "turn_sequence", "ts_monotonic", "role_grammar")
       val members = TranscriptSuite.rules.filter(r => names(r.name))
-        .map(r => GroupWalk.member(turns, r).toOption.get)
+        .map(r => GroupWalk.member(turns, r, _ => None).toOption.get)
       members should have size 4
       members.map(_.key).distinct should have size 1
       val walk = GroupWalk.frame(turns, members.head.key, members,

@@ -328,6 +328,151 @@ class GroupWalkSpec extends SparkSpec {
     }
   }
 
+  /** Dim of the referential tests: duplicate and NULL keys, a key no fact
+    * row has, and "a"/"b" spelled as `id` too (a differently named
+    * ref_column). */
+  private def dim: DataFrame = Seq[(Option[String], Option[String])](
+    (Some("a"), Some("a")), (Some("b"), Some("b")), (Some("b"), Some("b")),
+    (None, None), (Some("z"), None), (Some("q"), Some("q"))).toDF("conv_id", "id")
+
+  private def refRules: Seq[ValidationRule] = Seq(
+    ValidationRule("ref_b", RuleType.Referential, Seq("conv_id"), threshold = Some(0.5),
+      parameters = Map("ref_table" -> "dim", "broadcast" -> "true")),
+    ValidationRule("ref_s", RuleType.Referential, Seq("conv_id"),
+      parameters = Map("ref_table" -> "dim", "broadcast" -> "false")),
+    ValidationRule("ref_id", RuleType.Referential, Seq("conv_id"),
+      parameters = Map("ref_table" -> "dim", "ref_column" -> "id")))
+
+  /** The referential fixture: the walk fixture plus a hot orphan key. */
+  private val refRows: Seq[Turn] =
+    turnRows ++ (0 until 40).map(i => (Some("h"), "x", Some(i), Some(i.toLong), Some("user")))
+
+  /** A partition expression NOT derived from the key: conversations
+    * straddle its partitions. */
+  private def straddling: Column = pmod(coalesce(col("turn_idx"), lit(-1)), lit(3))
+
+  /** Reference result of a referential rule over `df`, globally and per
+    * partition of `p`: [[Checks.orphans]] counted, and [[Checks.orphanCount]]
+    * for the global count. */
+  private def refReference(df: DataFrame, r: ValidationRule, p: Column,
+      partitioned: Boolean): (ValidationResult, Seq[PartitionVerdict]) = {
+    val refColumn = r.param("ref_column").getOrElse("conv_id")
+    val orphans = Checks.orphans(df, "conv_id", dim, refColumn, r.paramBool("broadcast"))
+    val failed = Checks.orphanCount(df, "conv_id", dim, refColumn)
+    orphans.count() shouldBe failed
+    val byPart = orphans.groupBy(p.as("__part")).count().collect()
+      .map(x => Checks.partKeyString(x.get(0)) -> x.getLong(1)).toMap
+    val totals = df.groupBy(p.as("__part")).count().collect()
+      .map(x => Checks.partKeyString(x.get(0)) -> x.getLong(1)).toMap
+    val verdicts = totals.toSeq.map { case (part, n) =>
+      val f = byPart.getOrElse(part, 0L)
+      val rate = if (n == 0) 1.0 else (n - f).toDouble / n
+      PartitionVerdict(part, r.name, ValidationResult.passedOf(r.threshold, f, rate), f, n, rate)
+    }
+    (ValidationResult.verdict(r, failed, df.count(), 0.0,
+      Map("ref_table" -> "dim", "ref_column" -> refColumn) ++
+        (if (partitioned) Map("partitioned" -> "true") else Map.empty)), verdicts)
+  }
+
+  test("referential rules ride the walk on every entry path with the reference's results") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val walkRules = suite(covers = true)
+    val rules = refRules ++ walkRules
+    val config = ValidationConfig(tables = Seq(TableConfig("t", rules)))
+    val resolve = (n: String) => if (n == "dim") Some(dim) else None
+    val v = new Validator(spark, config, resolve)
+    def byName(s: ValidationSummary) = s.results.map(r => r.rule_name -> timeless(r)).toMap
+    def streamed(data: Seq[Turn]): ValidationSummary = {
+      val stream = MemoryStream[Turn]
+      val out = new java.util.concurrent.ConcurrentLinkedQueue[ValidationSummary]()
+      val query = StreamValidator.start(spark, stream.toDF().toDF(columns: _*), config, "t",
+        checkpointDir = java.nio.file.Files.createTempDirectory("ref_stream").toString,
+        triggerMs = 100L, onResult = o => out.add(o.summary), tableResolver = resolve)
+      try {
+        stream.addData(data)
+        query.processAllAvailable()
+      } finally query.stop()
+      out.size shouldBe 1
+      out.peek()
+    }
+    Seq(
+      "adversarial" -> refRows,
+      "empty" -> Seq.empty[Turn],
+      "all-NULL keys" -> refRows.map(_.copy(_1 = None))).foreach { case (name, data) =>
+      val df = data.toDF(columns: _*)
+      val incremental = byName(v.validateTableIncremental(df, df, "t"))
+      val global = Seq(
+        "executeRules" -> byName(v.executeRules(df, rules, "t")),
+        "validateTableIncremental" -> incremental.map {
+          case (n, r) => n -> r.copy(metadata = r.metadata - "incremental")
+        },
+        "StreamValidator" -> byName(streamed(data)))
+      refRules.foreach(r => incremental(r.name).metadata.get("incremental") shouldBe Some("full"))
+      // partitioned: by the key's bucket or straddling it, alone or beside
+      // walk rules on the same key
+      val partitioned = for {
+        (pn, p) <- Seq("keyed" -> part, "straddling" -> straddling)
+        (wn, rs) <- Seq("alone" -> refRules, "with walk rules" -> rules)
+      } yield (s"$pn, $wn", p, v.executeRulesPartitioned(df, rs, "t", Some(p)))
+      refRules.foreach { r =>
+        global.foreach { case (path, results) =>
+          withClue(s"$name / $path / ${r.name}") {
+            results(r.name) shouldBe timeless(refReference(df, r, part, partitioned = false)._1)
+          }
+        }
+        partitioned.foreach { case (path, p, (summary, verdicts)) =>
+          withClue(s"$name / executeRulesPartitioned $path / ${r.name}") {
+            val (expected, expectedVerdicts) = refReference(df, r, p, partitioned = data.nonEmpty)
+            byName(summary)(r.name) shouldBe timeless(expected)
+            verdicts.filter(_.rule_name == r.name).sortBy(x => Option(x.partition)) shouldBe
+              expectedVerdicts.sortBy(x => Option(x.partition))
+          }
+        }
+      }
+      // the walk rules beside the referential ones keep their own results
+      val (alone, aloneVerdicts) = v.executeRulesPartitioned(df, walkRules, "t", Some(part))
+      val (mixed, mixedVerdicts) = partitioned(1)._3
+      walkRules.foreach { r =>
+        withClue(s"$name / ${r.name}") {
+          byName(mixed)(r.name) shouldBe byName(alone)(r.name)
+          mixedVerdicts.filter(_.rule_name == r.name).toSet shouldBe
+            aloneVerdicts.filter(_.rule_name == r.name).toSet
+        }
+      }
+      if (name == "adversarial") Seq("ref_b", "ref_s", "ref_id").foreach { n =>
+        global.head._2(n).failed_count should be > 40L // the hot orphan and more
+      }
+    }
+  }
+
+  test("a referential rule with an unknown ref_table or ref_column fails alone") {
+    val df = refRows.toDF(columns: _*)
+    val v = new Validator(spark, ValidationConfig(), n => if (n == "dim") Some(dim) else None)
+    val good = refRules ++ suite(covers = true)
+    val badTable = ValidationRule("ref_bad_table", RuleType.Referential, Seq("conv_id"),
+      parameters = Map("ref_table" -> "no_such_dim"))
+    val badColumn = ValidationRule("ref_bad_column", RuleType.Referential, Seq("conv_id"),
+      parameters = Map("ref_table" -> "dim", "ref_column" -> "no_such_col"))
+    Seq(Some(part), None).foreach { p =>
+      val (s0, v0) = v.executeRulesPartitioned(df, good, "t", p)
+      val (s1, v1) = v.executeRulesPartitioned(df, badTable +: good :+ badColumn, "t", p)
+      val res = s1.results.map(r => r.rule_name -> r).toMap
+      res("ref_bad_table").failed_count shouldBe -1L
+      res("ref_bad_table").message should include("no_such_dim")
+      res("ref_bad_column").failed_count shouldBe -1L
+      res("ref_bad_column").message should include("no_such_col")
+      v1.filter(_.rule_name.startsWith("ref_bad")) shouldBe empty
+      good.foreach { r =>
+        withClue(s"${r.name} partitioned=${p.isDefined}") {
+          res(r.name).failed_count should be >= 0L
+          timeless(res(r.name)) shouldBe timeless(s0.results.find(_.rule_name == r.name).get)
+          v1.filter(_.rule_name == r.name).toSet shouldBe v0.filter(_.rule_name == r.name).toSet
+        }
+      }
+    }
+  }
+
   /** Distinct SQL executions among the walk jobs (`<table> group-walk`):
     * one per walk key when no walk is re-run. */
   private def walkExecutions(table: String, jobs: Seq[(String, String, String)]): Int =
@@ -340,7 +485,7 @@ class GroupWalkSpec extends SparkSpec {
       WalkGate.open.await(60, java.util.concurrent.TimeUnit.SECONDS); s != null
     }.apply(col("sub")))
     val rules = suite(covers = true)
-    val walkKeys = rules.flatMap(r => GroupWalk.member(df, r).toOption).map(_.key).distinct.size
+    val walkKeys = rules.flatMap(r => GroupWalk.member(df, r, _ => None).toOption).map(_.key).distinct.size
     walkKeys should be > 1
     val sc = spark.sparkContext
     val walksStarted = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()

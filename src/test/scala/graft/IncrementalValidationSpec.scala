@@ -115,7 +115,8 @@ class IncrementalValidationSpec extends SparkSpec {
         full.filter(col("conv_id").isin("a", "b", "c"))
       }).results.map(r => r.rule_name -> (r.failed_count, r.total_count)).toMap
     pruned shouldBe base
-    calls.get shouldBe 2 // one frame per distinct key set
+    // one hook call: the (conv_id) table side also serves (conv_id, turn_idx)
+    calls.get shouldBe 1
 
     // a hook that throws must not abort the table: the frame falls back to
     // the FULL table — correct but unpruned (larger totals, same failures)

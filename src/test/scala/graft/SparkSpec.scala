@@ -55,4 +55,39 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
     } finally sc.removeSparkListener(listener)
     seen.asScala.toSeq
   }
+
+  /** Runs `body`, then a marker job, and returns the (description, start,
+    * end) of every job that started meanwhile, in the scheduler's epoch
+    * milliseconds (end is Long.MaxValue for a job that never ended) — the
+    * marker's end arriving proves every earlier event was delivered.
+    * `onStart` sees each description as its job starts. */
+  protected def jobSpans(body: => Unit,
+      onStart: String => Unit = _ => ()): Seq[(String, Long, Long)] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val desc = Option(js.properties).map(_.getProperty("spark.job.description")).orNull
+        starts.put(js.jobId, (desc, js.time))
+        onStart(desc)
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = ends.put(je.jobId, je.time)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      val marker = s"listener-marker-${System.nanoTime()}"
+      sc.setJobDescription(marker)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      def markerEnded = starts.asScala.exists { case (id, (d, _)) => d == marker && ends.containsKey(id) }
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!markerEnded && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally sc.removeSparkListener(listener)
+    starts.asScala.toSeq.map { case (id, (d, t)) =>
+      (d, t, if (ends.containsKey(id)) ends.get(id) else Long.MaxValue)
+    }
+  }
 }

@@ -1421,16 +1421,20 @@ class ValidatorSpec extends SparkSpec {
   }
 
   private val walkRuleNames =
-    Seq("key_uniqueness", "turn_sequence", "ts_monotonic", "role_grammar")
+    Seq("key_uniqueness", "turn_sequence", "ts_monotonic", "role_grammar", "conv_referential")
 
   test("a partitioned pass runs the four walk rules as one group-walk, no per-rule jobs") {
-    val turns = Transcripts.turns(spark, TranscriptConfig(numConvs = 200L))
+    val cfg = TranscriptConfig(numConvs = 200L)
+    val turns = Transcripts.turns(spark, cfg)
+    val index = Transcripts.convIndex(spark, cfg)
     val rules = graft.bench.TranscriptSuite.rules.filter(r => walkRuleNames.contains(r.name))
     rules.map(_.name) shouldBe walkRuleNames
-    rules.foreach(_.paramBool("partition_covers_key") shouldBe true)
+    rules.init.foreach(_.paramBool("partition_covers_key") shouldBe true)
     val uncovered = rules.map(r => r.copy(parameters = r.parameters - "partition_covers_key"))
     val bucket = pmod(xxhash64(col("conv_id")), lit(8))
-    // the four rules share one walk key: one SQL execution per walk level
+    // the four rules share one walk key and the referential rule, grouped
+    // by its first column, rides it: one SQL execution per walk level (a
+    // referential rule never joins the constant-partition level)
     Seq(
       ("covered", rules, Some(bucket), Map("group-walk" -> 1)),
       ("unpartitioned", rules, None, Map("group-walk global" -> 1)),
@@ -1438,15 +1442,90 @@ class ValidatorSpec extends SparkSpec {
     ).foreach { case (name, rs, p, levels) =>
       var summary: ValidationSummary = null
       val jobs = jobsDuring {
-        summary = new Validator(spark, ValidationConfig())
+        summary = new Validator(spark, ValidationConfig(),
+          n => if (n == "conv_index") Some(index) else None)
           .executeRulesPartitioned(turns, rs, "walkjobs", p)._1
       }.filter(j => j._1 != null && j._1.startsWith("walkjobs "))
       withClue(name) {
         summary.results.map(_.failed_count).foreach(_ should be >= 0L)
+        summary.results.find(_.rule_name == "conv_referential").get.failed_count should be > 0L
         jobs.filter(_._1.contains("group-walk")).groupBy(_._1).map { case (d, js) =>
           d.stripPrefix("walkjobs ") -> js.map(_._3).distinct.size
         } shouldBe levels
         walkRuleNames.foreach(n => jobs.map(_._1) should not contain s"walkjobs rule:$n")
+      }
+    }
+  }
+
+  /** A predicate rule whose rows wait at [[FusedGate]]: the fused job
+    * cannot end before the gate opens, or 30 s pass and the first row to
+    * time out opens it. */
+  private def gatedPredicate: ValidationRule = {
+    spark.udf.register("fused_gate", (_: String) => {
+      val gate = FusedGate.open
+      if (!gate.await(30, java.util.concurrent.TimeUnit.SECONDS)) gate.countDown()
+      true
+    })
+    ValidationRule("fused_gate", RuleType.Predicate, Seq(), expression = Some("fused_gate(conv_id)"))
+  }
+
+  test("the suite pass submits no referential job, and drift starts before the fused job ends") {
+    val cfg = TranscriptConfig(numConvs = 200L)
+    def withLen(df: org.apache.spark.sql.DataFrame) = df.withColumn("text_len",
+      coalesce(org.apache.spark.sql.functions.length(col("text")), lit(0)).cast("double"))
+    val turns = withLen(Transcripts.turns(spark, cfg))
+    val baseline = withLen(Transcripts.turns(spark, Transcripts.drifted(cfg)))
+    val index = Transcripts.convIndex(spark, cfg)
+    val rules = graft.bench.TranscriptSuite.rules :+ gatedPredicate
+    val v = new Validator(spark, ValidationConfig(), {
+      case "baseline" => Some(baseline)
+      case "conv_index" => Some(index)
+      case _ => None
+    })
+    FusedGate.open = new java.util.concurrent.CountDownLatch(1)
+    var summary: ValidationSummary = null
+    // the fused job's rows wait until a drift job has started
+    val jobs = try jobSpans(
+      onStart = d => if (d == "suite drift-batch") FusedGate.open.countDown(),
+      body = {
+        summary = v.executeRulesPartitioned(turns, rules, "suite",
+          Some(pmod(xxhash64(col("conv_id")), lit(8))))._1
+      }) finally FusedGate.open.countDown()
+    summary.results.map(_.failed_count).foreach(_ should be >= 0L)
+    jobs.map(_._1) should not contain "suite rule:conv_referential"
+    val fusedEnd = jobs.filter(_._1 == "suite fused-stats").map(_._3).max
+    val driftStart = jobs.filter(_._1 == "suite drift-batch").map(_._2).min
+    driftStart should be < fusedEnd
+  }
+
+  test("concurrent passes without drift or outlier rules start their walks before their fused jobs end") {
+    val turns = Transcripts.turns(spark, TranscriptConfig(numConvs = 100L))
+    val rules = Seq(
+      ValidationRule("key_unique", RuleType.Uniqueness, Seq("conv_id", "turn_idx")),
+      gatedPredicate)
+    val tables = (0 until 4).map(i => s"gated$i")
+    val walking = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    FusedGate.open = new java.util.concurrent.CountDownLatch(1)
+    // every fused job's rows wait until all four walks have started
+    val jobs = try jobSpans(
+      onStart = d => if (d != null && d.endsWith(" group-walk global")) {
+        walking.add(d)
+        if (walking.size == tables.size) FusedGate.open.countDown()
+      },
+      body = {
+        val passes = tables.map(t => new Thread(() => {
+          new Validator(spark, ValidationConfig()).executeRules(turns, rules, t)
+          ()
+        }))
+        passes.foreach(_.start())
+        passes.foreach(_.join())
+      }) finally FusedGate.open.countDown()
+    // a walk's first job is its submission; under AQE its later stage jobs
+    // queue behind the gated tasks
+    tables.foreach { t =>
+      withClue(t) {
+        val fusedEnd = jobs.filter(_._1 == s"$t fused-stats").map(_._3).max
+        jobs.filter(_._1 == s"$t group-walk global").map(_._2).min should be < fusedEnd
       }
     }
   }
@@ -1487,4 +1566,9 @@ class ValidatorSpec extends SparkSpec {
     groupsOf("tA").distinct shouldBe Seq("g1")
     groupsOf("tB").distinct shouldBe Seq("g2")
   }
+}
+
+/** Holds every row of a gated fused job until the test opens it. */
+object FusedGate {
+  @volatile var open = new java.util.concurrent.CountDownLatch(0)
 }
