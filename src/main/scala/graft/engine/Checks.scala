@@ -302,18 +302,14 @@ object Checks {
     * needs no exchange at all. NULL handling follows the engine's
     * uniqueness conventions: a NULL dependent is ONE distinct value (the
     * pyspark-parity rule), NULL determinant keys form their own group
-    * (monotonic's convention). An optional partition expression rides both
-    * phases (as "__part") for per-(partition, group) verdicts — exactly the
-    * global answer when the partition derives from the determinant. */
-  def fdGroups(df: DataFrame, keys: Seq[String], dependent: Seq[String],
-      part: Option[Column] = None): DataFrame = {
-    val partAliased = part.map(_.as("__part")).toSeq
-    val partCol = part.map(_ => col("__part")).toSeq
-    df.groupBy(partAliased ++ (keys ++ dependent).map(col): _*)
+    * (monotonic's convention). The validator's verdicts come from the
+    * group walk ([[GroupWalk.Dependency]]); this is the row face and the
+    * reference the walk is tested against. */
+  def fdGroups(df: DataFrame, keys: Seq[String], dependent: Seq[String]): DataFrame =
+    df.groupBy((keys ++ dependent).map(col): _*)
       .agg(count(lit(1)).as("__n"))
-      .groupBy(partCol ++ keys.map(col): _*)
+      .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n_values"))
-  }
 
   /** Violation predicate over [[fdGroups]] rows: the determinant value maps
     * to more than one dependent tuple. */

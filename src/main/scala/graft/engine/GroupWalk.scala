@@ -6,12 +6,13 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
-/** One grouped walk per key: the uniqueness, sequence, monotonic and
-  * transition rules that share a walk key (group columns K, walk index I)
-  * are evaluated by ONE Spark job instead of one job each. This is the
-  * only place those four families' verdicts are computed: a partitioned
-  * pass walks over its partition expression, and a global verdict that no
-  * `partition_covers_key` roll-up gives walks over one constant partition.
+/** One grouped walk per key: the uniqueness, sequence, monotonic,
+  * transition, referential and functional_dependency rules that share a
+  * walk key (group columns K, walk index I) are evaluated by ONE Spark job
+  * instead of one job each. This is the only place those families'
+  * verdicts are computed: a partitioned pass walks over its partition
+  * expression, and a global verdict that no `partition_covers_key` roll-up
+  * gives walks over one constant partition.
   *
   * The job scans once and derives every member's per-row flags from window
   * functions partitioned by (partition, K) — one Sort per distinct walk
@@ -23,11 +24,13 @@ import org.apache.spark.sql.types.StringType
   * density as the same count over non-NULL I; a monotonic or transition
   * member's predecessor is its last INCLUDED row before this one (NULL
   * order or value rows stay in the walk but are skipped, as the
-  * single-rule pipelines filter them out). A referential rule rides the
-  * walk grouped by its column alone (see [[walks]]): it left-joins the
-  * per-(partition, K) group rows, which carry their row count, against the
-  * dim's distinct keys — no window, no Sort — so the fact table is scanned
-  * once for every key rule. */
+  * single-rule pipelines filter them out). Referential and
+  * functional_dependency rules ride any walk grouped by their columns
+  * alone (see [[walks]]), with no window and no Sort: a referential member
+  * left-joins the per-(partition, K) group rows, which carry their row
+  * count, against the dim's distinct keys; a functional_dependency member
+  * compares each group's smallest and largest dependent tuple — so the
+  * table is scanned once for every key rule. */
 private[graft] object GroupWalk {
 
   /** Group columns and walk index. The index is None only for a
@@ -54,6 +57,7 @@ private[graft] object GroupWalk {
         case g: Grammar => keys ++ Map("order_by" -> key.index.get, "value" -> g.value,
           "edges" -> g.pairs.map { case (f, t) => s"$f->$t" }.mkString(","), "unit" -> "groups")
         case o: Orphan => Map("ref_table" -> o.refTable, "ref_column" -> o.refColumn)
+        case d: Dependency => keys ++ Map("dependent" -> d.values.mkString(","), "unit" -> "groups")
       }
     }
     /** Metadata of the member's global verdict promoted from the partition
@@ -78,12 +82,16 @@ private[graft] object GroupWalk {
       Some(Seq(col(key.index.get), col(value).cast(StringType)))
   }
 
+  /** A member whose key is its group columns with no index: its verdict
+    * depends on nothing else, so it rides any walk grouped by exactly
+    * those columns, whatever that walk's index. */
+  sealed trait Rider extends Member
+
   /** A referential rule: the rows whose non-NULL key has no match among
-    * the dim's non-NULL `refColumn` values. Its key is its column alone;
-    * orphanhood depends on nothing else, so it may ride any walk grouped by
-    * that column. `g` counts every row, `f` the orphan rows. */
+    * the dim's non-NULL `refColumn` values. Its key is its column alone.
+    * `g` counts every row, `f` the orphan rows. */
   final case class Orphan(rule: ValidationRule, key: Key, dim: DataFrame, refTable: String,
-      refColumn: String, broadcastDim: Boolean) extends Member {
+      refColumn: String, broadcastDim: Boolean) extends Rider {
     /** The dim's distinct non-NULL keys as column `name`: broadcast when
       * the rule asks for it, else hinted to a shuffled hash join (the dim
       * may be large). */
@@ -93,8 +101,17 @@ private[graft] object GroupWalk {
     }
   }
 
+  /** A functional_dependency rule: a determinant group violates when it
+    * holds more than one distinct dependent tuple (`values`). Its key is
+    * its determinant. `g` counts groups, `f` those whose smallest and
+    * largest dependent tuple differ: a NULL dependent is one value and a
+    * NULL determinant its own group, as in [[Checks.fdGroups]]. */
+  final case class Dependency(rule: ValidationRule, key: Key,
+      override val values: Seq[String]) extends Rider
+
   val families: Set[String] = Set(RuleType.Uniqueness, RuleType.Sequence,
-    RuleType.Monotonic, RuleType.Transition, RuleType.Referential)
+    RuleType.Monotonic, RuleType.Transition, RuleType.Referential,
+    RuleType.FunctionalDependency)
 
   /** Parse `rule`'s parameters and resolve its columns against `df` (and a
     * referential rule's dim, named through `resolve`). Left: the error the
@@ -120,32 +137,41 @@ private[graft] object GroupWalk {
             throw new IllegalArgumentException(s"unknown ref_table '$refTable'"))
           Orphan(rule, Key(Seq(rule.column), None), dim, refTable,
             rule.param("ref_column").getOrElse(rule.column), rule.paramBool("broadcast"))
+        case RuleType.FunctionalDependency =>
+          val (determinant, dependent) = RulePlanner.fdParams(rule)
+          Dependency(rule, Key(determinant, None), dependent)
         case _ =>
           val (orderCol, valueCol, pairs, first, last) = RulePlanner.transitionParams(rule)
           Grammar(rule, Key(keys, Some(orderCol)), valueCol, pairs, first, last)
       }
       // analysis is eager: a missing column (or, for a referential rule, a
-      // missing dim column or incomparable key types) raises here
+      // missing dim column or incomparable key types; for a
+      // functional_dependency rule, an unorderable dependent) raises here
       val cols = df.select((m.key.groups ++ m.key.index ++ m.values).map(col): _*)
       m match {
         case o: Orphan =>
           cols.join(o.dimKeys("__d"), col(o.key.groups.head) === col("__d"), "left_semi")
+        case d: Dependency => cols.agg(min(tuple(d)))
         case _ => ()
       }
       Right(m)
     } catch { case e: Throwable => Left(e) }
 
+  /** A functional_dependency member's dependent tuple. */
+  private def tuple(d: Dependency): Column = struct(d.values.map(col): _*)
+
   /** The walks of `members`: one per distinct key, each with the members
-    * sharing it. A referential member joins the first walk grouped by its
-    * column alone, whatever that walk's index; with none, it walks alone
-    * (no order, so no Sort). */
+    * sharing it. A [[Rider]] joins the first walk grouped by exactly its
+    * columns, whatever that walk's index; with none, it walks on its own
+    * key (no order, so no Sort), which later riders grouped alike share. */
   def walks(members: Seq[Member]): Seq[(Key, Seq[Member])] = {
-    val (orphans, walkers) = members.partition(_.isInstanceOf[Orphan])
-    val keys = walkers.map(_.key).distinct
-    def host(o: Member) = keys.find(_.groups.map(_.toLowerCase) == o.key.groups.map(_.toLowerCase))
-      .getOrElse(o.key)
-    (keys ++ orphans.map(host)).distinct.map(k =>
-      k -> (walkers.filter(_.key == k) ++ orphans.filter(host(_) == k)))
+    val (riders, walkers) = members.partition(_.isInstanceOf[Rider])
+    def groups(k: Key) = k.groups.map(_.toLowerCase)
+    val keys = riders.foldLeft(walkers.map(_.key).distinct) { (ks, r) =>
+      if (ks.exists(groups(_) == groups(r.key))) ks else ks :+ r.key
+    }
+    def host(r: Member) = keys.find(groups(_) == groups(r.key)).get
+    keys.map(k => k -> (walkers.filter(_.key == k) ++ riders.filter(host(_) == k)))
   }
 
   /** The walk's roll-up: one row per partition — `__part`, then `g<j>`
@@ -154,8 +180,7 @@ private[graft] object GroupWalk {
     * for a referential member `g` is the partition's rows and `f` its
     * orphan rows; for the group-unit families `g` counts the member's key
     * groups and `f` the violating ones. Every member's key is `key`, or
-    * for a referential member `key`'s group columns. An empty `df` has no
-    * row. */
+    * for a [[Rider]] `key`'s group columns. An empty `df` has no row. */
   def frame(df: DataFrame, key: Key, members: Seq[Member], part: Column): DataFrame = {
     val partKey = Checks.partGroupCol(df, part)
     val ks = key.groups.map(col)
@@ -164,24 +189,33 @@ private[graft] object GroupWalk {
     val dense = members.exists(_.isInstanceOf[Dense])
     val uniques = members.exists(_.isInstanceOf[Unique])
     val orphans = members.exists(_.isInstanceOf[Orphan])
+    val dependencies = members.zipWithIndex.collect { case (d: Dependency, j) => d -> j }
+    // functional_dependency member j: the smallest (`__lo<j>`) and largest
+    // (`__hi<j>`) dependent tuple, mergeable across aggregation levels
+    def spans(lo: (Dependency, Int) => Column, hi: (Dependency, Int) => Column) =
+      dependencies.flatMap { case (d, j) => Seq(min(lo(d, j)).as(s"__lo$j"), max(hi(d, j)).as(s"__hi$j")) }
     // `__rows` per group: uniqueness and referential members count rows
     val counted = uniques || orphans
     val orders = members.flatMap(_.order).distinctBy(_.map(_.toString))
     def aggregate(d: DataFrame, aggs: Seq[Column]) = d.groupBy(byKey: _*).agg(aggs.head, aggs.tail: _*)
 
     // per-(partition, K) stats: `__rows`, `__dups` for uniqueness, the sequence
-    // family's (n_distinct, min_idx, max_idx), `__n<j>`/`__b<j>` (included
-    // rows, violating rows) and the accept flag `__e<j>` of the rest
+    // family's (n_distinct, min_idx, max_idx), the dependent spans,
+    // `__n<j>`/`__b<j>` (included rows, violating rows) and the accept flag
+    // `__e<j>` of the rest
     val stats = if (orders.isEmpty) {
-      // no member needs an order: two-phase hash aggregate, no Sort
+      // no member needs an order: hash aggregate by (partition, K, I), then
+      // by (partition, K) when a member needs whole groups; no Sort
       val g1 = df.groupBy(keyOut ++ key.index.map(i => col(i).as("__i")): _*)
-        .agg(count(lit(1)).as("__rows"))
-      if (!dense) g1.withColumn("__dups", col("__rows") - 1L)
+        .agg(count(lit(1)).as("__rows"), spans((d, _) => tuple(d), (d, _) => tuple(d)): _*)
+      if (key.index.isEmpty || !(dense || dependencies.nonEmpty))
+        g1.withColumn("__dups", col("__rows") - 1L)
       else aggregate(g1,
         (if (counted) Seq(sum("__rows").as("__rows")) else Nil) ++
           (if (uniques) Seq((sum("__rows") - count(lit(1))).as("__dups")) else Nil) ++
-          Seq(count(col("__i")).as("n_distinct"),
-            min(col("__i")).as("min_idx"), max(col("__i")).as("max_idx")))
+          (if (dense) Seq(count(col("__i")).as("n_distinct"),
+            min(col("__i")).as("min_idx"), max(col("__i")).as("max_idx")) else Nil) ++
+          spans((_, j) => col(s"__lo$j"), (_, j) => col(s"__hi$j")))
     } else {
       def walk(order: Seq[Column]) = Window.partitionBy(partKey +: ks: _*).orderBy(order: _*)
       def preceding(order: Seq[Column]) = walk(order).rowsBetween(Window.unboundedPreceding, -1)
@@ -212,6 +246,7 @@ private[graft] object GroupWalk {
           Seq(when(incl, 1L).otherwise(0L).as(s"__n$j"),
             when(incl && Checks.transitionViolCond(v, prev, lit(false), m.pairs, m.first, None), 1L)
               .otherwise(0L).as(s"__b$j")) ++ accept
+        case (d: Dependency, j) => Seq(tuple(d).as(s"__t$j"))
         case _ => Nil
       }
       def counts(j: Int) = Seq(sum(s"__n$j").as(s"__n$j"), sum(s"__b$j").as(s"__b$j"))
@@ -226,7 +261,7 @@ private[graft] object GroupWalk {
           (if (uniques) Seq((count(lit(1)) - count(when(col("__new"), 1))).as("__dups")) else Nil) ++
           (if (dense) Seq(count(when(col("__i").isNotNull && col("__new"), 1)).as("n_distinct"),
             min(col("__i")).as("min_idx"), max(col("__i")).as("max_idx")) else Nil) ++
-          memberAggs)
+          memberAggs ++ spans((_, j) => col(s"__t$j"), (_, j) => col(s"__t$j")))
     }
 
     // referential member j: `__d<j>` is the matching dim key, NULL for an
@@ -251,6 +286,7 @@ private[graft] object GroupWalk {
         case _: Monotone => unit(col(s"__n$j") > 0L, col(s"__b$j") > 0L)
         case g: Grammar => unit(col(s"__n$j") > 0L, col(s"__b$j") > 0L ||
           g.last.fold(lit(false))(_ => coalesce(col(s"__e$j") === 1L, lit(false))))
+        case _: Dependency => unit(lit(true), !(col(s"__lo$j") <=> col(s"__hi$j")))
       }
     }
     val sums = members.indices.flatMap(j => Seq(sum(s"g$j").as(s"g$j"), sum(s"f$j").as(s"f$j")))

@@ -304,6 +304,27 @@ object RulePlanner {
     (need("order_by"), need("value"), pairs, states("first"), states("last"))
   }
 
+  /** (determinant keys, dependent columns) of a functional_dependency rule.
+    * The determinant comes from columns/column, the dependent from the
+    * `dependent` parameter (comma-separated for a compound dependent).
+    * A column on BOTH sides makes the FD vacuously true — that is a
+    * configuration error, never a silent pass. Shared by the walk member
+    * and the violations face so the semantics cannot diverge. */
+  private[engine] def fdParams(rule: ValidationRule): (Seq[String], Seq[String]) = {
+    val keys = Validator.ruleKeys(rule)
+    val dep = rule.param("dependent")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .filter(_.nonEmpty)
+      .getOrElse(throw new IllegalArgumentException(
+        s"functional_dependency rule '${rule.name}' needs a dependent parameter"))
+    val overlap = keys.map(_.toLowerCase).toSet intersect dep.map(_.toLowerCase).toSet
+    if (overlap.nonEmpty)
+      throw new IllegalArgumentException(
+        s"functional_dependency rule '${rule.name}': ${overlap.mkString(",")} on both " +
+          "sides — a dependent inside the determinant is vacuously consistent")
+    (keys, dep)
+  }
+
   /** DLT-style expectation rendering: rule name → SQL KEEP-predicate
     * string — the surface a Databricks DLT migrator consumes
     * (`@dlt.expect(name, predicate)`; reference `validator.py:252-262` and

@@ -34,11 +34,12 @@ class Validator(
   /** Execute all enabled rules for `tableName` against `df` — the
     * unpartitioned case of [[executeRulesPartitioned]], with the same plan.
     * Fusible rules share ONE aggregate job; all drift rules share one
-    * multi-histogram scan per table side; uniqueness, sequence, monotonic
-    * and transition rules share one group-walk job per walk key, and a
-    * referential rule rides the walk grouped by its column (see
-    * [[GroupWalk]]); each custom SQL rule is its own job. Result order
-    * matches rule order (globals first — observable contract). */
+    * multi-histogram scan per table side and all outlier rules one batch;
+    * uniqueness, sequence, monotonic and transition rules share one
+    * group-walk job per walk key, and referential and functional_dependency
+    * rules ride the walk grouped by their columns (see [[GroupWalk]]); every
+    * other rule is its own job. Result order matches rule order (globals
+    * first — observable contract). */
   def executeRules(df: DataFrame, rules: Seq[ValidationRule], tableName: String): ValidationSummary =
     executeRulesPartitioned(df, rules, tableName, None)._1
 
@@ -50,11 +51,14 @@ class Validator(
   val maxPartitionBuckets: Int = 65536
 
   /** Like [[executeRules]] but, when `partitionExpr` is given, per-partition
-    * verdicts come out alongside the global ones:
+    * verdicts come out alongside the global ones. Every rule's global
+    * result comes from exactly one section:
     *  - fusible rules: the fused aggregate groups by the expression — global
-    *    counts are the driver-side roll-up of the SAME single pass;
-    *  - uniqueness, sequence, monotonic, transition: one group-walk job per
-    *    walk key over the partition expression (see [[GroupWalk]]); a
+    *    counts are the driver-side roll-up of the SAME single pass; when the
+    *    shared job fails, each of its rules re-runs alone;
+    *  - uniqueness, sequence, monotonic, transition, functional_dependency:
+    *    one group-walk job per walk key over the partition expression (see
+    *    [[GroupWalk]]); a
     *    partition's verdict assesses the rule WITHIN that partition
     *    (cross-partition duplicates or groups appear only in the global
     *    verdict, so per-partition failure counts sum to the global count
@@ -68,7 +72,15 @@ class Validator(
     *    the global verdict is their roll-up (orphanhood is per row);
     *  - drift: the histogram scan groups by (partition, bucket), started
     *    with the pass — its totals are histogram sums, never the fused
-    *    job's. */
+    *    job's;
+    *  - outlier: one batch for every outlier rule, its counting job grouped
+    *    by the expression;
+    *  - diff with `partition_covers_key`: its per-partition job, whose
+    *    roll-up is the global verdict;
+    *  - every other rule: its own job; the cardinality, correlation,
+    *    entropy, quantile, reconciliation and diff families add a grouped
+    *    job for the per-partition verdicts, whose error is the rule's
+    *    result. */
   def executeRulesPartitioned(
       df: DataFrame, rules: Seq[ValidationRule], tableName: String,
       partitionExpr: Option[org.apache.spark.sql.Column]): (ValidationSummary, Seq[PartitionVerdict]) = {
@@ -86,13 +98,9 @@ class Validator(
 
     // 1. one fused job for all fusible rules (optionally partition-grouped);
     // the grouped pass also yields per-partition row totals, reused by the
-    // uniqueness/referential verdicts below. The fused job runs as a FUTURE
-    // (on its own executor, so the bounded section pool can never deadlock
-    // against it): the grouped per-family jobs below only need the
-    // partition totals AFTER their own collect, so their Spark jobs now
-    // OVERLAP the fused scan instead of queueing behind it — at the
-    // 28M-turn bench shape the fused pass is ~40% of the suite wall and
-    // every other section used to start only when it finished.
+    // per-partition verdicts below. The fused job runs as a FUTURE on its
+    // own executor, so the bounded section pool can never deadlock against
+    // it, and every other section's jobs overlap it.
     val fusedStart = System.nanoTime()
     val sc = spark.sparkContext
     val fusedF: Future[Either[Throwable, (Long, Map[String, Long], Seq[PartitionVerdict], Map[String, Long])]] = SparkFuture(sc) {
@@ -107,20 +115,13 @@ class Validator(
               sum(when(RulePlanner.failCondition(schema, r), 1L).otherwise(0L))
                 .cast("long").as(s"f_$i")
             }
-            // limit(max+1) BEFORE collect: a raw high-cardinality partition
-            // expression must fail the require below, not OOM the driver
-            // materializing millions of grouped rows first. The group key is
-            // the RAW expression (numeric for the recommended bucketing
-            // expressions) — stringified driver-side over these ≤65k rows;
-            // per-row cast-to-string across the whole table was the measured
-            // CPU hot spot of the 32-thread bench (Checks.rawKeyStringable).
-            val rows = df.groupBy(Checks.partGroupCol(df, p).as("__part"))
-              .agg(count(lit(1)).as("__total"), counters: _*)
-              .limit(maxPartitionBuckets + 1)
-              .collect()
-            require(rows.length <= maxPartitionBuckets,
-              s"partition expression produced more than $maxPartitionBuckets buckets — " +
-                "use a bucketing expression like pmod(xxhash64(col), lit(32))")
+            // The group key is the RAW expression (numeric for the
+            // recommended bucketing expressions) — stringified driver-side
+            // over these ≤65k rows; per-row cast-to-string across the whole
+            // table was the measured CPU hot spot of the 32-thread bench
+            // (Checks.rawKeyStringable).
+            val rows = collectBuckets(df.groupBy(Checks.partGroupCol(df, p).as("__part"))
+              .agg(count(lit(1)).as("__total"), counters: _*))
             val total = rows.map(_.getLong(1)).sum
             val failedByRule = wellFormedFusible.zipWithIndex.map { case (r, i) =>
               r.name -> rows.map(row => if (row.isNullAt(2 + i)) 0L else row.getLong(2 + i)).sum
@@ -147,6 +148,7 @@ class Validator(
       Await.result(fusedF, Duration.Inf)
     lazy val fusedMs = (System.nanoTime() - fusedStart) / 1e6
 
+    implicit val ec: scala.concurrent.ExecutionContext = Validator.sectionPool
     lazy val fusedResults: Map[String, ValidationResult] = fusedOutcome match {
       case Right((total, failedByRule, _, _)) =>
         wellFormedFusible.map { r =>
@@ -155,12 +157,14 @@ class Validator(
         }.toMap
       case Left(_) =>
         // blast-radius recovery: the SHARED job failed (e.g. one predicate
-        // raising at runtime under ANSI — statically undetectable). Leave
-        // every fused rule UNRESOLVED so each falls through to its own
-        // isolated single-rule job below: the poisoned rule gets its real
-        // error, the healthy rules still get real verdicts — at the
-        // reference's per-rule cost, paid only on this failure path.
-        Map.empty
+        // raising at runtime under ANSI — statically undetectable), so each
+        // rule re-runs as a fused job of its own: the poisoned rule gets its
+        // real error, the healthy rules still get real verdicts — at the
+        // reference's per-rule cost, paid only on this failure path
+        wellFormedFusible.map(r => r.name -> SparkFuture(sc) {
+          sc.setJobDescription(s"$tableName fused-stats rerun")
+          executeSingle(df, r, tableName, None)
+        }).map { case (n, f) => n -> Await.result(f, Duration.Inf) }.toMap
     }
     lazy val totalCount: Option[Long] = fusedOutcome.toOption.map(_._1)
 
@@ -172,7 +176,6 @@ class Validator(
     // the fused pass's partition totals — forcing this AWAITS the fused job
     // (sections do it after their own Spark jobs have been submitted/run)
     lazy val partTotals: Map[String, Long] = fusedOutcome.toOption.map(_._4).getOrElse(Map.empty)
-    implicit val ec: scala.concurrent.ExecutionContext = Validator.sectionPool
     // 2. all drift rules batched: one multi-histogram scan over df, grouped
     // by the partition expression when one is given, and one per distinct
     // baseline table — submitted now, since drift takes its totals from its
@@ -182,10 +185,8 @@ class Validator(
     // 2c. all outlier rules batched: one fused moments job + one (optionally
     // partition-grouped) counting job for every outlier rule together. It
     // awaits the fused totals inside its future, so a pass without outlier
-    // rules submits none. Rules referencing missing columns fall through to
-    // executeSingle, which surfaces the real analysis error per rule.
-    val outlierRules = rules.filter(r => r.ruleType == RuleType.Outlier &&
-      r.columns.forall(c => schema.fieldNames.exists(_.equalsIgnoreCase(c))))
+    // rules submits none.
+    val outlierRules = rules.filter(_.ruleType == RuleType.Outlier)
     val outlierF: Future[(Map[String, ValidationResult], Seq[PartitionVerdict])] =
       if (outlierRules.isEmpty) Future.successful((Map.empty, Nil))
       else SparkFuture(sc) {
@@ -201,14 +202,12 @@ class Validator(
     // roll-up — the table-wide job disappears. The walk families are
     // served on every path, partitioned or not.
     type Grouped = (String, Option[ValidationResult], Seq[PartitionVerdict])
-    // one grouped job per rule (functional_dependency, diff and the binary
-    // families below), FLAT (no nested awaits on the bounded pool). On
-    // success a partition_covers_key roll-up is promoted to the global
-    // verdict; on failure the job's error is the rule's result (−1/−1
-    // sentinel, severity→error) — with partition_covers_key the global
-    // verdict DEPENDS on this job, and a silent Nil would fall back to the
-    // table-wide job the caller opted out of. paramBool is fail-loud: its
-    // raise lands in this rule's failure result too, never kills the await.
+    // one grouped job per rule (diff and the binary families below), FLAT
+    // (no nested awaits on the bounded pool). On success a
+    // partition_covers_key roll-up — empty or not — is the global verdict;
+    // on failure the job's error is the rule's result (−1/−1 sentinel,
+    // severity→error). paramBool is fail-loud: its raise lands in this
+    // rule's failure result too, never kills the await.
     def groupedRuleFuture(r: ValidationRule,
         run: () => Either[Throwable, Seq[PartitionVerdict]],
         extraMeta: Map[String, String]): Future[Grouped] =
@@ -218,27 +217,28 @@ class Validator(
         sc.setJobDescription(s"$tableName rule:${r.name}")
         try {
           val verdicts = run().fold(e => throw e, identity)
-          (r.name, Option.when(r.paramBool("partition_covers_key") && verdicts.nonEmpty)(
+          (r.name, Option.when(r.paramBool("partition_covers_key"))(
             ValidationResult.verdict(r, verdicts.map(_.failed_count).sum,
               verdicts.map(_.total_count).sum, ms,
               Map("keys" -> Validator.ruleKeys(r).mkString(","), "partitioned" -> "true") ++ extraMeta)),
             verdicts)
         } catch { case e: Throwable => (r.name, Some(ValidationResult.failure(r, e, ms)), Nil) }
       }
-    // uniqueness + sequence + monotonic + transition + referential: every
-    // verdict comes from a group walk (see [[GroupWalk]]), ONE future per
-    // walk and level. The partition level (partitioned pass only) gives
-    // every member's per-partition verdicts and the global verdict of a
-    // referential member (orphanhood is per row, so partition counts always
-    // sum to the global one) or of a member declaring
-    // `partition_covers_key=true`; the global level walks every other
-    // member over one constant partition, since a group that straddles
-    // partitions is walked in pieces. Global verdicts take their totals
-    // from the walk itself, never from the fused job. A rule whose
+    // uniqueness + sequence + monotonic + transition + referential +
+    // functional_dependency: every verdict comes from a group walk (see
+    // [[GroupWalk]]), ONE future per walk and level. The partition level
+    // (partitioned pass only) gives every member's per-partition verdicts
+    // and the global verdict of a referential member (orphanhood is per
+    // row, so partition counts always sum to the global one) or of a member
+    // declaring `partition_covers_key=true`; the global level walks every
+    // other member over one constant partition, since a group that
+    // straddles partitions is walked in pieces. Global verdicts take their
+    // totals from the walk itself, never from the fused job. A rule whose
     // parameters, columns or ref_table do not resolve reports its own
     // error; a walk failing at runtime re-runs its members one at a time —
     // unless the failure is one no member can cause (a cancelled job or job
-    // group, an interrupt, a stopped context), which every member reports.
+    // group, an interrupt, a stopped context, too many partition buckets),
+    // which every member reports.
     val walkFs: Seq[Future[Seq[Grouped]]] = {
       val prepared = rules.filter(r => GroupWalk.families(r.ruleType)).map(r => r -> (for {
         m <- GroupWalk.member(df, r, tableResolver)
@@ -266,7 +266,7 @@ class Validator(
               case Right(rows) => ms.zipWithIndex.map { case (m, j) =>
                 try outcome(m, j, rows, tu) catch { case e: Throwable => failed(m.rule, tu, e) }
               }
-              case Left(e) if ms.size > 1 && !Validator.cancelled(sc, e) =>
+              case Left(e) if ms.size > 1 && !Validator.sharedFailure(sc, e) =>
                 ms.flatMap(m => run(m.key, Seq(m)))
               case Left(e) => ms.map(m => failed(m.rule, tu, e))
             }
@@ -282,23 +282,11 @@ class Validator(
           (m, j, rows, tu) => (m.rule.name, Some(rollup(m, j, rows, tu, promoted = false)), Nil)
         })
     }
-    // functional_dependency + diff: one grouped job per rule yields
-    // per-partition verdicts, and partition_covers_key promotes the
-    // roll-up to the global verdict (verdict unit: groups/keys, so the
-    // global total is the verdicts' own sum, not the row-count partTotals)
-    val fdDiffFs = partitionExpr match {
-      case Some(p) =>
-        rules.filter(r => r.ruleType == RuleType.FunctionalDependency ||
-            r.ruleType == RuleType.Diff).map { r =>
-          val run = () => r.ruleType match {
-            case RuleType.Diff => diffPartitionVerdicts(df, r, p, partTotals)
-            case _             => fdPartitionVerdicts(df, r, p, partTotals)
-          }
-          val unit = if (r.ruleType == RuleType.Diff) "keys" else "groups"
-          groupedRuleFuture(r, run, Map("unit" -> unit))
-        }
-      case _ => Nil
-    }
+    // diff: one grouped job per rule yields per-partition verdicts, and
+    // partition_covers_key promotes the roll-up to the global verdict
+    // (verdict unit: keys, so the global total is the verdicts' own sum)
+    val diffFs = partitionExpr.toSeq.flatMap(p => rules.filter(_.ruleType == RuleType.Diff).map(r =>
+      groupedRuleFuture(r, () => diffPartitionVerdicts(df, r, p), Map("unit" -> "keys"))))
     // cardinality + correlation + entropy + reconciliation rules: one
     // grouped job per rule (reconciliation: one per side) for the
     // per-partition binary verdicts; the GLOBAL verdict always runs its own
@@ -348,40 +336,22 @@ class Validator(
           } catch { case _: Throwable => Nil }
         }
       else Nil
-    // 3. remaining rules (functional_dependency and diff on the
-    // UNPARTITIONED path, custom SQL, stragglers) — each is an
-    // independent Spark job, submitted HERE, BEFORE any section await, so
-    // single-rule jobs overlap the drift and grouped sections instead of
-    // starting after the last of them completed. Which rules end up
-    // uncovered is exactly predictable from the section routing above: the
-    // fused map (already resolved), drift/outlier by type, the walk
-    // families always, and — when the grouped sections are active —
-    // functional_dependency and diff rules that promote their roll-up via
-    // partition_covers_key. The results list still
-    // preserves overall rule order (assembled by name), and per-rule error
-    // isolation is unchanged: executeSingle catches into a failure result,
-    // so a Future here never fails.
-    // prediction must not force the fused future: fusible coverage comes
-    // from the (driver-side) admission list, grouped coverage optimistically
-    // from the partition expression alone. A misprediction — the fused job
-    // failed, or it yielded no totals and the FD/diff results get
-    // discarded below — lands in the assembly safety net (inline
-    // executeSingle).
+    // 3. every rule no section above owns — each is an independent Spark
+    // job, submitted HERE, BEFORE any section await, so single-rule jobs
+    // overlap the sections. The routing is exact: a section owns a rule by
+    // admission (fusible), by type (drift, outlier, the walk families) or,
+    // for a diff rule of a partitioned pass, by any partition_covers_key but
+    // `false` (its grouped future reports the promoted verdict or the
+    // flag's parse error). executeSingle catches into a failure result, so
+    // a Future here never fails.
     val fusibleNames = wellFormedFusible.map(_.name).toSet
-    val groupedActive = partitionExpr.isDefined
-    val groupedFamilies = Set(RuleType.FunctionalDependency, RuleType.Diff)
-    val coveredPredicted = (r: ValidationRule) =>
-      fusibleNames.contains(r.name) ||
-        GroupWalk.families(r.ruleType) ||
-        r.ruleType == RuleType.drift ||
-        (r.ruleType == RuleType.Outlier &&
-          r.columns.forall(c => schema.fieldNames.exists(_.equalsIgnoreCase(c)))) ||
-        (groupedActive && groupedFamilies(r.ruleType) &&
-          // any flag but `false` is covered: the grouped future owns the
-          // result, and a malformed flag's parse error surfaces there
+    val owned = (r: ValidationRule) =>
+      fusibleNames(r.name) || GroupWalk.families(r.ruleType) ||
+        r.ruleType == RuleType.drift || r.ruleType == RuleType.Outlier ||
+        (partitionExpr.isDefined && r.ruleType == RuleType.Diff &&
           r.parameters.get("partition_covers_key").exists(_ != "false"))
     val singleFs: Map[String, Future[ValidationResult]] = rules
-      .filterNot(coveredPredicted)
+      .filterNot(owned)
       .map(r => r.name -> SparkFuture(sc) {
         sc.setJobDescription(s"$tableName rule:${r.name}")
         executeSingle(df, r, tableName, totalCount)
@@ -390,40 +360,25 @@ class Validator(
     val (driftResults, driftVerdicts) = drift()
     val (outlierResults, outlierVerdicts) = Await.result(outlierF, Duration.Inf)
     val walked = walkFs.flatMap(f => Await.result(f, Duration.Inf))
-    val groupedAll = fdDiffFs.map(f => Await.result(f, Duration.Inf)) ++
-      cardFs.map(f => Await.result(f, Duration.Inf))
-    // discard the optimistically-run grouped results and every per-partition
-    // verdict when the fused pass yielded no partition totals (empty table
-    // or fused failure) — the old submission gate's observable behavior on
-    // those paths: the affected FD/diff rules fall through to isolated
-    // single jobs in the assembly below. Walk and drift global verdicts
-    // never depend on it.
+    val grouped = (diffFs ++ cardFs).map(f => Await.result(f, Duration.Inf))
+    // a grouped future's own result (its promoted verdict or its error) is
+    // always kept; every per-partition verdict is dropped when the fused
+    // pass yielded no partition totals (empty table or fused failure)
     val keepGrouped = partTotals.nonEmpty
-    val grouped = if (keepGrouped) groupedAll else Nil
     // a walk rule has one result per level it joined: a failure (the −1
     // sentinel) at either level is the rule's result
     val walkResults = walked.groupBy(_._1).map { case (n, outs) =>
       n -> outs.flatMap(_._2).minBy(_.failed_count)
     }
-    val (specialResults, specialVerdicts): (Map[String, ValidationResult], Seq[PartitionVerdict]) =
-      (grouped.collect { case (n, Some(res), _) => n -> res }.toMap ++ walkResults,
-        grouped.flatMap(_._3) ++
-          (if (keepGrouped) walked.flatMap(_._3) else Nil) ++ rowCountVerdicts)
+    val specialResults = grouped.collect { case (n, Some(res), _) => n -> res }.toMap ++ walkResults
+    val specialVerdicts =
+      (if (keepGrouped) grouped.flatMap(_._3) ++ walked.flatMap(_._3) else Nil) ++ rowCountVerdicts
 
     val results: Seq[ValidationResult] = rules.map { r =>
       fusedResults.getOrElse(r.name,
         driftResults.getOrElse(r.name,
           outlierResults.getOrElse(r.name,
-            specialResults.getOrElse(r.name,
-              singleFs.get(r.name)
-                .map(f => Await.result(f, Duration.Inf))
-                // misprediction safety net (a section dropped a rule it was
-                // expected to own): run the isolated job now — correctness
-                // over latency. Reached by fusible rules after a failed
-                // fused job, and by functional_dependency and diff rules of
-                // a partitioned pass on an empty table or after a failed
-                // fused job
-                .getOrElse(executeSingle(df, r, tableName, totalCount))))))
+            specialResults.getOrElse(r.name, Await.result(singleFs(r.name), Duration.Inf)))))
     }
 
     // opt-in violation EXAMPLES (`examples: N`, capped at 20 rows × 256
@@ -495,19 +450,26 @@ class Validator(
         ValidationResult.passedOf(rule.threshold, failed, rate), failed, ptotal, rate)
     }
 
+  /** The rows of a frame holding one row per partition, collected under
+    * the bucket guard: limit(max+1) BEFORE the collect, so a raw
+    * high-cardinality partition expression raises
+    * [[Validator.BucketOverflow]] instead of flooding the driver. A frame
+    * over one `constant` partition holds at most one row and skips the
+    * limit: a limit's incremental take runs a chain of jobs until it has
+    * scanned every partition. */
+  private def collectBuckets(frame: DataFrame,
+      constant: Boolean = false): Array[org.apache.spark.sql.Row] = {
+    val rows = (if (constant) frame else frame.limit(maxPartitionBuckets + 1)).collect()
+    if (rows.length > maxPartitionBuckets) throw new Validator.BucketOverflow(maxPartitionBuckets)
+    rows
+  }
+
   /** The roll-up rows of one walk's members from ONE job
     * ([[GroupWalk.frame]]): per partition of `p` (one constant partition
-    * when None), each member's (groups, failed) pair. With a partition
-    * expression, limit(max+1) so a raw high-cardinality expression trips
-    * the guard in [[walkMemberVerdicts]] instead of flooding the driver.
-    * The constant partition yields at most one row and skips the limit:
-    * a limit's incremental take runs a chain of jobs until it has scanned
-    * every partition. */
+    * when None), each member's (groups, failed) pair. */
   private def walkRows(df: DataFrame, key: GroupWalk.Key, members: Seq[GroupWalk.Member],
-      p: Option[org.apache.spark.sql.Column]): Array[org.apache.spark.sql.Row] = {
-    val rows = GroupWalk.frame(df, key, members, p.getOrElse(lit(0)))
-    p.fold(rows)(_ => rows.limit(maxPartitionBuckets + 1)).collect()
-  }
+      p: Option[org.apache.spark.sql.Column]): Array[org.apache.spark.sql.Row] =
+    collectBuckets(GroupWalk.frame(df, key, members, p.getOrElse(lit(0))), constant = p.isEmpty)
 
   /** Per-partition verdicts of the `j`-th member of a walk from its
     * [[walkRows]]. Uniqueness: duplicates WITHIN each partition ((rows −
@@ -522,8 +484,6 @@ class Validator(
   private def walkMemberVerdicts(m: GroupWalk.Member, j: Int,
       rows: Array[org.apache.spark.sql.Row],
       partTotals: => Map[String, Long]): Seq[PartitionVerdict] = {
-    require(rows.length <= maxPartitionBuckets,
-      s"partition expression produced more than $maxPartitionBuckets buckets")
     val perPart = rows.toSeq.map(r =>
       (Checks.partKeyString(r.get(0)), r.getLong(1 + 2 * j), r.getLong(2 + 2 * j)))
     m match {
@@ -532,43 +492,6 @@ class Validator(
       case _ => unitVerdicts(m.rule, perPart.filter(_._2 > 0L), partTotals)
     }
   }
-
-  /** (determinant keys, dependent columns) of a functional_dependency rule.
-    * The determinant comes from columns/column, the dependent from the
-    * `dependent` parameter (comma-separated for a compound dependent).
-    * A column on BOTH sides makes the FD vacuously true — that is a
-    * configuration error, never a silent pass. ONE parse for the global,
-    * per-partition, and violations faces so the semantics cannot diverge. */
-  private def fdSpec(rule: ValidationRule): (Seq[String], Seq[String]) = {
-    val keys = if (rule.columns.nonEmpty) rule.columns else Seq(rule.column)
-    val dep = rule.param("dependent")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty)
-      .getOrElse(throw new IllegalArgumentException(
-        s"functional_dependency rule '${rule.name}' needs a dependent parameter"))
-    val overlap = keys.map(_.toLowerCase).toSet intersect dep.map(_.toLowerCase).toSet
-    if (overlap.nonEmpty)
-      throw new IllegalArgumentException(
-        s"functional_dependency rule '${rule.name}': ${overlap.mkString(",")} on both " +
-          "sides — a dependent inside the determinant is vacuously consistent")
-    (keys, dep)
-  }
-
-  /** Per-partition functional-dependency verdicts from ONE grouped job:
-    * the two-phase distinct-pair aggregation additionally keyed by the
-    * partition expression. The verdict unit is GROUPS (determinant
-    * values); like sequence, `partition_covers_key=true` promotes the
-    * roll-up to the global verdict when the partition derives from the
-    * determinant (groups never straddle partitions). */
-  private def fdPartitionVerdicts(
-      df: DataFrame, rule: ValidationRule, p: org.apache.spark.sql.Column,
-      partTotals: => Map[String, Long]): Either[Throwable, Seq[PartitionVerdict]] =
-    try {
-      val (keys, dep) = fdSpec(rule)
-      Right(groupUnitVerdicts(rule,
-        Checks.fdGroups(df, keys, dep, part = Some(Checks.partGroupCol(df, p))),
-        Checks.fdViolationCond, partTotals))
-    } catch { case e: Throwable => Left(e) }
 
   /** The two columns of a correlation rule (columns: [a, b], or column +
     * `column2`). */
@@ -665,9 +588,8 @@ class Validator(
       aggCols: Seq[Column],
       failedOf: org.apache.spark.sql.Row => Long): Either[Throwable, Seq[PartitionVerdict]] =
     try {
-      val rows = df.groupBy(Checks.partGroupCol(df, p).as("__part"))
-        .agg(aggCols.head, aggCols.tail: _*)
-        .collect()
+      val rows = collectBuckets(df.groupBy(Checks.partGroupCol(df, p).as("__part"))
+        .agg(aggCols.head, aggCols.tail: _*))
       Right(rows.toSeq.map { r =>
         val part = Checks.partKeyString(r.get(0))
         val failed = failedOf(r)
@@ -750,11 +672,8 @@ class Validator(
       p: org.apache.spark.sql.Column): Either[Throwable, Seq[PartitionVerdict]] =
     try {
       val (minE, maxE) = entropyBounds(rule)
-      val rows = Checks.entropyParts(df, rule.column, part = Some(Checks.partGroupCol(df, p)))
-        .limit(maxPartitionBuckets + 1)
-        .collect()
-      require(rows.length <= maxPartitionBuckets,
-        s"partition expression produced more than $maxPartitionBuckets buckets")
+      val rows = collectBuckets(
+        Checks.entropyParts(df, rule.column, part = Some(Checks.partGroupCol(df, p))))
       Right(rows.toSeq.map { r =>
         val part = Checks.partKeyString(r.get(0))
         val h = if (r.isNullAt(1)) None
@@ -857,13 +776,7 @@ class Validator(
     try {
       val (refDf, _, aggCol, refAggCol, tol, tolPct) = reconciliationSpec(rule)
       def sideMap(d: DataFrame, c: Column): Map[String, Option[Double]] = {
-        val rows = d.groupBy(Checks.partGroupCol(d, p).as("__part"))
-          .agg(c.as("__v"))
-          .limit(maxPartitionBuckets + 1)
-          .collect()
-        require(rows.length <= maxPartitionBuckets,
-          s"partition expression produced more than $maxPartitionBuckets buckets")
-        rows.map(r => Checks.partKeyString(r.get(0)) ->
+        collectBuckets(d.groupBy(Checks.partGroupCol(d, p).as("__part")).agg(c.as("__v"))).map(r => Checks.partKeyString(r.get(0)) ->
           (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
       }
       val facts = sideMap(df, aggCol)
@@ -974,8 +887,8 @@ class Validator(
     * hashes to — a vanished bucket shows up as that bucket failing, the
     * per-partition reconciliation contract. */
   private def diffPartitionVerdicts(
-      df: DataFrame, rule: ValidationRule, p: org.apache.spark.sql.Column,
-      partTotals: => Map[String, Long]): Either[Throwable, Seq[PartitionVerdict]] =
+      df: DataFrame, rule: ValidationRule,
+      p: org.apache.spark.sql.Column): Either[Throwable, Seq[PartitionVerdict]] =
     try {
       val (refDf, keys, compare) = diffSpec(df, rule)
       val joined = Checks.tableDiff(df, refDf, keys, compare)
@@ -985,8 +898,14 @@ class Validator(
       // it), and the fill's labels come from the NATIVE-typed source df
       // while the joined frame's keys carry the cross-side canonical type
       // — a float/decimal key whose string form changes under the cast
-      // would yield a duplicated, spuriously-passing partition entry
-      Right(groupUnitVerdicts(rule, stats, Checks.diffViolationCond, Map.empty))
+      // would yield a duplicated, spuriously-passing partition entry.
+      // The key frame includes reference-side keys the fused pass never
+      // saw, so the bucket guard applies here too
+      val rows = collectBuckets(stats.groupBy(col("__part"))
+        .agg(count(lit(1)).as("__groups"),
+          sum(when(Checks.diffViolationCond, 1L).otherwise(0L)).as("__violating")))
+      Right(unitVerdicts(rule, rows.toSeq.map(r => (Checks.partKeyString(r.get(0)), r.getLong(1),
+        if (r.isNullAt(2)) 0L else r.getLong(2))), Map.empty))
     } catch { case e: Throwable => Left(e) }
 
   /** Per-partition cardinality verdicts: one grouped distinct job (exact or
@@ -1004,29 +923,6 @@ class Validator(
           if (n < minD || n > maxD) 1L else 0L
         })
     } catch { case e: Throwable => Left(e) }
-  }
-
-  /** Shared tail of the per-rule group-unit jobs (functional_dependency,
-    * diff): roll a per-(partition, group) stats frame up to one verdict per
-    * partition — see [[unitVerdicts]]. */
-  private def groupUnitVerdicts(rule: ValidationRule, groupStats: DataFrame,
-      violCond: org.apache.spark.sql.Column,
-      partTotals: => Map[String, Long]): Seq[PartitionVerdict] = {
-    // limit-before-collect: for fd the partition space was already
-    // bounded by the fused pass's guard over the same rows, but the DIFF
-    // family's key frame includes reference-side keys the fused pass never
-    // saw — a reference snapshot with an unbounded raw partition column
-    // must raise the standard bucket guard, not OOM the driver
-    val rows = groupStats
-      .groupBy(col("__part"))
-      .agg(count(lit(1)).as("__groups"),
-        sum(when(violCond, 1L).otherwise(0L)).as("__violating"))
-      .limit(maxPartitionBuckets + 1)
-      .collect()
-    require(rows.length <= maxPartitionBuckets,
-      s"partition expression produced more than $maxPartitionBuckets buckets")
-    unitVerdicts(rule, rows.toSeq.map(r => (Checks.partKeyString(r.get(0)), r.getLong(1),
-      if (r.isNullAt(2)) 0L else r.getLong(2))), partTotals)
   }
 
   /** Group-unit verdicts from (partition, groups, violating groups) of the
@@ -1391,18 +1287,26 @@ class Validator(
     * A row fails when |x − mean| > k·std (k = `max_zscore`, default 3);
     * NULLs are not failures (range-rule convention). Columns with n < 2
     * have no spread estimate — those rules pass with 0 failures and a
-    * `degenerate` marker rather than dividing by zero. */
+    * `degenerate` marker rather than dividing by zero. A rule whose column
+    * does not resolve fails alone, from driver-side analysis: the healthy
+    * rules' jobs never see it. */
   private def executeOutlierBatch(
       df: DataFrame, rules: Seq[ValidationRule],
       cachedTotal: Option[Long],
-      partitionExpr: Option[org.apache.spark.sql.Column] = None,
-      partTotals: Map[String, Long] = Map.empty): (Map[String, ValidationResult], Seq[PartitionVerdict]) = {
-    if (rules.isEmpty) return (Map.empty, Nil)
+      partitionExpr: Option[org.apache.spark.sql.Column],
+      partTotals: Map[String, Long]): (Map[String, ValidationResult], Seq[PartitionVerdict]) = {
     val t0 = System.nanoTime()
     def ms = (System.nanoTime() - t0) / 1e6
+    val (unresolved, resolved) = rules.map(r => r -> scala.util.Try(df.select(col(r.column))))
+      .partition(_._2.isFailure)
+    val unresolvedResults = unresolved.collect { case (r, scala.util.Failure(e)) =>
+      r.name -> ValidationResult.failure(r, e, ms)
+    }.toMap
+    val measured = resolved.map(_._1)
+    if (measured.isEmpty) return (unresolvedResults, Nil)
     try {
       val total = totalOf(df, cachedTotal)
-      val cols = rules.map(_.column).distinct
+      val cols = measured.map(_.column).distinct
       // one fused moments job normally. momentsExact RAISES (naming one
       // column) when a column holds values outside the exact decimal range
       // or a sum overflows — but the raise aborts the whole fused job, so
@@ -1418,10 +1322,10 @@ class Validator(
               try Right(Checks.momentsExact(df, Seq(c))(c))
               catch { case e: Throwable => Left(e) })).toMap
         }
-      val errResults = rules.flatMap(r => momentsByCol(r.column).left.toOption.map(e =>
-        r.name -> ValidationResult.failure(r, e, ms))).toMap
+      val errResults = unresolvedResults ++ measured.flatMap(r =>
+        momentsByCol(r.column).left.toOption.map(e => r.name -> ValidationResult.failure(r, e, ms)))
       val moments = momentsByCol.collect { case (c, Right(m)) => c -> m }
-      val measurable = rules.filter(r => moments.contains(r.column))
+      val measurable = measured.filter(r => moments.contains(r.column))
       val (live, degenerate) = measurable.partition(r => moments(r.column)._1 >= 2)
       val degenerateResults = errResults ++ degenerate.map { r =>
         r.name -> ValidationResult.verdict(r, 0L, total, ms,
@@ -1444,12 +1348,8 @@ class Validator(
 
       partitionExpr match {
         case Some(p) if partTotals.nonEmpty =>
-          val rows = df.groupBy(Checks.partGroupCol(df, p).as("__part"))
-            .agg(counters.head, counters.tail: _*)
-            .limit(maxPartitionBuckets + 1)
-            .collect()
-          require(rows.length <= maxPartitionBuckets,
-            s"partition expression produced more than $maxPartitionBuckets buckets")
+          val rows = collectBuckets(df.groupBy(Checks.partGroupCol(df, p).as("__part"))
+            .agg(counters.head, counters.tail: _*))
           val outcomes = specs.zipWithIndex.map { case ((r, mean, std, k, _), i) =>
             val failedByPart = rows.map(row =>
               Checks.partKeyString(row.get(0)) ->
@@ -1469,7 +1369,7 @@ class Validator(
       }
     } catch {
       case e: Throwable =>
-        (rules.map(r => r.name -> ValidationResult.failure(r, e, ms)).toMap, Nil)
+        (unresolvedResults ++ measured.map(r => r.name -> ValidationResult.failure(r, e, ms)), Nil)
     }
   }
 
@@ -1483,27 +1383,13 @@ class Validator(
     def ms = (System.nanoTime() - t0) / 1e6
     try {
       rule.ruleType match {
-        // a fusible rule reaching here referenced a missing/ambiguous column
-        // or rode solo — run it as its own single-rule aggregate so the real
-        // analysis error (if any) surfaces in this rule's failure result
+        // a fusible rule reaching here failed admission (a missing or
+        // ambiguous column, a non-Boolean predicate) or its shared fused job
+        // failed — run it as its own single-rule aggregate so its real error
+        // surfaces in this rule's failure result
         case rt if RulePlanner.fusible(rule) =>
           val (total, failed) = RulePlanner.runFused(df, Seq(rule))
-          ValidationResult.verdict(rule, failed(rule.name), total, ms)
-
-        case RuleType.FunctionalDependency =>
-          // determinant → dependent consistency (the FD A→B contract);
-          // verdict unit is GROUPS like sequence/monotonic: rate =
-          // fraction of determinant values mapping to exactly one
-          // dependent tuple
-          val (keys, dep) = fdSpec(rule)
-          val row = Checks.fdGroups(df, keys, dep).agg(
-            count(lit(1)),
-            sum(when(Checks.fdViolationCond, 1L).otherwise(0L))).head()
-          val total = row.getLong(0)
-          val failed = if (row.isNullAt(1)) 0L else row.getLong(1)
-          ValidationResult.verdict(rule, failed, total, ms,
-            Map("keys" -> keys.mkString(","), "dependent" -> dep.mkString(","),
-              "unit" -> "groups"))
+          ValidationResult.verdict(rule, failed(rule.name), total, ms, Map("fused" -> "true"))
 
         case RuleType.Quantile =>
           // distribution-position contract (Deequ hasApproxQuantile):
@@ -1551,12 +1437,6 @@ class Validator(
             val total = totalOf(df, cachedTotal)
             ValidationResult.verdict(rule, failed, total, ms)
           } finally spark.catalog.dropTempView(view)
-
-        case RuleType.Outlier =>
-          // solo path (e.g. column missing from the batch pre-filter): run
-          // the batch machinery for this one rule so the real analysis
-          // error surfaces in this rule's failure result
-          executeOutlierBatch(df, Seq(rule), cachedTotal)._1(rule.name)
 
         case RuleType.Predicate =>
           // reached only when the expression is missing (with one present —
@@ -1703,7 +1583,7 @@ class Validator(
     case RuleType.FunctionalDependency =>
       // group-level violation rows: each determinant value mapping to more
       // than one dependent tuple, with its distinct-tuple count
-      val (keys, dep) = fdSpec(rule)
+      val (keys, dep) = RulePlanner.fdParams(rule)
       Checks.fdViolations(df, keys, dep)
     case RuleType.Referential =>
       val refTable = rule.param("ref_table").getOrElse(
@@ -2396,14 +2276,22 @@ object Validator {
   private[engine] def ruleKeys(r: graft.ValidationRule): Seq[String] =
     if (r.columns.nonEmpty) r.columns else Seq(r.column)
 
+  /** A partition expression produced more distinct values than the pass
+    * may collect to the driver. */
+  final class BucketOverflow(max: Int) extends IllegalArgumentException(
+    s"partition expression produced more than $max buckets — " +
+      "use a bucketing expression like pmod(xxhash64(col), lit(32))")
+
   /** A job failure no single rule can cause: the caller cancelled the job
-    * or its job group, interrupted the thread, or stopped the context.
-    * Re-running a shared job's rules one at a time would start a fresh scan
-    * per rule for a caller who has already given up on all of them. */
-  private[engine] def cancelled(sc: org.apache.spark.SparkContext, e: Throwable): Boolean =
+    * or its job group, interrupted the thread, or stopped the context; or
+    * the partition expression overflowed the bucket guard. Re-running a
+    * shared job's rules one at a time would start a fresh scan per rule
+    * for a caller who has already given up on all of them, or for a guard
+    * every rule trips again. */
+  private[engine] def sharedFailure(sc: org.apache.spark.SparkContext, e: Throwable): Boolean =
     sc.isStopped || Thread.currentThread.isInterrupted ||
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).exists {
-        case _: InterruptedException => true
+        case _: InterruptedException | _: BucketOverflow => true
         case t: org.apache.spark.SparkThrowable => t.getCondition == "SPARK_JOB_CANCELLED"
         case _ => false
       }

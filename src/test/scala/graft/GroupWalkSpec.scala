@@ -5,10 +5,10 @@ import graft.streaming.StreamValidator
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The uniqueness, sequence, monotonic and transition rules share one
-  * grouped walk per key on every entry path: every (partition, rule)
-  * verdict and every global verdict must equal the per-family reference
-  * pipelines run on their own. */
+/** The uniqueness, sequence, monotonic, transition and
+  * functional_dependency rules share one grouped walk per key on every
+  * entry path: every (partition, rule) verdict and every global verdict
+  * must equal the per-family reference pipelines run on their own. */
 class GroupWalkSpec extends SparkSpec {
   import spark.implicits._
 
@@ -91,8 +91,23 @@ class GroupWalkSpec extends SparkSpec {
       ValidationRule(s"firstlast$sfx", RuleType.Transition, Seq("conv_id"),
         threshold = Some(0.5),
         parameters = walk("value" -> "role", "pairs" -> edges,
-          "first" -> "user", "last" -> "assistant,tool")))
+          "first" -> "user", "last" -> "assistant,tool")),
+      // functional_dependency: riding u1's walk (no index), a compound
+      // dependent, riding subseq's (conv_id, sub; turn_idx) hash walk, and
+      // alone on a key no other rule groups by — which the conv_id-derived
+      // partitions do not cover; role and ts hold NULLs
+      ValidationRule(s"fd$sfx", RuleType.FunctionalDependency, Seq("conv_id"),
+        threshold = Some(0.5), parameters = c ++ Map("dependent" -> "role")),
+      ValidationRule(s"fd2$sfx", RuleType.FunctionalDependency, Seq("conv_id"),
+        parameters = c ++ Map("dependent" -> "role, ts")),
+      ValidationRule(s"subfd$sfx", RuleType.FunctionalDependency, Seq("conv_id", "sub"),
+        parameters = c ++ Map("dependent" -> "ts"))) ++
+      Seq(ValidationRule("subonly_fd", RuleType.FunctionalDependency, Seq("sub"),
+        threshold = Some(0.5), parameters = Map("dependent" -> "role"))).filterNot(_ => covers)
   }
+
+  private def dependent(r: ValidationRule): Seq[String] =
+    r.param("dependent").get.split(",").map(_.trim).toSeq
 
   private def partTotals(df: DataFrame): Map[String, Long] =
     df.groupBy(part.as("__part")).count().collect()
@@ -130,6 +145,8 @@ class GroupWalkSpec extends SparkSpec {
     * violation predicate. */
   private def familyGroups(df: DataFrame, keys: Seq[String],
       r: ValidationRule): (DataFrame, Column) = r.ruleType match {
+    case RuleType.FunctionalDependency =>
+      (Checks.fdGroups(df, keys, dependent(r)), Checks.fdViolationCond)
     case RuleType.Sequence =>
       (Checks.sequenceGroups(df, keys, r.param("index").get),
         Checks.sequenceViolationCond(r.param("start").map(_.toLong)))
@@ -172,6 +189,7 @@ class GroupWalkSpec extends SparkSpec {
       case RuleType.Uniqueness => Map.empty[String, String]
       case RuleType.Sequence => Map("index" -> r.param("index").get)
       case RuleType.Monotonic => walk
+      case RuleType.FunctionalDependency => Map("dependent" -> dependent(r).mkString(","))
       case _ => walk + ("edges" -> r.param("pairs").get)
     }
     ValidationResult.verdict(r, failed, total, 0.0, Map("keys" -> keys.mkString(",")) ++ unit ++
@@ -182,35 +200,40 @@ class GroupWalkSpec extends SparkSpec {
 
   test("the grouped walk reproduces every per-family partition and promoted global verdict") {
     val df = turns
-    val rules = suite(covers = false) ++ suite(covers = true)
+    val all = suite(covers = false) ++ suite(covers = true)
     val v = new Validator(spark, ValidationConfig())
-    val (summary, verdicts) = v.executeRulesPartitioned(df, rules, "t", Some(part))
     val rows = df.count()
-    rules.foreach { r =>
-      val expected = reference(df, r)
-      withClue(r.name) {
-        verdicts.filter(_.rule_name == r.name).sortBy(x => Option(x.partition)) shouldBe
-          expected.sortBy(x => Option(x.partition))
-        val res = summary.results.find(_.rule_name == r.name).get
-        res.failed_count should be >= 0L
-        if (r.paramBool("partition_covers_key")) {
-          val keys = (if (r.columns.nonEmpty) r.columns else Seq(r.column)).mkString(",")
-          val (total, unit) =
-            if (r.ruleType == RuleType.Uniqueness) (rows, Map.empty[String, String])
-            else (expected.map(_.total_count).sum, Map("unit" -> "groups"))
-          timeless(res) shouldBe timeless(ValidationResult.verdict(r,
-            expected.map(_.failed_count).sum, total, 0.0,
-            Map("keys" -> keys, "partitioned" -> "true") ++ unit))
+    // without u1, the conv_id functional_dependency rules ride the ordered
+    // (conv_id; turn_idx) walk instead of u1's unordered one
+    Seq(all, all.filterNot(_.name.startsWith("u1"))).foreach { rules =>
+      val (summary, verdicts) = v.executeRulesPartitioned(df, rules, "t", Some(part))
+      rules.foreach { r =>
+        val expected = reference(df, r)
+        withClue(s"${r.name} of ${rules.size}") {
+          verdicts.filter(_.rule_name == r.name).sortBy(x => Option(x.partition)) shouldBe
+            expected.sortBy(x => Option(x.partition))
+          val res = summary.results.find(_.rule_name == r.name).get
+          res.failed_count should be >= 0L
+          if (r.paramBool("partition_covers_key")) {
+            val keys = (if (r.columns.nonEmpty) r.columns else Seq(r.column)).mkString(",")
+            val (total, unit) =
+              if (r.ruleType == RuleType.Uniqueness) (rows, Map.empty[String, String])
+              else (expected.map(_.total_count).sum, Map("unit" -> "groups"))
+            timeless(res) shouldBe timeless(ValidationResult.verdict(r,
+              expected.map(_.failed_count).sum, total, 0.0,
+              Map("keys" -> keys, "partitioned" -> "true") ++ unit))
+          }
         }
       }
-    }
-    // the fixture exercises what it claims to: a walk member of the
-    // all-excluded partition is an explicit empty verdict, and each
-    // family has both passing and failing partitions somewhere
-    verdicts.find(x => x.rule_name == "seq" && x.partition == "7").get.total_count shouldBe 0L
-    verdicts.find(x => x.rule_name == "u2" && x.partition == "7").get.failed_count shouldBe 1L
-    Seq("u2", "u3", "seq0", "mono", "strict", "desc", "grammar", "firstlast").foreach { n =>
-      withClue(n) { verdicts.filter(_.rule_name == n).map(_.failed_count).sum should be > 0L }
+      // the fixture exercises what it claims to: a walk member of the
+      // all-excluded partition is an explicit empty verdict, and each
+      // family has both passing and failing partitions somewhere
+      verdicts.find(x => x.rule_name == "seq" && x.partition == "7").get.total_count shouldBe 0L
+      verdicts.find(x => x.rule_name == "u2" && x.partition == "7").get.failed_count shouldBe 1L
+      Seq("u2", "u3", "seq0", "mono", "strict", "desc", "grammar", "firstlast",
+          "fd", "fd2", "subfd", "subonly_fd").foreach { n =>
+        withClue(n) { verdicts.filter(_.rule_name == n).map(_.failed_count).sum should be > 0L }
+      }
     }
   }
 
@@ -485,7 +508,7 @@ class GroupWalkSpec extends SparkSpec {
       WalkGate.open.await(60, java.util.concurrent.TimeUnit.SECONDS); s != null
     }.apply(col("sub")))
     val rules = suite(covers = true)
-    val walkKeys = rules.flatMap(r => GroupWalk.member(df, r, _ => None).toOption).map(_.key).distinct.size
+    val walkKeys = GroupWalk.walks(rules.flatMap(r => GroupWalk.member(df, r, _ => None).toOption)).size
     walkKeys should be > 1
     val sc = spark.sparkContext
     val walksStarted = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -531,6 +554,63 @@ class GroupWalkSpec extends SparkSpec {
     }
     walkExecutions("tguard", jobs) shouldBe 1
     summary.results.map(_.rule_name).toSet shouldBe rules.map(_.name).toSet
+  }
+  test("functional_dependency dependents: NaN, signed zeros and NULL floats count as grouping does") {
+    val nan = Double.NaN
+    val df = Seq[(Option[String], Int, Option[Double], Option[Double])](
+      (Some("nan"), 0, Some(nan), Some(1.0)), (Some("nan"), 1, Some(nan), Some(1.0)),
+      (Some("zero"), 0, Some(-0.0), Some(0.0)), (Some("zero"), 1, Some(0.0), Some(-0.0)),
+      (Some("null"), 0, None, None), (Some("null"), 1, None, None),
+      (Some("null1"), 0, None, Some(1.0)), (Some("null1"), 1, Some(1.0), Some(1.0)),
+      (Some("nan1"), 0, Some(nan), None), (Some("nan1"), 1, Some(1.0), None), (Some("nan1"), 2, None, None),
+      (Some("nannull"), 0, Some(nan), Some(2.0)), (Some("nannull"), 1, None, Some(2.0)),
+      (Some("pair"), 0, Some(1.0), None), (Some("pair"), 1, Some(1.0), Some(2.0)),
+      (None, 0, Some(-0.0), None), (None, 1, Some(0.0), None)
+    ).toDF("k", "i", "x", "y")
+    val p = pmod(xxhash64(col("k")), lit(3L))
+    val fds = for {
+      dep <- Seq("x", "y", "x,y")
+      covers <- Seq(false, true)
+    } yield ValidationRule(s"fd_${dep.replace(",", "")}${if (covers) "_c" else ""}",
+      RuleType.FunctionalDependency, Seq("k"), threshold = Some(0.5),
+      parameters = Map("dependent" -> dep) ++
+        (if (covers) Map("partition_covers_key" -> "true") else Map.empty))
+    // the walks an FD rule on k can ride: its own, an unordered one with and
+    // without an index, an ordered one
+    val hosts = Seq(
+      "alone" -> Nil,
+      "unordered" -> Seq(ValidationRule("u", RuleType.Uniqueness, Seq("k"))),
+      "unordered, indexed" -> Seq(ValidationRule("ui", RuleType.Uniqueness, Seq("k", "i"))),
+      "ordered" -> Seq(ValidationRule("m", RuleType.Monotonic, Seq("k"),
+        parameters = Map("order_by" -> "i", "value" -> "y"))))
+    val v = new Validator(spark, ValidationConfig())
+    def verdict(r: ValidationRule, part: String, failed: Long, total: Long) = {
+      val rate = if (total == 0) 1.0 else (total - failed).toDouble / total
+      PartitionVerdict(part, r.name, ValidationResult.passedOf(r.threshold, failed, rate),
+        failed, total, rate)
+    }
+    fds.foreach { r =>
+      val dep = dependent(r)
+      val groups = Checks.fdGroups(df.withColumn("__part", p), Seq("__part", "k"), dep)
+        .groupBy("__part").agg(count(lit(1)), sum(when(Checks.fdViolationCond, 1L).otherwise(0L)))
+        .collect().map(x => verdict(r, Checks.partKeyString(x.get(0)), x.getLong(2), x.getLong(1)))
+      val global = Checks.fdGroups(df, Seq("k"), dep)
+      val (total, failed) = (global.count(), global.filter(Checks.fdViolationCond).count())
+      failed shouldBe Map("x" -> 3L, "y" -> 1L, "xy" -> 4L)(dep.mkString)
+      val own = ValidationResult.verdict(r, failed, total, 0.0,
+        Map("keys" -> "k", "dependent" -> dep.mkString(","), "unit" -> "groups"))
+      val promoted = ValidationResult.verdict(r, failed, total, 0.0,
+        Map("keys" -> "k", "unit" -> "groups", "partitioned" -> "true"))
+      hosts.foreach { case (host, rs) =>
+        withClue(s"${r.name} / $host") {
+          timeless(v.executeRules(df, rs :+ r, "t").results.last) shouldBe own
+          val (summary, verdicts) = v.executeRulesPartitioned(df, rs :+ r, "t", Some(p))
+          timeless(summary.results.last) shouldBe
+            (if (r.paramBool("partition_covers_key")) promoted else own)
+          verdicts.filter(_.rule_name == r.name).sortBy(_.partition) shouldBe groups.sortBy(_.partition)
+        }
+      }
+    }
   }
 }
 

@@ -1430,14 +1430,19 @@ class ValidatorSpec extends SparkSpec {
     val rules = graft.bench.TranscriptSuite.rules.filter(r => walkRuleNames.contains(r.name))
     rules.map(_.name) shouldBe walkRuleNames
     rules.init.foreach(_.paramBool("partition_covers_key") shouldBe true)
-    val uncovered = rules.map(r => r.copy(parameters = r.parameters - "partition_covers_key"))
+    // a functional_dependency rule on conv_id rides the same walk
+    val fd = ValidationRule("role_consistent", RuleType.FunctionalDependency, Seq("conv_id"),
+      parameters = Map("dependent" -> "role", "partition_covers_key" -> "true"))
+    val covered = rules :+ fd
+    val uncovered = covered.map(r => r.copy(parameters = r.parameters - "partition_covers_key"))
     val bucket = pmod(xxhash64(col("conv_id")), lit(8))
-    // the four rules share one walk key and the referential rule, grouped
-    // by its first column, rides it: one SQL execution per walk level (a
-    // referential rule never joins the constant-partition level)
+    // the four rules share one walk key and the referential and
+    // functional_dependency rules, grouped by its first column, ride it: one
+    // SQL execution per walk level (a referential rule never joins the
+    // constant-partition level)
     Seq(
-      ("covered", rules, Some(bucket), Map("group-walk" -> 1)),
-      ("unpartitioned", rules, None, Map("group-walk global" -> 1)),
+      ("covered", covered, Some(bucket), Map("group-walk" -> 1)),
+      ("unpartitioned", covered, None, Map("group-walk global" -> 1)),
       ("uncovered", uncovered, Some(bucket), Map("group-walk" -> 1, "group-walk global" -> 1))
     ).foreach { case (name, rs, p, levels) =>
       var summary: ValidationSummary = null
@@ -1452,7 +1457,78 @@ class ValidatorSpec extends SparkSpec {
         jobs.filter(_._1.contains("group-walk")).groupBy(_._1).map { case (d, js) =>
           d.stripPrefix("walkjobs ") -> js.map(_._3).distinct.size
         } shouldBe levels
-        walkRuleNames.foreach(n => jobs.map(_._1) should not contain s"walkjobs rule:$n")
+        (walkRuleNames :+ fd.name).foreach(n => jobs.map(_._1) should not contain s"walkjobs rule:$n")
+      }
+    }
+  }
+
+  test("cardinality and correlation over too many partition buckets report the bucket guard") {
+    val v = new Validator(spark, ValidationConfig())
+    val df = spark.range(0, v.maxPartitionBuckets + 1L)
+      .select(col("id"), (col("id") % 7).as("a"), (col("id") % 5).as("b"))
+    val rules = Seq(
+      ValidationRule("distinct_a", RuleType.Cardinality, Seq("a")),
+      ValidationRule("corr_ab", RuleType.Correlation, Seq("a", "b")))
+    val (summary, verdicts) = v.executeRulesPartitioned(df, rules, "tguard", Some(col("id")))
+    summary.results.map(_.rule_name) shouldBe rules.map(_.name)
+    summary.results.foreach { r =>
+      withClue(r.rule_name) {
+        r.failed_count shouldBe -1L
+        r.message should include(s"more than ${v.maxPartitionBuckets} buckets")
+      }
+    }
+    verdicts shouldBe empty
+  }
+
+  test("every rule's result comes from one section and equals the rule run alone") {
+    val cfg = graft.config.ConfigLoader.fromYamlFile(
+      "examples/transcripts_config.yaml", env = Map.empty)
+    val tcfg = TranscriptConfig(numConvs = 100L, hotConvExtraTurns = 10L)
+    def withLen(df: org.apache.spark.sql.DataFrame) = df.withColumn("text_len",
+      coalesce(org.apache.spark.sql.functions.length(col("text")), lit(0)).cast("double"))
+    val turns = withLen(Transcripts.turns(spark, tcfg))
+    val baseline = withLen(Transcripts.turns(spark, Transcripts.drifted(tcfg)))
+    val index = Transcripts.convIndex(spark, tcfg)
+    val v = new Validator(spark, cfg, {
+      case "transcripts_baseline" => Some(baseline)
+      case "conv_index" => Some(index)
+      case _ => None
+    })
+    val shipped = cfg.enabledRules("transcripts") :+ ValidationRule("tools_named",
+      RuleType.CustomAgg, Nil,
+      expression = Some("SELECT COUNT(*) FROM {table} WHERE role = 'tool' AND tool IS NULL"))
+    shipped.map(_.ruleType).distinct.size shouldBe 25
+    // analyzes as a Boolean, raises at run time under ANSI
+    val raising = ValidationRule("raises", RuleType.Predicate, Nil,
+      expression = Some("turn_idx div (turn_idx - turn_idx) >= 0"))
+    val sectionOwned = Set(RuleType.Uniqueness, RuleType.Sequence, RuleType.Monotonic,
+      RuleType.Transition, RuleType.Referential, RuleType.FunctionalDependency,
+      RuleType.drift, RuleType.Outlier)
+    val bucket = pmod(xxhash64(col("conv_id")), lit(8))
+    val empty = turns.limit(0)
+    // (name, table, rules, partition expression)
+    val passes = Seq(
+      ("partitioned", turns, shipped, Some(bucket)),
+      ("unpartitioned", turns, shipped, None),
+      ("empty", empty, shipped, Some(bucket)),
+      ("empty, unpartitioned", empty, shipped, None),
+      ("fused job fails", turns, shipped :+ raising, Some(bucket)))
+    val alone = scala.collection.mutable.Map.empty[(Boolean, Boolean, String), ValidationResult]
+    passes.foreach { case (name, df, rules, p) =>
+      var summary: ValidationSummary = null
+      val jobs = jobsDuring {
+        summary = v.executeRulesPartitioned(df, rules, "owners", p)._1
+      }.map(_._1)
+      summary.results.find(_.rule_name == "raises").foreach(_.failed_count shouldBe -1L)
+      rules.foreach { r =>
+        withClue(s"$name / ${r.name}") {
+          val own = alone.getOrElseUpdate((df eq empty, p.isDefined, r.name),
+            v.executeRulesPartitioned(df, Seq(r), "alone", p)._1.results.head)
+          summary.results.find(_.rule_name == r.name).get.copy(execution_time_ms = 0.0) shouldBe
+            own.copy(execution_time_ms = 0.0)
+          if (sectionOwned(r.ruleType) || graft.engine.RulePlanner.fusible(r))
+            jobs should not contain s"owners rule:${r.name}"
+        }
       }
     }
   }
