@@ -33,8 +33,9 @@ import org.apache.spark.sql.types.StringType
   * table is scanned once for every key rule. */
 private[graft] object GroupWalk {
 
-  /** Group columns and walk index. The index is None only for a
-    * single-column uniqueness rule, which groups by its key alone. */
+  /** Group columns and walk index. The index is None for a single-column
+    * uniqueness rule, which groups by its key alone, and for a [[Rider]]
+    * (referential, functional_dependency). */
   final case class Key(groups: Seq[String], index: Option[String])
 
   /** One rule of a walk, parameters parsed. */

@@ -155,6 +155,8 @@ class Validator(
           r.name -> ValidationResult.verdict(r, failedByRule(r.name), total, fusedMs,
             Map("fused" -> "true"))
         }.toMap
+      case Left(e) if Validator.sharedFailure(sc, e) =>
+        wellFormedFusible.map(r => r.name -> ValidationResult.failure(r, e, fusedMs)).toMap
       case Left(_) =>
         // blast-radius recovery: the SHARED job failed (e.g. one predicate
         // raising at runtime under ANSI — statically undetectable), so each

@@ -540,6 +540,38 @@ class GroupWalkSpec extends SparkSpec {
     walkExecutions("tcancel", jobs) shouldBe walkKeys
   }
 
+  test("a cancelled fused job reports the cancellation instead of re-running its rules") {
+    val df = spark.createDataFrame(turns.rdd, turns.schema).filter(udf { (s: String) =>
+      WalkGate.open.await(60, java.util.concurrent.TimeUnit.SECONDS); s != null
+    }.apply(col("sub")))
+    val rules = Seq(
+      ValidationRule("role_c", RuleType.Completeness, Seq("role"), threshold = Some(0.5)),
+      ValidationRule("ts_c", RuleType.Completeness, Seq("ts"), threshold = Some(0.5)))
+    val sc = spark.sparkContext
+    val fusedStarted = scala.concurrent.Promise[Unit]()
+    WalkGate.open = new java.util.concurrent.CountDownLatch(1)
+    @volatile var summary: ValidationSummary = null
+    val jobs = jobsDuring(
+      onStart = j => if (j._1 == "tfcancel fused-stats") fusedStarted.trySuccess(()),
+      body = {
+        val pass = new Thread(() => {
+          sc.setJobGroup("fused-cancel", "cancelled pass")
+          summary = new Validator(spark, ValidationConfig())
+            .executeRulesPartitioned(df, rules, "tfcancel", None)._1
+        })
+        pass.start()
+        try {
+          scala.concurrent.Await.result(fusedStarted.future,
+            scala.concurrent.duration.Duration(60, "s"))
+          sc.cancelJobGroup("fused-cancel")
+        } finally WalkGate.open.countDown()
+        pass.join()
+      })
+    jobs.map(_._1) should not contain "tfcancel fused-stats rerun"
+    summary.results.map(_.rule_name) shouldBe rules.map(_.name)
+    all(summary.results.map(_.failed_count)) shouldBe -1L
+  }
+
   test("a walk over too many partition buckets reports the guard instead of re-running") {
     val v = new Validator(spark, ValidationConfig())
     val df = spark.range(0, v.maxPartitionBuckets + 1L)
