@@ -26,11 +26,13 @@ import org.apache.spark.sql.types.StringType
   * order or value rows stay in the walk but are skipped, as the
   * single-rule pipelines filter them out). Referential and
   * functional_dependency rules ride any walk grouped by their columns
-  * alone (see [[walks]]), with no window and no Sort: a referential member
-  * left-joins the per-(partition, K) group rows, which carry their row
-  * count, against the dim's distinct keys; a functional_dependency member
-  * compares each group's smallest and largest dependent tuple — so the
-  * table is scanned once for every key rule. */
+  * alone (see [[walks]]), with no window of their own: a referential
+  * member left-joins the per-(partition, K) group rows, which carry their
+  * row count, against the dim's distinct keys; a functional_dependency
+  * member compares each group's smallest and largest dependent tuple on a
+  * hash walk, and on an ordered walk flags the rows whose tuple differs
+  * from the group's first — so the table is scanned once for every key
+  * rule. */
 private[graft] object GroupWalk {
 
   /** Group columns and walk index. The index is None for a single-column
@@ -104,9 +106,12 @@ private[graft] object GroupWalk {
 
   /** A functional_dependency rule: a determinant group violates when it
     * holds more than one distinct dependent tuple (`values`). Its key is
-    * its determinant. `g` counts groups, `f` those whose smallest and
-    * largest dependent tuple differ: a NULL dependent is one value and a
-    * NULL determinant its own group, as in [[Checks.fdGroups]]. */
+    * its determinant. `g` counts groups, `f` those holding two distinct
+    * dependent tuples — on a hash walk, whose smallest and largest tuple
+    * differ (a min/max over a struct is a sort-based aggregate); on an
+    * ordered walk, with a row whose tuple differs from the group's first
+    * row's. A NULL dependent is one value and a NULL determinant its own
+    * group, as in [[Checks.fdGroups]]. */
   final case class Dependency(rule: ValidationRule, key: Key,
       override val values: Seq[String]) extends Rider
 
@@ -191,8 +196,8 @@ private[graft] object GroupWalk {
     val uniques = members.exists(_.isInstanceOf[Unique])
     val orphans = members.exists(_.isInstanceOf[Orphan])
     val dependencies = members.zipWithIndex.collect { case (d: Dependency, j) => d -> j }
-    // functional_dependency member j: the smallest (`__lo<j>`) and largest
-    // (`__hi<j>`) dependent tuple, mergeable across aggregation levels
+    // functional_dependency member j of a hash walk: the smallest (`__lo<j>`)
+    // and largest (`__hi<j>`) dependent tuple, mergeable across its levels
     def spans(lo: (Dependency, Int) => Column, hi: (Dependency, Int) => Column) =
       dependencies.flatMap { case (d, j) => Seq(min(lo(d, j)).as(s"__lo$j"), max(hi(d, j)).as(s"__hi$j")) }
     // `__rows` per group: uniqueness and referential members count rows
@@ -201,9 +206,9 @@ private[graft] object GroupWalk {
     def aggregate(d: DataFrame, aggs: Seq[Column]) = d.groupBy(byKey: _*).agg(aggs.head, aggs.tail: _*)
 
     // per-(partition, K) stats: `__rows`, `__dups` for uniqueness, the sequence
-    // family's (n_distinct, min_idx, max_idx), the dependent spans,
-    // `__n<j>`/`__b<j>` (included rows, violating rows) and the accept flag
-    // `__e<j>` of the rest
+    // family's (n_distinct, min_idx, max_idx), the dependent spans (hash
+    // walk) or `__x<j>` (ordered walk), `__n<j>`/`__b<j>` (included rows,
+    // violating rows) and the accept flag `__e<j>` of the rest
     val stats = if (orders.isEmpty) {
       // no member needs an order: hash aggregate by (partition, K, I), then
       // by (partition, K) when a member needs whole groups; no Sort
@@ -247,7 +252,11 @@ private[graft] object GroupWalk {
           Seq(when(incl, 1L).otherwise(0L).as(s"__n$j"),
             when(incl && Checks.transitionViolCond(v, prev, lit(false), m.pairs, m.first, None), 1L)
               .otherwise(0L).as(s"__b$j")) ++ accept
-        case (d: Dependency, j) => Seq(tuple(d).as(s"__t$j"))
+        // 1 on a row whose dependent tuple differs from its group's first
+        // in the walk: a flag the hash aggregate sums, where a min/max
+        // over the tuple would make the walk's aggregate sort its rows
+        case (d: Dependency, j) =>
+          Seq(when(tuple(d) <=> first(tuple(d)).over(walk(orders.head)), 0L).otherwise(1L).as(s"__x$j"))
         case _ => Nil
       }
       def counts(j: Int) = Seq(sum(s"__n$j").as(s"__n$j"), sum(s"__b$j").as(s"__b$j"))
@@ -255,6 +264,7 @@ private[graft] object GroupWalk {
         case (g: Grammar, j) if g.last.isDefined =>
           counts(j) :+ max_by(col(s"__e$j"), col(s"__r$j")).as(s"__e$j")
         case (_: Monotone | _: Grammar, j) => counts(j)
+        case (_: Dependency, j) => Seq(max(s"__x$j").as(s"__x$j"))
         case _ => Nil
       }
       aggregate(df.select(keyOut ++ newIndex ++ flags: _*),
@@ -262,7 +272,7 @@ private[graft] object GroupWalk {
           (if (uniques) Seq((count(lit(1)) - count(when(col("__new"), 1))).as("__dups")) else Nil) ++
           (if (dense) Seq(count(when(col("__i").isNotNull && col("__new"), 1)).as("n_distinct"),
             min(col("__i")).as("min_idx"), max(col("__i")).as("max_idx")) else Nil) ++
-          memberAggs ++ spans((_, j) => col(s"__t$j"), (_, j) => col(s"__t$j")))
+          memberAggs)
     }
 
     // referential member j: `__d<j>` is the matching dim key, NULL for an
@@ -287,7 +297,8 @@ private[graft] object GroupWalk {
         case _: Monotone => unit(col(s"__n$j") > 0L, col(s"__b$j") > 0L)
         case g: Grammar => unit(col(s"__n$j") > 0L, col(s"__b$j") > 0L ||
           g.last.fold(lit(false))(_ => coalesce(col(s"__e$j") === 1L, lit(false))))
-        case _: Dependency => unit(lit(true), !(col(s"__lo$j") <=> col(s"__hi$j")))
+        case _: Dependency => unit(lit(true),
+          if (orders.isEmpty) !(col(s"__lo$j") <=> col(s"__hi$j")) else col(s"__x$j") === 1L)
       }
     }
     val sums = members.indices.flatMap(j => Seq(sum(s"g$j").as(s"g$j"), sum(s"f$j").as(s"f$j")))

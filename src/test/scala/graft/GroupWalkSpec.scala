@@ -644,6 +644,35 @@ class GroupWalkSpec extends SparkSpec {
       }
     }
   }
+
+  test("a functional_dependency rider adds no Sort to an ordered walk and keeps its hash aggregates") {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
+    val df = turns
+    val walkRules = Seq(
+      ValidationRule("ts_mono", RuleType.Monotonic, Seq("conv_id"),
+        parameters = Map("order_by" -> "turn_idx", "value" -> "ts")),
+      ValidationRule("roles", RuleType.Transition, Seq("conv_id"),
+        parameters = Map("order_by" -> "turn_idx", "value" -> "role", "pairs" -> "user->assistant")))
+    val fd = ValidationRule("role_of_sub", RuleType.FunctionalDependency, Seq("conv_id"),
+      parameters = Map("dependent" -> "role,sub"))
+    val helper = new AdaptiveSparkPlanHelper {}
+    def operators(rules: Seq[ValidationRule]): (Int, Int, Int) = {
+      val walks = GroupWalk.walks(rules.map(r => GroupWalk.member(df, r, _ => None).toOption.get))
+      walks should have size 1
+      val (key, members) = walks.head
+      val frame = GroupWalk.frame(df, key, members, part)
+      frame.collect()
+      val plan: SparkPlan = frame.queryExecution.executedPlan
+      (helper.collect(plan) { case s: SortExec => s }.size,
+        helper.collect(plan) { case a: HashAggregateExec => a }.size,
+        helper.collect(plan) { case a: SortAggregateExec => a }.size)
+    }
+    val (sorts, hashAggs, sortAggs) = operators(walkRules)
+    sortAggs shouldBe 0
+    operators(walkRules :+ fd) shouldBe ((sorts, hashAggs, 0))
+  }
 }
 
 /** Holds every scan of the cancellation test's table until the test has
