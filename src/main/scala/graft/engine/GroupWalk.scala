@@ -253,8 +253,8 @@ private[graft] object GroupWalk {
             when(incl && Checks.transitionViolCond(v, prev, lit(false), m.pairs, m.first, None), 1L)
               .otherwise(0L).as(s"__b$j")) ++ accept
         // 1 on a row whose dependent tuple differs from its group's first
-        // in the walk: a flag the hash aggregate sums, where a min/max
-        // over the tuple would make the walk's aggregate sort its rows
+        // in the walk: a flag whose max the hash aggregate takes, where a
+        // min/max over the tuple would make the walk's aggregate sort its rows
         case (d: Dependency, j) =>
           Seq(when(tuple(d) <=> first(tuple(d)).over(walk(orders.head)), 0L).otherwise(1L).as(s"__x$j"))
         case _ => Nil
