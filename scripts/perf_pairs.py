@@ -23,15 +23,21 @@ and its median beats the parent's by more than the parent's IQR.
 `--layers` names per-layer metrics (e.g. validator.jobs,spark.read_mb.hi):
 after the pairs of a workload, one `--trace 1` run per side on the first
 seed prints those metrics side by side, so the layer a change should move
-is read from the same command. Exits non-zero if any run failed.
+is read from the same command. The same traced runs also give the Spark
+jobs per traced operation and per validator call (a stream batch is one
+`Validator.validateTableIncremental` call), counted by job label from the
+spans perfbench writes to `perfbench/.build/spans/<workload>-seed<N>.jsonl`.
+Exits non-zero if any run failed.
 """
 import argparse
+import collections
 import json
 import os
 import statistics
 import subprocess
 import sys
 import tempfile
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -93,19 +99,22 @@ def main():
     try:
         for workload in args.workload:
             runs, failed = pairs(workload, seeds, parent, seconds, metrics, args.out)
-            traced = {side: run(checkout, workload, seeds[0], seconds, trace=1)
-                      for side, checkout in (("parent", parent), ("change", ROOT))} \
-                if layers else {}
+            traced, jobs = {}, {}
+            for side, checkout in (("parent", parent), ("change", ROOT)) if layers else ():
+                started = time.time()
+                traced[side] = run(checkout, workload, seeds[0], seconds, trace=1)
+                jobs[side] = job_counts(checkout, workload, seeds[0], started)
             failed += sum(1 for r in traced.values() if r is None)
-            results.append((workload, runs, failed, traced))
+            results.append((workload, runs, failed, traced, jobs))
     finally:
         subprocess.run(["git", "worktree", "remove", "--force", parent], cwd=ROOT,
                        stdout=subprocess.DEVNULL)
-    for workload, runs, failed, traced in results:
+    for workload, runs, failed, traced, jobs in results:
         report(workload, runs, failed, seconds, metrics)
         if layers:
             report_layers(workload, seeds[0], traced, layers)
-    sys.exit(1 if any(failed for _, _, failed, _ in results) else 0)
+            report_jobs(workload, seeds[0], jobs)
+    sys.exit(1 if any(r[2] for r in results) else 0)
 
 
 def pairs(workload, seeds, parent, seconds, metrics, out):
@@ -175,6 +184,63 @@ def report_layers(workload, seed, traced, layers):
         fmt = lambda r, v: "FAILED" if r is None else ("absent" if v is None else f"{v:.4g}")
         ratio = f"{cv / pv:.3f}" if pv and cv is not None else "-"
         print(f"{name:<32}{fmt(p, pv):>14}{fmt(c, cv):>14}{ratio:>8}")
+
+
+def job_counts(checkout, workload, seed, since):
+    """Spark job counts of one traced run, from its spans file: the number
+    of traced operations that carry job spans (perfbench attaches jobs only
+    to the operations it ran with a listener) and the jobs by label over
+    all of them, and per validator call name the number of calls in those
+    operations and the jobs by label under them. None when the run wrote
+    no spans file after `since`."""
+    path = os.path.join(checkout, "perfbench", ".build", "spans", f"{workload}-seed{seed}.jsonl")
+    if not os.path.exists(path) or os.path.getmtime(path) < since:
+        return None
+    with open(path) as fh:
+        spans = [json.loads(line) for line in fh if line.strip()]
+    by_id = {s["id"]: s for s in spans}
+    ops = {s["op"] for s in spans if s["parent"] == 0 and s["name"].startswith("op:")} & \
+        {s["op"] for s in spans if s["layer"] == "spark"}
+    calls = collections.Counter(s["name"] for s in spans
+                                if s["layer"] == "validator" and s["op"] in ops)
+    per_op, per_call = collections.Counter(), collections.defaultdict(collections.Counter)
+    for s in spans:
+        if s["layer"] != "spark" or not s["name"].startswith("job:") or s["op"] not in ops:
+            continue
+        label = s["name"][len("job:"):] or "(no label)"
+        if label.lstrip().startswith("id = "):  # Spark's own per-query streaming description
+            label = "(streaming micro-batch)"
+        per_op[label] += 1
+        owner = by_id.get(s["parent"])
+        while owner is not None and owner["layer"] != "validator":
+            owner = by_id.get(owner["parent"])
+        if owner is not None:
+            per_call[owner["name"]][label] += 1
+    return {"ops": len(ops), "per_op": per_op, "calls": calls, "per_call": per_call}
+
+
+def report_jobs(workload, seed, jobs):
+    """Prints jobs per operation, then jobs per call of each validator
+    entry point, by label, parent beside change."""
+    p, c = jobs.get("parent"), jobs.get("change")
+    if p is None or c is None:
+        print(f"\n{workload}: no spans file from a traced run; job counts skipped")
+        return
+
+    def table(title, n_p, n_c, counts_p, counts_c):
+        print(f"\n{workload}: {title}, seed {seed} ({n_p} parent / {n_c} change)")
+        print(f"{'job label':<46}{'parent':>10}{'change':>10}")
+        for label in sorted(set(counts_p) | set(counts_c)):
+            print(f"{label:<46}{counts_p[label] / max(n_p, 1):>10.2f}"
+                  f"{counts_c[label] / max(n_c, 1):>10.2f}")
+        print(f"{'total':<46}{sum(counts_p.values()) / max(n_p, 1):>10.2f}"
+              f"{sum(counts_c.values()) / max(n_c, 1):>10.2f}")
+
+    table("Spark jobs per traced operation", p["ops"], c["ops"], p["per_op"], c["per_op"])
+    for name in sorted(set(p["calls"]) | set(c["calls"])):
+        table(f"Spark jobs per {name} call", p["calls"][name], c["calls"][name],
+              p["per_call"].get(name, collections.Counter()),
+              c["per_call"].get(name, collections.Counter()))
 
 
 if __name__ == "__main__":

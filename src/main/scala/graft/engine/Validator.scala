@@ -32,14 +32,15 @@ class Validator(
   private val viewCounter = new AtomicLong(0)
 
   /** Execute all enabled rules for `tableName` against `df` — the
-    * unpartitioned case of [[executeRulesPartitioned]], with the same plan.
-    * Fusible rules share ONE aggregate job; all drift rules share one
-    * multi-histogram scan per table side and all outlier rules one batch;
-    * uniqueness, sequence, monotonic and transition rules share one
-    * group-walk job per walk key, and referential and functional_dependency
-    * rules ride the walk grouped by their columns (see [[GroupWalk]]); every
-    * other rule is its own job. Result order matches rule order (globals
-    * first — observable contract). */
+    * unpartitioned case of [[executeRulesPartitioned]]: one frame submitted
+    * ([[submitFrame]]), then collected. Fusible rules share ONE aggregate
+    * job; all drift rules share one multi-histogram scan per table side and
+    * all outlier rules one batch; uniqueness, sequence, monotonic and
+    * transition rules share one group-walk job per walk key, and
+    * referential and functional_dependency rules ride the walk grouped by
+    * their columns (see [[GroupWalk]]); every other rule is its own job.
+    * Result order matches rule order (globals first — observable
+    * contract). */
   def executeRules(df: DataFrame, rules: Seq[ValidationRule], tableName: String): ValidationSummary =
     executeRulesPartitioned(df, rules, tableName, None)._1
 
@@ -85,6 +86,20 @@ class Validator(
       df: DataFrame, rules: Seq[ValidationRule], tableName: String,
       partitionExpr: Option[org.apache.spark.sql.Column]): (ValidationSummary, Seq[PartitionVerdict]) = {
     val t0 = System.nanoTime()
+    val (results, verdicts) = submitFrame(df, rules, tableName, partitionExpr)()
+    (ValidationSummary.from(tableName, results, (System.nanoTime() - t0) / 1e6), verdicts)
+  }
+
+  /** The submit step of one frame's pass: builds and submits every section
+    * of [[executeRulesPartitioned]] for `rules` over `df` without awaiting
+    * any of them, and returns the collect step, which awaits the sections
+    * on the caller's thread and assembles the results in rule order with
+    * the frame's per-partition verdicts. A caller with several frames (the
+    * incremental and sampled tiers) submits every frame before it collects
+    * any, so their jobs overlap and no thread parks on a frame. */
+  private def submitFrame(df: DataFrame, rules: Seq[ValidationRule], tableName: String,
+      partitionExpr: Option[Column]): () => (Seq[ValidationResult], Seq[PartitionVerdict]) = {
+    if (rules.isEmpty) return () => (Nil, Nil)
     val schema = df.schema
 
     // a rule referencing a missing column, or a predicate whose expression
@@ -100,10 +115,14 @@ class Validator(
     // the grouped pass also yields per-partition row totals, reused by the
     // per-partition verdicts below. The fused job runs as a FUTURE on its
     // own executor, so the bounded section pool can never deadlock against
-    // it, and every other section's jobs overlap it.
+    // it, and every other section's jobs overlap it. It is submitted now
+    // when the frame has fusible rules or a partition expression; otherwise
+    // only a row total needs it (row_count, custom, custom_agg, the outlier
+    // batch) and the first of those to ask submits it, so a frame of walk
+    // members alone submits no fused job.
     val fusedStart = System.nanoTime()
     val sc = spark.sparkContext
-    val fusedF: Future[Either[Throwable, (Long, Map[String, Long], Seq[PartitionVerdict], Map[String, Long])]] = SparkFuture(sc) {
+    lazy val fusedF: Future[Either[Throwable, (Long, Map[String, Long], Seq[PartitionVerdict], Map[String, Long])]] = SparkFuture(sc) {
       sc.setJobDescription(s"$tableName fused-stats")
       try {
         partitionExpr match {
@@ -141,6 +160,7 @@ class Validator(
         }
       } catch { case e: Throwable => Left(e) }
     }(Validator.fusedPool)
+    if (wellFormedFusible.nonEmpty || partitionExpr.isDefined) fusedF
     // every consumer below takes the fused outcome through these lazies —
     // a section that needs the totals blocks HERE (after its own Spark job
     // has already run), never before submitting it
@@ -149,25 +169,27 @@ class Validator(
     lazy val fusedMs = (System.nanoTime() - fusedStart) / 1e6
 
     implicit val ec: scala.concurrent.ExecutionContext = Validator.sectionPool
-    lazy val fusedResults: Map[String, ValidationResult] = fusedOutcome match {
-      case Right((total, failedByRule, _, _)) =>
-        wellFormedFusible.map { r =>
-          r.name -> ValidationResult.verdict(r, failedByRule(r.name), total, fusedMs,
-            Map("fused" -> "true"))
-        }.toMap
-      case Left(e) if Validator.sharedFailure(sc, e) =>
-        wellFormedFusible.map(r => r.name -> ValidationResult.failure(r, e, fusedMs)).toMap
-      case Left(_) =>
-        // blast-radius recovery: the SHARED job failed (e.g. one predicate
-        // raising at runtime under ANSI — statically undetectable), so each
-        // rule re-runs as a fused job of its own: the poisoned rule gets its
-        // real error, the healthy rules still get real verdicts — at the
-        // reference's per-rule cost, paid only on this failure path
-        wellFormedFusible.map(r => r.name -> SparkFuture(sc) {
-          sc.setJobDescription(s"$tableName fused-stats rerun")
-          executeSingle(df, r, tableName, None)
-        }).map { case (n, f) => n -> Await.result(f, Duration.Inf) }.toMap
-    }
+    lazy val fusedResults: Map[String, ValidationResult] =
+      if (wellFormedFusible.isEmpty) Map.empty
+      else fusedOutcome match {
+        case Right((total, failedByRule, _, _)) =>
+          wellFormedFusible.map { r =>
+            r.name -> ValidationResult.verdict(r, failedByRule(r.name), total, fusedMs,
+              Map("fused" -> "true"))
+          }.toMap
+        case Left(e) if Validator.sharedFailure(sc, e) =>
+          wellFormedFusible.map(r => r.name -> ValidationResult.failure(r, e, fusedMs)).toMap
+        case Left(_) =>
+          // blast-radius recovery: the SHARED job failed (e.g. one predicate
+          // raising at runtime under ANSI — statically undetectable), so each
+          // rule re-runs as a fused job of its own: the poisoned rule gets its
+          // real error, the healthy rules still get real verdicts — at the
+          // reference's per-rule cost, paid only on this failure path
+          wellFormedFusible.map(r => r.name -> SparkFuture(sc) {
+            sc.setJobDescription(s"$tableName fused-stats rerun")
+            executeSingle(df, r, tableName, None)
+          }).map { case (n, f) => n -> Await.result(f, Duration.Inf) }.toMap
+      }
     lazy val totalCount: Option[Long] = fusedOutcome.toOption.map(_._1)
 
     // The sections below are INDEPENDENT Spark jobs submitted CONCURRENTLY
@@ -176,8 +198,10 @@ class Validator(
     // assembled by rule name, so ordering semantics are unchanged; each
     // section catches its own errors into per-rule failure results.
     // the fused pass's partition totals — forcing this AWAITS the fused job
-    // (sections do it after their own Spark jobs have been submitted/run)
-    lazy val partTotals: Map[String, Long] = fusedOutcome.toOption.map(_._4).getOrElse(Map.empty)
+    // (sections do it after their own Spark jobs have been submitted/run);
+    // an unpartitioned frame has none and never forces it
+    lazy val partTotals: Map[String, Long] =
+      partitionExpr.flatMap(_ => fusedOutcome.toOption).map(_._4).getOrElse(Map.empty)
     // 2. all drift rules batched: one multi-histogram scan over df, grouped
     // by the partition expression when one is given, and one per distinct
     // baseline table — submitted now, since drift takes its totals from its
@@ -359,85 +383,86 @@ class Validator(
         executeSingle(df, r, tableName, totalCount)
       }).toMap
 
-    val (driftResults, driftVerdicts) = drift()
-    val (outlierResults, outlierVerdicts) = Await.result(outlierF, Duration.Inf)
-    val walked = walkFs.flatMap(f => Await.result(f, Duration.Inf))
-    val grouped = (diffFs ++ cardFs).map(f => Await.result(f, Duration.Inf))
-    // a grouped future's own result (its promoted verdict or its error) is
-    // always kept; every per-partition verdict is dropped when the fused
-    // pass yielded no partition totals (empty table or fused failure)
-    val keepGrouped = partTotals.nonEmpty
-    // a walk rule has one result per level it joined: a failure (the −1
-    // sentinel) at either level is the rule's result
-    val walkResults = walked.groupBy(_._1).map { case (n, outs) =>
-      n -> outs.flatMap(_._2).minBy(_.failed_count)
-    }
-    val specialResults = grouped.collect { case (n, Some(res), _) => n -> res }.toMap ++ walkResults
-    val specialVerdicts =
-      (if (keepGrouped) grouped.flatMap(_._3) ++ walked.flatMap(_._3) else Nil) ++ rowCountVerdicts
+    () => {
+      val (driftResults, driftVerdicts) = drift()
+      val (outlierResults, outlierVerdicts) = Await.result(outlierF, Duration.Inf)
+      val walked = walkFs.flatMap(f => Await.result(f, Duration.Inf))
+      val grouped = (diffFs ++ cardFs).map(f => Await.result(f, Duration.Inf))
+      // a grouped future's own result (its promoted verdict or its error) is
+      // always kept; every per-partition verdict is dropped when the fused
+      // pass yielded no partition totals (empty table or fused failure)
+      val keepGrouped = partTotals.nonEmpty
+      // a walk rule has one result per level it joined: a failure (the −1
+      // sentinel) at either level is the rule's result
+      val walkResults = walked.groupBy(_._1).map { case (n, outs) =>
+        n -> outs.flatMap(_._2).minBy(_.failed_count)
+      }
+      val specialResults = grouped.collect { case (n, Some(res), _) => n -> res }.toMap ++ walkResults
+      val specialVerdicts =
+        (if (keepGrouped) grouped.flatMap(_._3) ++ walked.flatMap(_._3) else Nil) ++ rowCountVerdicts
 
-    val results: Seq[ValidationResult] = rules.map { r =>
-      fusedResults.getOrElse(r.name,
-        driftResults.getOrElse(r.name,
-          outlierResults.getOrElse(r.name,
-            specialResults.getOrElse(r.name, Await.result(singleFs(r.name), Duration.Inf)))))
-    }
+      val results: Seq[ValidationResult] = rules.map { r =>
+        fusedResults.getOrElse(r.name,
+          driftResults.getOrElse(r.name,
+            outlierResults.getOrElse(r.name,
+              specialResults.getOrElse(r.name, Await.result(singleFs(r.name), Duration.Inf)))))
+      }
 
-    // opt-in violation EXAMPLES (`examples: N`, capped at 20 rows × 256
-    // chars/field): a rule that FAILED ITS VERDICT (not merely tolerated
-    // violations under its threshold) gets up to N offending rows rendered
-    // into its result metadata — the consumer sees concrete offenders
-    // without a trip to the quarantine table. `examples: 0` disables.
-    // Deterministic: the face is sorted over all its columns before the
-    // limit (TakeOrderedAndProject — bounded), so WHICH offenders appear is
-    // layout- and run-invariant like every other output here. Capture jobs
-    // overlap on the section pool. Cost note: capturing rows re-runs the
-    // family's ROW face — for a partition_covers_key uniqueness rule that
-    // is the table-wide shuffle the promoted verdict avoided, which is why
-    // this is opt-in per rule. Capture never fails the rule (the verdict
-    // already stands) — errors degrade to an examples_error note. Kept OUT
-    // of the reference-parity report JSON (CliSpec pins its keys);
-    // metadata is the library surface (the metrics sink stores metrics
-    // only, by design — the DURABLE row surface is the quarantine sink).
-    val exampleFs: Map[String, Future[ValidationResult => ValidationResult]] =
-      results.collect {
-        case res if !res.passed && res.failed_count > 0 &&
-            rules.exists(r => r.name == res.rule_name && r.param("examples").isDefined) =>
-          val r = rules.find(_.name == res.rule_name).get
-          res.rule_name -> SparkFuture[ValidationResult => ValidationResult](sc) {
-            try {
-              val n = r.param("examples").get.toInt
-              if (n <= 0) identity[ValidationResult] _
-              else {
-                val face = violations(df, r)
-                val rows = face
-                  .orderBy(face.columns.map(col): _*)
-                  .limit(math.min(n, 20)).collect()
-                val rendered = rows.map(row =>
-                  row.schema.fieldNames.zip(row.toSeq)
-                    .map { case (f, v) => s"$f=${String.valueOf(v).take(256)}" }
-                    .mkString(", ")).mkString(" | ")
-                // table-level verdicts (drift/custom_agg) have no row face —
-                // their empty row set attaches nothing rather than a "" note
-                if (rows.isEmpty) identity[ValidationResult] _
-                else (x: ValidationResult) =>
-                  x.copy(metadata = x.metadata + ("examples" -> rendered))
+      // opt-in violation EXAMPLES (`examples: N`, capped at 20 rows × 256
+      // chars/field): a rule that FAILED ITS VERDICT (not merely tolerated
+      // violations under its threshold) gets up to N offending rows rendered
+      // into its result metadata — the consumer sees concrete offenders
+      // without a trip to the quarantine table. `examples: 0` disables.
+      // Deterministic: the face is sorted over all its columns before the
+      // limit (TakeOrderedAndProject — bounded), so WHICH offenders appear is
+      // layout- and run-invariant like every other output here. Capture jobs
+      // overlap on the section pool. Cost note: capturing rows re-runs the
+      // family's ROW face — for a partition_covers_key uniqueness rule that
+      // is the table-wide shuffle the promoted verdict avoided, which is why
+      // this is opt-in per rule. Capture never fails the rule (the verdict
+      // already stands) — errors degrade to an examples_error note. Kept OUT
+      // of the reference-parity report JSON (CliSpec pins its keys);
+      // metadata is the library surface (the metrics sink stores metrics
+      // only, by design — the DURABLE row surface is the quarantine sink).
+      val exampleFs: Map[String, Future[ValidationResult => ValidationResult]] =
+        results.collect {
+          case res if !res.passed && res.failed_count > 0 &&
+              rules.exists(r => r.name == res.rule_name && r.param("examples").isDefined) =>
+            val r = rules.find(_.name == res.rule_name).get
+            res.rule_name -> SparkFuture[ValidationResult => ValidationResult](sc) {
+              try {
+                val n = r.param("examples").get.toInt
+                if (n <= 0) identity[ValidationResult] _
+                else {
+                  val face = violations(df, r)
+                  val rows = face
+                    .orderBy(face.columns.map(col): _*)
+                    .limit(math.min(n, 20)).collect()
+                  val rendered = rows.map(row =>
+                    row.schema.fieldNames.zip(row.toSeq)
+                      .map { case (f, v) => s"$f=${String.valueOf(v).take(256)}" }
+                      .mkString(", ")).mkString(" | ")
+                  // table-level verdicts (drift/custom_agg) have no row face —
+                  // their empty row set attaches nothing rather than a "" note
+                  if (rows.isEmpty) identity[ValidationResult] _
+                  else (x: ValidationResult) =>
+                    x.copy(metadata = x.metadata + ("examples" -> rendered))
+                }
+              } catch {
+                case e: Throwable => (x: ValidationResult) =>
+                  x.copy(metadata = x.metadata +
+                    ("examples_error" -> String.valueOf(e.getMessage)))
               }
-            } catch {
-              case e: Throwable => (x: ValidationResult) =>
-                x.copy(metadata = x.metadata +
-                  ("examples_error" -> String.valueOf(e.getMessage)))
             }
-          }
-      }.toMap
-    val withExamples = results.map { res =>
-      exampleFs.get(res.rule_name)
-        .map(f => Await.result(f, Duration.Inf)(res)).getOrElse(res)
-    }
+        }.toMap
+      val withExamples = results.map { res =>
+        exampleFs.get(res.rule_name)
+          .map(f => Await.result(f, Duration.Inf)(res)).getOrElse(res)
+      }
 
-    val summary = ValidationSummary.from(tableName, withExamples, (System.nanoTime() - t0) / 1e6)
-    (summary, fusedOutcome.toOption.map(_._3).getOrElse(Nil) ++ specialVerdicts ++
-      (if (keepGrouped) driftVerdicts else Nil) ++ outlierVerdicts)
+      (withExamples, partitionExpr.flatMap(_ => fusedOutcome.toOption).map(_._3).getOrElse(Nil) ++
+        specialVerdicts ++ (if (keepGrouped) driftVerdicts else Nil) ++ outlierVerdicts)
+    }
   }
 
   /** Per-partition verdicts from one (partition, rule) failure-count map +
@@ -1694,43 +1719,21 @@ class Validator(
         val t0 = System.nanoTime()
         def ms = (System.nanoTime() - t0) / 1e6
         val (absolute, sampled) = rules.partition(r => Validator.sampleExemptRule(r, key))
-        // the two groups are independent Spark job sets — overlap them (the
-        // absolute group often carries the expensive full-table diff/
-        // reconciliation jobs). NOT on sectionPool: executeRulesPartitioned
-        // awaits its own futures there, and a pool future awaiting pool
-        // futures can deadlock the fixed pool — the global EC carries this
-        // one blocking task instead.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        val absoluteF = SparkFuture(spark.sparkContext) {
-          if (absolute.isEmpty) (Nil: Seq[ValidationResult], Nil: Seq[PartitionVerdict])
-          else {
-            val (s, v) = executeRulesPartitioned(df, absolute, tableName, partExpr)
-            (s.results, v)
-          }
-        }(scala.concurrent.ExecutionContext.global)
-        // a misconfigured sample key (typo'd column) must degrade to the
-        // SAMPLED rules' failure results — the engine's per-rule error
-        // isolation — not abort the table (the filter analyzes eagerly).
-        // The whole sampled branch runs under Try so any NonFatal error
-        // there still lets absoluteF be awaited below (no orphaned
-        // full-table job set) before the error propagates; genuinely
-        // fatal throws (VM errors, interrupts) bypass Try, but those are
-        // the JVM-is-dying cases where the orphan is moot.
-        val sTry = scala.util.Try {
-          if (sampled.isEmpty) (Nil: Seq[ValidationResult], Nil: Seq[PartitionVerdict])
-          else scala.util.Try(
-              graft.operators.Curation.hashSamplePermille(df, key, permille)) match {
-            case scala.util.Failure(e) =>
-              (sampled.map(r => ValidationResult.failure(r, e, ms)),
-                Nil: Seq[PartitionVerdict])
-            case scala.util.Success(sdf) =>
-              val (s, v) = executeRulesPartitioned(sdf, sampled, tableName, partExpr)
-              (s.results, v)
-          }
+        // both groups are submitted before either is collected, so their
+        // jobs overlap (the absolute group often carries the expensive
+        // full-table diff/reconciliation jobs). A misconfigured sample key
+        // (typo'd column) must degrade to the SAMPLED rules' failure
+        // results — the engine's per-rule error isolation — not abort the
+        // table (the filter analyzes eagerly).
+        val absoluteC = submitFrame(df, absolute, tableName, partExpr)
+        val sampledC = scala.util.Try(graft.operators.Curation.hashSamplePermille(df, key, permille)) match {
+          case scala.util.Success(sdf) => submitFrame(sdf, sampled, tableName, partExpr)
+          case scala.util.Failure(e) =>
+            val failed = sampled.map(r => ValidationResult.failure(r, e, ms))
+            () => (failed, Nil)
         }
-        val (aRes, aVer) = Await.result(absoluteF, Duration.Inf)
-        val (sRes, sVer) = sTry.get
+        val (aRes, aVer) = absoluteC()
+        val (sRes, sVer) = sampledC()
         // failure results carry no sampled_by marker: nothing was sampled,
         // and the marker is the metrics consumer's sampled-tier key
         val annotated = sRes.map { r =>
@@ -1782,9 +1785,13 @@ class Validator(
     *     distinct count over a slice manufactures failures, the sampled
     *     tier's lesson.
     *
-    * The three frame sets are independent Spark job groups and run
-    * concurrently. Results keep rule order and carry an `incremental`
-    * marker naming the frame each rule saw (`delta` / `affected_groups` /
+    * Every frame's sections are submitted from the caller's thread — the
+    * delta and full frames first, then one affected-groups frame per key
+    * set — and collected once, so all frames' jobs overlap. An
+    * affected-groups frame holds only walk members and submits only its
+    * walk: no fused job, and nothing cached (each frame has one reader per
+    * walk). Results keep rule order and carry an `incremental` marker
+    * naming the frame each rule saw (`delta` / `affected_groups` /
     * `full`). Global verdicts only — per-partition verdicts belong to the
     * full-validation tier.
     *
@@ -1804,35 +1811,22 @@ class Validator(
     val (grp, rest) = rules.partition(r =>
       Validator.groupUnitFamilies.contains(r.ruleType))
     val (sliceSafe, absolute) = rest.partition(r => RulePlanner.fusible(r))
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.global
-    def runSet(rs: Seq[ValidationRule], df: => DataFrame, tag: String,
-        cache: Boolean = false): Future[Seq[ValidationResult]] = SparkFuture(spark.sparkContext) {
-      // frame construction (the semi-join's column resolution) sits outside
-      // executeRules' per-rule isolation — a misconfigured rule must still
-      // fail as ITS OWN error result, not abort the table, so fall back to
-      // the full frame and let the rule re-raise the real analysis error
-      // inside the isolated path
-      val (frame0, frameTag, doCache) = scala.util.Try(df).toOption match {
-        case Some(d) => (d, tag, cache)
-        case None    => (full, "full", false)
-      }
-      // the affected-groups frame is small (delta growth × group size) but
-      // each rule's aggregate and the shared total would otherwise re-run
-      // its full-table semi-join — materialize it once
-      val frame = if (doCache)
-        frame0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else frame0
-      try {
-        if (rs.isEmpty) Nil
-        else executeRules(frame, rs, tableName).results
-          .map(r => if (r.failed_count < 0) r
-            else r.copy(metadata = r.metadata + ("incremental" -> frameTag)))
-      } finally if (doCache) frame.unpersist(blocking = false)
-    }(global)
-    val deltaF = runSet(sliceSafe, delta, "delta")
-    val fullF = runSet(absolute, full, "full")
+    // every frame is submitted here, on the caller's thread, before any is
+    // collected. Frame construction (the semi-join's column resolution, the
+    // hook) sits outside the per-rule isolation — a misconfigured rule must
+    // still fail as ITS OWN error result, not abort the table, so a frame
+    // that does not build falls back to the full table and the rule raises
+    // its real analysis error there
+    def submit(rs: Seq[ValidationRule], frame: => DataFrame, tag: String): () => Seq[ValidationResult] = {
+      val (df, frameTag) = scala.util.Try(frame).toOption.fold((full, "full"))((_, tag))
+      val collect = submitFrame(df, rs, tableName, None)
+      () => collect()._1.map(r => if (r.failed_count < 0) r
+        else r.copy(metadata = r.metadata + ("incremental" -> frameTag)))
+    }
+    // the delta and full frames are submitted first, so their jobs run
+    // while the hook below reads the table side
+    val deltaC = submit(sliceSafe, delta, "delta")
+    val fullC = submit(absolute, full, "full")
     // one semi-join per distinct key set (rules on the same keys share it);
     // a rule whose key can't even be named (no columns) rides the full frame
     val byKeys = grp.groupBy(r =>
@@ -1840,7 +1834,7 @@ class Validator(
     // the hook's table side for key set A serves every key set B ⊇ A (a row
     // whose B-key is in the delta has its A-key there too), so the hook runs
     // once per MINIMAL key set; lazy, so a throwing hook fails inside each
-    // frame's fallback, and thread-safe for the concurrent frames
+    // frame's fallback
     val keySets = byKeys.collect { case (Some(ks), rs) => ks.toSet -> Validator.ruleKeys(rs.head) }.toMap
     val hooked = tableFrameForKeys.map(hook => keySets.collect {
       case (a, keys) if !keySets.keys.exists(b => b.size < a.size && b.subsetOf(a)) =>
@@ -1850,11 +1844,11 @@ class Validator(
       val ks = keys.map(_.toLowerCase).toSet
       hs.collectFirst { case (a, table) if a.subsetOf(ks) => table() }.get
     }
-    val grpFs = byKeys.map {
-        case (None, rs) => runSet(rs, full, "full")
+    val grpCs = byKeys.map {
+        case (None, rs) => submit(rs, full, "full")
         case (Some(_), rs) =>
           val keys = Validator.ruleKeys(rs.head)
-          def frame = { // by-name into runSet: resolution/hook errors must
+          def frame = { // by-name into submit: resolution/hook errors must
             // hit its fallback, not this map
             // storage-level file pruning first (when the caller provided
             // the hook), then prune the table side to the columns this
@@ -1863,7 +1857,7 @@ class Validator(
             // the wide text columns, so the scan feeding the join reads a
             // few narrow columns of a few files instead of every byte. Any
             // unresolvable name → no pruning, and the rule raises its real
-            // error inside executeRules
+            // error inside its section
             val table = tableFor(keys)
             val referenced = (keys ++ rs.flatMap(r =>
               Seq("index", "order_by", "value").flatMap(r.param) ++
@@ -1885,11 +1879,9 @@ class Validator(
               col(s"__incr_tbl.`$k`") <=> col(s"__incr_keys.`$k`")).reduce(_ && _)
             lhs.join(rhs, joinCond, "left_semi")
           }
-          runSet(rs, frame, "affected_groups", cache = true)
+          submit(rs, frame, "affected_groups")
       }
-    val results = (Await.result(deltaF, Duration.Inf) ++
-      Await.result(fullF, Duration.Inf) ++
-      grpFs.flatMap(f => Await.result(f, Duration.Inf)))
+    val results = (deltaC() ++ fullC() ++ grpCs.flatMap(_()))
       .map(r => r.rule_name -> r).toMap
     val summary = ValidationSummary.from(tableName,
       rules.map(r => results(r.name)), (System.nanoTime() - t0) / 1e6)
@@ -1977,7 +1969,8 @@ class Validator(
 
   /** One data file's verdict row — the stats tier's partition unit, keyed
     * by the manifest-relative file path; threshold semantics identical to
-    * [[partitionVerdicts]]. */
+    * the fused section's per-partition verdicts
+    * ([[executeRulesPartitioned]]). */
   private def fileVerdict(rule: ValidationRule, path: String,
       failed: Long, total: Long): PartitionVerdict = {
     val rate = if (total == 0) 1.0 else (total - failed).toDouble / total
@@ -2108,38 +2101,6 @@ class Validator(
       if (checkpoint.exists(_.isCompleted(t.name, suiteHash(t.name)))) None
       else Some(t.name -> validateTable(load(t.name), t.name))
     }.toMap
-
-  /** Per-partition verdicts for FUSIBLE rules only, as a lazy typed
-    * Dataset[PartitionVerdict] (one job when acted on). For the complete
-    * surface — fusible + uniqueness + referential, with global verdicts
-    * computed alongside — use [[executeRulesPartitioned]]; this entry point
-    * exists for callers that want a composable Dataset instead of collected
-    * verdicts. */
-  def partitionVerdicts(
-      df: DataFrame, rules: Seq[ValidationRule],
-      partitionExpr: org.apache.spark.sql.Column): org.apache.spark.sql.Dataset[PartitionVerdict] = {
-    import df.sparkSession.implicits._
-    val schema = df.schema
-    // same admission guard as executeRulesPartitioned: a rule referencing a
-    // missing column or carrying a non-row-level predicate must not poison
-    // this SHARED Dataset for every other rule
-    val fusible = rules.filter(r => RulePlanner.admissible(df, r))
-    val counters = fusible.zipWithIndex.map { case (r, i) =>
-      sum(when(RulePlanner.failCondition(schema, r), 1L).otherwise(0L)).as(s"f_$i")
-    }
-    val grouped = df.groupBy(Checks.partGroupCol(df, partitionExpr).as("partition"))
-      .agg(count(lit(1)).as("total"), counters: _*)
-    grouped.flatMap { row =>
-      val part = Checks.partKeyString(row.get(0))
-      val total = row.getLong(1)
-      fusible.zipWithIndex.map { case (r, i) =>
-        val failed = if (row.isNullAt(2 + i)) 0L else row.getLong(2 + i)
-        val rate = if (total == 0) 1.0 else (total - failed).toDouble / total
-        PartitionVerdict(part, r.name,
-          ValidationResult.passedOf(r.threshold, failed, rate), failed, total, rate)
-      }
-    }
-  }
 
   /** Data-cleaning mode (`filter_mode` in a table config — reference
     * `validator.py:133-162`): apply every enabled rule as a row FILTER and
@@ -2328,11 +2289,13 @@ object Validator {
         }))
 
   /** Dedicated pool for the fused-stats job. Sections on [[sectionPool]]
-    * BLOCK awaiting the fused future (after their own Spark jobs), so the
-    * fused job must never compete for those threads — a shared bounded pool
-    * could deadlock with every thread parked on the await. Cached (not
-    * fixed): concurrent executeRulesPartitioned calls (incremental frames,
-    * validateAllTables) each get a thread immediately. */
+    * BLOCK awaiting the fused future (after their own Spark jobs), and a
+    * frame without fusible rules submits its fused job from such a section
+    * on first demand, so the fused job must never compete for those
+    * threads — a shared bounded pool could deadlock with every thread
+    * parked on the await. Cached (not fixed): every frame a pass submits
+    * (the incremental tier's delta and full frames, the sampled tier's two
+    * rule groups) and every concurrent caller gets a thread immediately. */
   private[engine] lazy val fusedPool: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(
       java.util.concurrent.Executors.newCachedThreadPool(

@@ -572,6 +572,57 @@ class GroupWalkSpec extends SparkSpec {
     all(summary.results.map(_.failed_count)) shouldBe -1L
   }
 
+  test("a cancelled incremental pass reports the cancellation instead of re-running any rule") {
+    val df = spark.createDataFrame(turns.rdd, turns.schema).filter(udf { (s: String) =>
+      WalkGate.open.await(60, java.util.concurrent.TimeUnit.SECONDS); s != null
+    }.apply(col("sub")))
+    // walk rules on two key sets (one affected-groups frame each), a row
+    // rule (the delta frame) and a table size (the full frame)
+    val walkRules = suite(covers = false).filter(r => Set("u2", "seq", "mono", "grammar", "fd")(r.name))
+    val rules = walkRules ++ Seq(
+      ValidationRule("role_c", RuleType.Completeness, Seq("role"), threshold = Some(0.5)),
+      ValidationRule("size", RuleType.RowCount, Seq(), parameters = Map("min_rows" -> "1")))
+    val frameWalks = walkRules.groupBy(_.columns.toSet).values.toSeq.flatMap(rs =>
+      GroupWalk.walks(rs.flatMap(r => GroupWalk.member(df, r, _ => None).toOption)))
+    frameWalks.exists(_._2.size > 1) shouldBe true
+    val sc = spark.sparkContext
+    val walksStarted = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val allStarted = scala.concurrent.Promise[Unit]()
+    WalkGate.open = new java.util.concurrent.CountDownLatch(1)
+    @volatile var summary: ValidationSummary = null
+    val v = new Validator(spark, ValidationConfig(tables = Seq(TableConfig("tinc", rules))))
+    val jobs = jobsDuring(
+      onStart = j => if (j._1 == "tinc group-walk global") {
+        walksStarted.add(j._3)
+        if (walksStarted.size >= frameWalks.size) allStarted.trySuccess(())
+      },
+      body = {
+        val pass = new Thread(() => {
+          sc.setJobGroup("incremental-cancel", "cancelled pass")
+          summary = v.validateTableIncremental(df, df, "tinc")
+        })
+        pass.start()
+        // every scan waits at the gate until each frame's walk has started
+        // and the pass's group is cancelled
+        try {
+          scala.concurrent.Await.result(allStarted.future,
+            scala.concurrent.duration.Duration(60, "s"))
+          sc.cancelJobGroup("incremental-cancel")
+        } finally WalkGate.open.countDown()
+        pass.join()
+      })
+    jobs.map(_._1) should not contain "tinc fused-stats rerun"
+    // one SQL execution per walk: no member re-ran alone
+    jobs.filter(_._1 == "tinc group-walk global").map(_._3).distinct.size shouldBe frameWalks.size
+    summary.results.map(_.rule_name) shouldBe rules.map(_.name)
+    summary.results.foreach { r =>
+      withClue(s"${r.rule_name}: ${r.message}") {
+        (r.failed_count >= 0 || r.message.toLowerCase.contains("cancel")) shouldBe true
+      }
+    }
+    all(walkRules.map(r => summary.results.find(_.rule_name == r.name).get.failed_count)) shouldBe -1L
+  }
+
   test("a walk over too many partition buckets reports the guard instead of re-running") {
     val v = new Validator(spark, ValidationConfig())
     val df = spark.range(0, v.maxPartitionBuckets + 1L)

@@ -129,6 +129,64 @@ class IncrementalValidationSpec extends SparkSpec {
       Map("turn_key" -> 1L, "turn_seq" -> 0L)
   }
 
+  test("an incremental pass caches no block and runs no fused job over an affected-groups frame") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
+    // nightly_append's shape: three row rules (the delta frame), a table
+    // size (the full frame), and a uniqueness and a sequence rule on two
+    // key sets (one affected-groups frame each)
+    val v = new Validator(spark, cfg(
+      ValidationRule("role_complete", RuleType.Completeness, Seq("role"), threshold = Some(0.5)),
+      ValidationRule("conv_pattern", RuleType.Pattern, Seq("conv_id"), expression = Some("^[a-z]$")),
+      ValidationRule("turn_range", RuleType.Range, Seq("turn_idx"),
+        parameters = Map("min" -> "0", "max" -> "100")),
+      ValidationRule("turn_key", RuleType.Uniqueness, Seq("conv_id", "turn_idx")),
+      ValidationRule("turn_seq", RuleType.Sequence, Seq("conv_id"),
+        parameters = Map("index" -> "turn_idx", "start" -> "0")),
+      ValidationRule("size", RuleType.RowCount, Seq(), parameters = Map("min_rows" -> "5"))))
+    val cached = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val plans = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val marker = s"listener-marker-${System.nanoTime()}"
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+        val b = e.blockUpdatedInfo
+        if (b.blockId.isRDD && b.storageLevel.isValid) cached.add(b.blockId.name)
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          plans.put(x.executionId.toString, x.physicalPlanDescription)
+        case _ =>
+      }
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        def prop(k: String) = props.map(_.getProperty(k)).orNull
+        jobs.add((prop("spark.job.description"), prop("spark.sql.execution.id")))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val summary = try {
+      val s = v.validateTableIncremental(full, delta, "t")
+      sc.setJobDescription(marker)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!jobs.asScala.exists(_._1 == marker) && System.nanoTime() < deadline) Thread.sleep(50)
+      s
+    } finally sc.removeSparkListener(listener)
+    summary.results.map(r => r.rule_name -> r.metadata("incremental")) shouldBe Seq(
+      "role_complete" -> "delta", "conv_pattern" -> "delta", "turn_range" -> "delta",
+      "turn_key" -> "affected_groups", "turn_seq" -> "affected_groups", "size" -> "full")
+    // nothing is cached: each affected-groups frame has one reader, its walk
+    cached.asScala shouldBe empty
+    // two fused jobs — the delta frame's rules and the full frame's row
+    // total — and neither reads an affected-groups frame (a semi-join)
+    val fused = jobs.asScala.filter(_._1 == "t fused-stats").map(_._2).toSeq.distinct
+    fused.size shouldBe 2
+    fused.foreach(id => plans.get(id) should not include "LeftSemi")
+  }
+
   test("a misconfigured group rule errors as its own result, not the table") {
     val bad = ValidationRule("bad_seq", RuleType.Sequence, Seq("no_such_col"),
       parameters = Map("index" -> "turn_idx"))

@@ -399,24 +399,6 @@ class ValidatorSpec extends SparkSpec {
     r.total_count shouldBe 4
   }
 
-  test("per-partition verdicts: one verdict per (partition, fusible rule)") {
-    val turns = Transcripts.turns(spark, TranscriptConfig(numConvs = 200L))
-    val rules = Seq(
-      ValidationRule("text_c", RuleType.Completeness, Seq("text"), threshold = Some(0.9)),
-      ValidationRule("turn_r", RuleType.Range, Seq("turn_idx"),
-        parameters = Map("min" -> "0", "max" -> "100000"), threshold = Some(0.9)))
-    val v = new Validator(spark, ValidationConfig())
-    val verdicts = v.partitionVerdicts(turns, rules, pmod(xxhash64(col("conv_id")), lit(4)))
-      .collect()
-    verdicts.length shouldBe 8 // 4 partitions × 2 fusible rules
-    // each rule's partition totals partition the data
-    verdicts.filter(_.rule_name == "text_c").map(_.total_count).sum shouldBe turns.count()
-    // partition totals partition the data
-    verdicts.groupBy(_.partition).values.foreach { g =>
-      g.map(_.total_count).distinct.length shouldBe 1
-    }
-  }
-
   test("partition keys: raw-key grouping stringifies like cast-to-string; nulls and exotic types keep working") {
     val df = Seq((1L, Some("a"), Some(1.0)), (2L, None, Some(2.0)), (3L, Some("b"), Option.empty[Double]))
       .toDF("id", "grp", "v")
@@ -435,6 +417,20 @@ class ValidatorSpec extends SparkSpec {
       (java.sql.Timestamp.valueOf("2024-01-02 00:00:00"), Option.empty[Double])).toDF("ts", "v")
     val (_, tv) = v.executeRulesPartitioned(td, Seq(rule), "t", Some(col("ts")))
     tv.map(_.partition).toSet shouldBe Set("2024-01-01 00:00:00", "2024-01-02 00:00:00")
+    // a bucketing expression over two fusible rules: one verdict per
+    // (partition, rule), and the partition totals partition the data
+    val turns = Transcripts.turns(spark, TranscriptConfig(numConvs = 200L))
+    val fusible = Seq(
+      ValidationRule("text_c", RuleType.Completeness, Seq("text"), threshold = Some(0.9)),
+      ValidationRule("turn_r", RuleType.Range, Seq("turn_idx"),
+        parameters = Map("min" -> "0", "max" -> "100000"), threshold = Some(0.9)))
+    val (_, bv) = v.executeRulesPartitioned(turns, fusible, "t",
+      Some(pmod(xxhash64(col("conv_id")), lit(4))))
+    bv.length shouldBe 8 // 4 partitions × 2 fusible rules
+    bv.filter(_.rule_name == "text_c").map(_.total_count).sum shouldBe turns.count()
+    bv.groupBy(_.partition).values.foreach { g =>
+      g.map(_.total_count).distinct.length shouldBe 1
+    }
   }
 
   test("outlier rule: flags known anomalies, NULLs not failed, partition sums match global") {
@@ -1296,8 +1292,16 @@ class ValidatorSpec extends SparkSpec {
     val badKey = ValidationConfig(tables = Seq(TableConfig("t",
       rules = cfg.tables.head.rules,
       sampleBy = Some("uidd"), samplePermille = 400)))
-    val bk = new Validator(spark, badKey).validateTable(df, "t")
-      .results.map(r => r.rule_name -> r).toMap
+    var bkSummary: ValidationSummary = null
+    var returnedAt = Long.MaxValue
+    val bkJobs = jobSpans {
+      bkSummary = new Validator(spark, badKey).validateTable(df, "t")
+      returnedAt = System.currentTimeMillis()
+    }.filterNot(j => String.valueOf(j._1).startsWith("listener-marker"))
+    // every job the pass started has ended when validateTable returns
+    bkJobs should not be empty
+    all(bkJobs.map(_._3)) should be <= returnedAt
+    val bk = bkSummary.results.map(r => r.rule_name -> r).toMap
     bk("v_range").failed_count shouldBe -1
     // a failure result carries NO sampled-tier marker: nothing was sampled
     bk("v_range").metadata.get("sampled_by") shouldBe None
