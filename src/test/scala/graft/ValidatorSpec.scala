@@ -399,6 +399,24 @@ class ValidatorSpec extends SparkSpec {
     r.total_count shouldBe 4
   }
 
+  test("per-partition verdicts: one verdict per (partition, fusible rule)") {
+    val turns = Transcripts.turns(spark, TranscriptConfig(numConvs = 200L))
+    val rules = Seq(
+      ValidationRule("text_c", RuleType.Completeness, Seq("text"), threshold = Some(0.9)),
+      ValidationRule("turn_r", RuleType.Range, Seq("turn_idx"),
+        parameters = Map("min" -> "0", "max" -> "100000"), threshold = Some(0.9)))
+    val v = new Validator(spark, ValidationConfig())
+    val (_, verdicts) = v.executeRulesPartitioned(turns, rules, "t",
+      Some(pmod(xxhash64(col("conv_id")), lit(4))))
+    verdicts.length shouldBe 8 // 4 partitions × 2 fusible rules
+    // each rule's partition totals partition the data
+    verdicts.filter(_.rule_name == "text_c").map(_.total_count).sum shouldBe turns.count()
+    // every rule sees the same rows in a partition
+    verdicts.groupBy(_.partition).values.foreach { g =>
+      g.map(_.total_count).distinct.length shouldBe 1
+    }
+  }
+
   test("partition keys: raw-key grouping stringifies like cast-to-string; nulls and exotic types keep working") {
     val df = Seq((1L, Some("a"), Some(1.0)), (2L, None, Some(2.0)), (3L, Some("b"), Option.empty[Double]))
       .toDF("id", "grp", "v")
@@ -417,20 +435,6 @@ class ValidatorSpec extends SparkSpec {
       (java.sql.Timestamp.valueOf("2024-01-02 00:00:00"), Option.empty[Double])).toDF("ts", "v")
     val (_, tv) = v.executeRulesPartitioned(td, Seq(rule), "t", Some(col("ts")))
     tv.map(_.partition).toSet shouldBe Set("2024-01-01 00:00:00", "2024-01-02 00:00:00")
-    // a bucketing expression over two fusible rules: one verdict per
-    // (partition, rule), and the partition totals partition the data
-    val turns = Transcripts.turns(spark, TranscriptConfig(numConvs = 200L))
-    val fusible = Seq(
-      ValidationRule("text_c", RuleType.Completeness, Seq("text"), threshold = Some(0.9)),
-      ValidationRule("turn_r", RuleType.Range, Seq("turn_idx"),
-        parameters = Map("min" -> "0", "max" -> "100000"), threshold = Some(0.9)))
-    val (_, bv) = v.executeRulesPartitioned(turns, fusible, "t",
-      Some(pmod(xxhash64(col("conv_id")), lit(4))))
-    bv.length shouldBe 8 // 4 partitions × 2 fusible rules
-    bv.filter(_.rule_name == "text_c").map(_.total_count).sum shouldBe turns.count()
-    bv.groupBy(_.partition).values.foreach { g =>
-      g.map(_.total_count).distinct.length shouldBe 1
-    }
   }
 
   test("outlier rule: flags known anomalies, NULLs not failed, partition sums match global") {
